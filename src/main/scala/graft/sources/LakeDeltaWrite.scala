@@ -226,11 +226,7 @@ final class LakeDeltaDataWriter(root: String,
   override def write(row: InternalRow): Unit = insert(row)
 
   private def ack(w: LakeDataWriter): Seq[LakeStaged] =
-    w.commit() match {
-      case m: LakeStaged => Seq(m)
-      case s: LakeStagedSet => s.files
-      case _ => Seq.empty
-    }
+    LakeCommit.stagedOf(w.commit())
 
   override def commit(): WriterCommitMessage =
     LakeDeltaStaged(ack(inner),

@@ -9,8 +9,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{
+  BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.write.{
   BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo,
   PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder,
@@ -245,20 +249,25 @@ object LakeWrite {
         conf: Configuration): WriteSupport[InternalRow] = support
   }
 
+  /** The writer-tuning keys a write may carry in its conf (the
+    * `commit` verb's `writeOptions`): row-group and page size, which
+    * set the connector's split granularity.
+    */
+  private[sources] val TuningKeys: Set[String] =
+    Set("parquet.block.size", "parquet.page.size")
+
   /** Spark's own `InternalRow` → parquet encoder
     * ([[ParquetWriteSupport]], the exact one `df.write.parquet` runs)
     * behind parquet-mr's writer, streaming to `path` — the ONE writer
-    * construction every lake write path shares (the DSv2 task writers
-    * and the API verbs' write job). LocalOutputFile = pure NIO: no
-    * Hadoop ChecksumFileSystem, so no .crc sidecars to orphan in
-    * staging (the protocol's single-filesystem assumption).
-    * `blockSize`/`pageSize` carry the caller's `parquet.block.size` /
-    * `parquet.page.size` writer tuning (row-group granularity for the
-    * connector's splits).
+    * construction, opened only by [[LakeDataWriter]], which every lake
+    * write path (DSv2 tasks and the Scala verbs) runs. LocalOutputFile
+    * = pure NIO: no Hadoop ChecksumFileSystem, so no .crc sidecars to
+    * orphan in staging (the protocol's single-filesystem assumption).
+    * `parquet.block.size` / `parquet.page.size` in `confKVs` tune the
+    * row-group and page size.
     */
   private[sources] def openParquet(path: java.nio.file.Path,
-      confKVs: Map[String, String], blockSize: Option[Long] = None,
-      pageSize: Option[Int] = None): ParquetWriter[InternalRow] = {
+      confKVs: Map[String, String]): ParquetWriter[InternalRow] = {
     val conf = new Configuration()
     confKVs.foreach { case (k, v) => conf.set(k, v) }
     val b = new SupportBuilder(
@@ -266,8 +275,9 @@ object LakeWrite {
       new ParquetWriteSupport)
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
-    blockSize.foreach(n => b.withRowGroupSize(n): Unit)
-    pageSize.foreach(n => b.withPageSize(n): Unit)
+    confKVs.get("parquet.block.size").foreach(n =>
+      b.withRowGroupSize(n.toLong): Unit)
+    confKVs.get("parquet.page.size").foreach(n => b.withPageSize(n.toInt): Unit)
     b.build()
   }
 
@@ -347,14 +357,15 @@ final case class LakeStaged(name: String, rows: Long,
       * into the commit's new high-water.
       */
     idMaxUnit: Long = -1L,
-    /** Per-file stats accumulated WHILE WRITING (optimization r15,
-      * guide §1.2 — remove the write-then-re-read pass): when every
-      * acknowledged file carries a [[SegStats]] whose spec matches
-      * the publish-time resolution, the driver builds the manifest
-      * entries directly and the [[SnapshotLake.statsFor]] read-back
-      * job is skipped. `None` (disabled column shapes, older
-      * messages) falls back to the read-back pass — same values
-      * either way, certified by TaskSideStatsSpec.
+    /** Per-file stats accumulated WHILE WRITING by the task's
+      * [[LakeDataWriter]] — on the DSv2 paths and the Scala verbs'
+      * [[LakeCommit.writeRouted]] alike: when every acknowledged file
+      * carries a [[SegStats]] whose spec matches the publish-time
+      * resolution, the driver builds the manifest entries directly
+      * and the [[SnapshotLake.statsFor]] read-back job is skipped.
+      * `None` (disabled column shapes, older messages) falls back to
+      * the read-back pass — same values either way, certified by
+      * TaskSideStatsSpec.
       */
     stats: Option[SegStats] = None,
     /** On-disk byte size, stat(2)'d by the TASK at segment close —
@@ -585,6 +596,14 @@ private[sources] object LakeCommit {
   def discard(root: String, m: LakeStaged): Unit =
     Files.deleteIfExists(Paths.get(LakeWrite.stagingDir(root), m.name)): Unit
 
+  /** The staged files a task's commit message acknowledges. */
+  def stagedOf(m: WriterCommitMessage): Seq[LakeStaged] = m match {
+    case s: LakeStaged => Seq(s)
+    case set: LakeStagedSet => set.files
+    case r: LakeReplaceStaged => Seq(r.staged)
+    case _ => Seq.empty
+  }
+
   /** Build the manifest entries from TASK-SIDE stats when every live
     * staged file carries a [[SegStats]] accumulated under exactly the
     * publish-time stat envelope (specKey match) — skipping the
@@ -613,6 +632,112 @@ private[sources] object LakeCommit {
           Some(Files.size(Paths.get(root, rel)))),
         sum = st.su, cstats = st.cstats)
     }.sortBy(_.name))
+
+  /** Land acknowledged staged files in a fresh batch dir — each moved
+    * (ATOMIC_MOVE) to its batch-relative target name — and build their
+    * manifest entries: task-side stats when every file carries them
+    * ([[taskStatFiles]]), else the read-back pass. The one staged →
+    * batch move of every lake write; each entry comes back (sorted by
+    * name) beside the message that staged it.
+    */
+  private[sources] def land(root: String, live: Seq[(LakeStaged, String)],
+      spec: StatsSpec): Seq[(SnapshotLake.FileStat, LakeStaged)] =
+    if (live.isEmpty) Seq.empty
+    else {
+      val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
+      live.foreach { case (m, to) =>
+        val dest = Paths.get(root, batch, to)
+        Files.createDirectories(dest.getParent)
+        Files.move(Paths.get(LakeWrite.stagingDir(root), m.name), dest,
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+      val byName = live.map { case (m, to) => s"$batch/$to" -> m }.toMap
+      taskStatFiles(root, batch,
+          live.map { case (m, to) => m.copy(name = to) }, spec)
+        .getOrElse(SnapshotLake.statsFor(SparkSession.active, root, batch,
+          spec.statCol, spec.bloomCol, spec.bloomBytes, spec.statCol2))
+        .map(f => f -> byName(f.name))
+    }
+
+  /** Tag a landed file with the partition value(s) its writer declared. */
+  private def tagPart(f: SnapshotLake.FileStat, m: LakeStaged,
+      tagName: String, tagName2: Option[String]): SnapshotLake.FileStat = {
+    val f1 = m.partVal.fold(f)(v => f.copy(part = Some(tagName -> v)))
+    (for { tn2 <- tagName2; v2 <- m.partVal2 }
+      yield f1.copy(part2 = Some(tn2 -> v2))).getOrElse(f1)
+  }
+
+  /** Partition-directory escaping, Spark/Hive's `escapePathName`
+    * contract: ASCII control chars, DEL, and the reserved set below
+    * become `%XX`; everything else (including space) passes through.
+    * The empty string takes Hive's default-partition name (an empty
+    * `k=` dir is not a partition path).
+    */
+  private[sources] def escapeDirValue(v: String): String = {
+    val reserved = "\"#%'*/:=?\\{[]^"
+    if (v.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    else if (v.forall(c =>
+        c >= ' ' && c != '\u007f' && reserved.indexOf(c) < 0))
+      v // common case: no escaping, no rebuild
+    else {
+      val sb = new StringBuilder(v.length + 8)
+      v.foreach { c =>
+        if (c < ' ' || c == '\u007f' || reserved.indexOf(c) >= 0)
+          sb.append(f"%%${c.toInt}%02X")
+        else sb.append(c)
+      }
+      sb.toString
+    }
+  }
+
+  /** The Scala verbs' write job: one [[LakeDataWriter]] per task, so
+    * the verbs stage, name, stat and move files exactly as the DSv2
+    * writes do. With a `bucket` routing column the input is clustered
+    * by it and sorted by it, then by `order` (the within-file row
+    * order), so each task's single open writer rolls to a new file on
+    * every value change. The value — cast to string in the plan, null
+    * as Hive's default-partition name — stays out of the file and
+    * names its `__bucket=<escaped>/` dir. Files land as
+    * `part-<partition%05d>-<uuid8>.parquet`: sorted names follow the
+    * partition order, which drives implicit row-id bases. Returns each
+    * file's entry beside its raw routing value.
+    */
+  private[sources] def writeRouted(root: String, df: DataFrame,
+      spec: StatsSpec, bucket: Option[Column] = None,
+      order: Seq[Column] = Nil, writeOptions: Map[String, String] = Map.empty)
+      : Seq[(SnapshotLake.FileStat, Option[String])] = {
+    import org.apache.spark.sql.functions.col
+    val b = "__bucket"
+    val in = bucket.fold(df)(e => df.withColumn(b, e).repartition(col(b))
+      .sortWithinPartitions(col(b) +: order: _*)
+      .withColumn(b, col(b).cast("string")))
+    val fields = in.schema.fields
+    val bIdx = bucket.map(_ => in.schema.fieldIndex(b))
+    val keep = fields.indices.filterNot(bIdx.contains)
+    val confKVs = LakeWrite.writeConf(StructType(keep.map(fields(_)))) ++
+      writeOptions
+    val nullName = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    Files.createDirectories(Paths.get(LakeWrite.stagingDir(root)))
+    val segs = in.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val w = new LakeDataWriter(root, confKVs, pid,
+          TaskContext.get().taskAttemptId(), statsSpec = Some(spec))
+        val proj = UnsafeProjection.create(keep.map(i =>
+          BoundReference(i, fields(i).dataType, fields(i).nullable)))
+        try {
+          it.foreach(r => w.writeTagged(bIdx.map(i =>
+            if (r.isNullAt(i)) nullName else r.getUTF8String(i).toString),
+            None, proj(r)))
+          stagedOf(w.commit()).iterator.map(pid -> _)
+        } catch { case t: Throwable => w.abort(); throw t }
+      }
+    }.collect().toSeq
+    land(root, segs.map { case (pid, m) =>
+      val file = f"part-$pid%05d-${UUID.randomUUID().toString.take(8)}.parquet"
+      m -> m.partVal.fold(file)(v => s"$b=${escapeDirValue(v)}/$file")
+    }, spec).map { case (f, m) => f -> m.partVal }
+  }
 
   /** The stat envelope the batch-append/streaming publish resolves —
     * factory-time mirror of [[publish]]'s own resolution, so the
@@ -695,11 +820,7 @@ private[sources] object LakeCommit {
       // publish folds the tasks' consumed maxima into the chain's
       // new high-water, CAS-guarded in commitFiles
       idBase: Option[Long] = None): Unit = {
-    val staged = messages.toSeq.flatMap {
-      case m: LakeStaged => Seq(m)
-      case s: LakeStagedSet => s.files
-      case _ => Seq.empty
-    }
+    val staged = messages.toSeq.flatMap(stagedOf)
     val idReserve: Option[(Long, Long)] = idBase.flatMap { base =>
       val mx = messages.iterator.map {
         case m: LakeStaged => m.idMaxUnit
@@ -735,39 +856,21 @@ private[sources] object LakeCommit {
           bloomCol, statCol2, txn, schemaJson): Unit
       return
     }
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-    Files.createDirectories(Paths.get(root, batch))
-    live.foreach { m =>
-      Files.move(
-        Paths.get(LakeWrite.stagingDir(root), m.name),
-        Paths.get(root, batch, m.name),
-        StandardCopyOption.ATOMIC_MOVE)
-    }
-    val files = LakeCommit.taskStatFiles(root, batch, live,
-      StatsSpec(statCol, bloomCol, bloomBytes, statCol2)).getOrElse(
-      SnapshotLake.statsFor(SparkSession.active, root, batch,
-        statCol, bloomCol, bloomBytes, statCol2))
+    val files = land(root, live.map(m => m -> m.name),
+      StatsSpec(statCol, bloomCol, bloomBytes, statCol2))
     // partitioned write: each staged file declared its single value —
     // carry it into the manifest tag the prune/SPJ machinery reads.
     // Bucketed tables tag under `bucketN(c)` (the value is a bucket
     // id, never a column value — the tag name keeps them apart).
     val tagged = opts.get("partcol") match {
-      case None => files
+      case None => files.map(_._1)
       case Some(pc) =>
         val tagName = tagNameFor(opts, pc, "partbuckets", "parttrunc")
         // composed spec: the second level tags under p2= with its
         // own (identity, bucket, or truncate) tag name
         val tagName2 = opts.get("partcol2").map(pc2 =>
           tagNameFor(opts, pc2, "partbuckets2", "parttrunc2"))
-        val valOf = live.map(m => m.name -> m.partVal).toMap
-        val val2Of = live.map(m => m.name -> m.partVal2).toMap
-        files.map { f =>
-          val base = f.name.substring(f.name.lastIndexOf('/') + 1)
-          val f1 = valOf.get(base).flatten.fold(f)(v =>
-            f.copy(part = Some(tagName -> v)))
-          (for { tn2 <- tagName2; v2 <- val2Of.get(base).flatten }
-            yield f1.copy(part2 = Some(tn2 -> v2))).getOrElse(f1)
-        }
+        files.map { case (f, m) => tagPart(f, m, tagName, tagName2) }
     }
     // sorted layout: stamped only when the CALLER proved the sort was
     // planned (sortStamp) — see the parameter note. Stamps carry the
@@ -796,11 +899,7 @@ private[sources] object LakeCommit {
       messages: Array[WriterCommitMessage],
       schemaJson: Option[String],
       sortStamp: Option[String] = None): Unit = {
-    val staged = messages.toSeq.flatMap {
-      case m: LakeStaged => Seq(m)
-      case s: LakeStagedSet => s.files
-      case _ => Seq.empty
-    }
+    val staged = messages.toSeq.flatMap(stagedOf)
     val (live, empty) = staged.partition(_.rows > 0)
     empty.foreach(discard(root, _))
     val outside = live.filter(m => !m.partVal.exists(values))
@@ -818,40 +917,18 @@ private[sources] object LakeCommit {
     val bloomCol = opts.get("bloomcol").orElse(head.bloomCol)
     val bloomBytes = opts.get("bloombytes").map(_.toInt).getOrElse(1024)
     val statCol2 = opts.get("statcol2").orElse(head.statCol2)
-    val newFiles =
-      if (live.isEmpty) Seq.empty[SnapshotLake.FileStat]
-      else {
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-        Files.createDirectories(Paths.get(root, batch))
-        live.foreach { m =>
-          Files.move(
-            Paths.get(LakeWrite.stagingDir(root), m.name),
-            Paths.get(root, batch, m.name),
-            StandardCopyOption.ATOMIC_MOVE)
-        }
-        val stats = LakeCommit.taskStatFiles(root, batch, live,
-          StatsSpec(statCol, bloomCol, bloomBytes, statCol2)).getOrElse(
-          SnapshotLake.statsFor(SparkSession.active, root, batch,
-            statCol, bloomCol, bloomBytes, statCol2))
-        val valOf = live.map(m => m.name -> m.partVal).toMap
-        val val2Of = live.map(m => m.name -> m.partVal2).toMap
-        val tagName2 = opts.get("partcol2").map(pc2 =>
-          tagNameFor(opts, pc2, "partbuckets2", "parttrunc2"))
-        stats.map { f =>
-          val base = f.name.substring(f.name.lastIndexOf('/') + 1)
-          val f1 = valOf.get(base).flatten
-            .fold(f)(v => f.copy(part = Some(colName -> v)))
-          (for { tn2 <- tagName2; v2 <- val2Of.get(base).flatten }
-            yield f1.copy(part2 = Some(tn2 -> v2))).getOrElse(f1)
-        }
-          // partition replace runs the same planned-sort batch write,
-          // so its replacement files keep the sorted-layout stamp —
-          // without this the whole-table ordering claim silently dies
-          // on the first INSERT OVERWRITE PARTITION. Physical name,
-          // same contract as [[publish]].
-          .map(f => sortStamp.fold(f)(sc => f.copy(sorted =
-            Some(physSortStamp(sc, head.schema, schemaJson)))))
-      }
+    val tagName2 = opts.get("partcol2").map(pc2 =>
+      tagNameFor(opts, pc2, "partbuckets2", "parttrunc2"))
+    val newFiles = land(root, live.map(m => m -> m.name),
+        StatsSpec(statCol, bloomCol, bloomBytes, statCol2))
+      .map { case (f, m) => tagPart(f, m, colName, tagName2) }
+      // partition replace runs the same planned-sort batch write,
+      // so its replacement files keep the sorted-layout stamp —
+      // without this the whole-table ordering claim silently dies
+      // on the first INSERT OVERWRITE PARTITION. Physical name,
+      // same contract as [[publish]].
+      .map(f => sortStamp.fold(f)(sc => f.copy(sorted =
+        Some(physSortStamp(sc, head.schema, schemaJson)))))
     SnapshotLake.commitReplaceFiles(root, replaced, newFiles, "overwrite",
       statCol, bloomCol, statCol2, schemaJson): Unit
   }
@@ -932,10 +1009,7 @@ final class LakeReplaceBatchWrite(root: String, schema: StructType,
       case m: LakeReplaceStaged if m.ridNulls == 0 && m.staged.rows > 0 =>
         m.staged.name
     }.toSet
-    val staged = messages.collect {
-      case m: LakeStaged => m
-      case m: LakeReplaceStaged => m.staged
-    }
+    val staged = messages.toSeq.flatMap(LakeCommit.stagedOf)
     val (live, empty) = staged.partition(_.rows > 0)
     empty.foreach(LakeCommit.discard(root, _))
     val replaced = scanOf().fold(Seq.empty[String])(
@@ -951,26 +1025,9 @@ final class LakeReplaceBatchWrite(root: String, schema: StructType,
     val bloomCol = opts.get("bloomcol").orElse(head.flatMap(_.bloomCol))
     val bloomBytes = opts.get("bloombytes").map(_.toInt).getOrElse(1024)
     val statCol2 = opts.get("statcol2").orElse(head.flatMap(_.statCol2))
-    val newFiles =
-      if (live.isEmpty) Seq.empty[SnapshotLake.FileStat]
-      else {
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-        Files.createDirectories(Paths.get(root, batch))
-        live.foreach { m =>
-          Files.move(
-            Paths.get(LakeWrite.stagingDir(root), m.name),
-            Paths.get(root, batch, m.name),
-            StandardCopyOption.ATOMIC_MOVE)
-        }
-        LakeCommit.taskStatFiles(root, batch, live,
-          StatsSpec(statCol, bloomCol, bloomBytes, statCol2)).getOrElse(
-          SnapshotLake.statsFor(SparkSession.active, root, batch,
-            statCol, bloomCol, bloomBytes, statCol2))
-          .map { f =>
-            val base = f.name.substring(f.name.lastIndexOf('/') + 1)
-            if (matNames(base)) f.copy(ridMat = true) else f
-          }
-      }
+    val newFiles = LakeCommit.land(root, live.map(m => m -> m.name),
+        StatsSpec(statCol, bloomCol, bloomBytes, statCol2))
+      .map { case (f, m) => if (matNames(m.name)) f.copy(ridMat = true) else f }
     val v = SnapshotLake.commitReplaceFiles(root, replaced, newFiles, op,
       statCol, bloomCol, statCol2, Some(schema.json))
     // change-feed tables materialize the CDC sidecar for every CoW
@@ -981,11 +1038,7 @@ final class LakeReplaceBatchWrite(root: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: LakeStaged => LakeCommit.discard(root, m)
-      case r: LakeReplaceStaged => LakeCommit.discard(root, r.staged)
-      case s: LakeStagedSet => s.files.foreach(LakeCommit.discard(root, _))
-      case _ => }
+    messages.flatMap(LakeCommit.stagedOf).foreach(LakeCommit.discard(root, _))
 }
 
 final class LakeReplaceRidWriterFactory(root: String,
@@ -1074,10 +1127,7 @@ final class LakeBatchWrite(root: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: LakeStaged => LakeCommit.discard(root, m)
-      case s: LakeStagedSet => s.files.foreach(LakeCommit.discard(root, _))
-      case _ => }
+    messages.flatMap(LakeCommit.stagedOf).foreach(LakeCommit.discard(root, _))
 }
 
 /** The STREAMING sink face of the same commit machinery —
@@ -1119,10 +1169,7 @@ final class LakeStreamingWrite(root: String, schema: StructType,
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: LakeStaged => LakeCommit.discard(root, m)
-      case s: LakeStagedSet => s.files.foreach(LakeCommit.discard(root, _))
-      case _ => }
+    messages.flatMap(LakeCommit.stagedOf).foreach(LakeCommit.discard(root, _))
 }
 
 final class LakeWriterFactory(root: String,
@@ -1136,10 +1183,12 @@ final class LakeWriterFactory(root: String,
       identity, statsSpec)
 }
 
-/** Task-side parquet writer: Spark's `ParquetWriteSupport` (the
-  * engine's own InternalRow→parquet encoder, vectorized-reader
-  * compatible) behind parquet-mr's writer, streaming to a staged
-  * file invisible until the driver's commit names it.
+/** The lake's one task-side parquet writer — behind the DSv2 write
+  * factories and the Scala verbs' [[LakeCommit.writeRouted]]: Spark's
+  * `ParquetWriteSupport` (the engine's own InternalRow→parquet
+  * encoder, vectorized-reader compatible) behind parquet-mr's writer,
+  * streaming to a staged file invisible until the driver's commit
+  * names it.
   */
 final class LakeDataWriter(root: String, confKVs: Map[String, String],
     partitionId: Int, taskId: Long,
@@ -1278,8 +1327,15 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
 
   override def write(row0: InternalRow): Unit = {
     val row = fillIdentity(row0)
-    val v = partValOf(row)
-    val v2 = partVal2Of(row)
+    writeTagged(partValOf(row), partVal2Of(row), row)
+  }
+
+  /** Write `row` into the file for partition value(s) `(v, v2)`: the
+    * one open segment rolls whenever either value changes, so input
+    * clustered and sorted by them keeps exactly one writer open.
+    */
+  def writeTagged(v: Option[String], v2: Option[String],
+      row: InternalRow): Unit = {
     // roll on EITHER level changing — composed-spec files stay
     // single-valued in both dimensions
     if (writer == null) { curVal = v; curVal2 = v2; openSeg() }
@@ -1296,7 +1352,7 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
     // the high-water this task consumed to, EXCLUSIVE (-1: nothing
     // generated — an all-explicit or identity-free write)
     val idMax = if (idLocal > 0) idUnitBase + idLocal else -1L
-    if (partSpec.isEmpty)
+    if (partSpec.isEmpty && finished.forall(_.partVal.isEmpty))
       finished.headOption.map(_.copy(idMaxUnit = idMax))
         .getOrElse(LakeStaged(
           // an empty unpartitioned task still acknowledges a zero-row

@@ -1364,16 +1364,23 @@ object SnapshotLake {
     * two racing writers with the same (appId, batchId) can never
     * both land: the loser's rebase re-reads the chain and sees the
     * winner's txn.
+    *
+    * `writeOptions` tunes the parquet writer: `parquet.block.size`
+    * (row-group granularity for the connector's splits) and
+    * `parquet.page.size`; any other key is refused before staging.
     */
   def commit(s: SparkSession, root: String, df: DataFrame, statCol: String,
       overwrite: Boolean = false, bloomCol: Option[String] = None,
       bloomBytes: Int = 1024, statCol2: Option[String] = None,
       txn: Option[(String, Long)] = None,
       writeOptions: Map[String, String] = Map.empty): Int = {
+    writeOptions.keys.find(k => !LakeWrite.TuningKeys(k)).foreach { k =>
+      throw new IllegalArgumentException(s"unsupported write option " +
+        s"'$k' (supported: ${LakeWrite.TuningKeys.toSeq.sorted.mkString(", ")})")
+    }
     txn.collect { case (a, b) if lastTxn(root, a) >= b =>
       return headVersion(root) // replay detected before staging files
     }
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
     // appends materialize PHYSICAL column names (column mapping); the
     // recorded schema below stays logical
     val chainSnap =
@@ -1389,13 +1396,11 @@ object SnapshotLake {
     // fast, user-facing copy of the same check.
     chainSchema.foreach(ps => evolveSchema(ps, df.schema,
       chainSnap.map(_.retired).getOrElse(Set.empty)): Unit)
-    // writeOptions = parquet writer tuning (e.g. parquet.block.size
-    // to shape row-group granularity for the connector's splits).
-    // One write job with task-side stats (optimization r16): the
-    // write-then-re-read statsFor pass is gone from the commit verb.
-    val newFiles = LakeApiWrite.writeBatchWithStats(s, root, batch,
-      ColMap.toPhysical(df, chainSchema), statCol, bloomCol, bloomBytes,
-      statCol2, bucketCol = None, writeOptions = writeOptions)
+    // one write job with task-side stats: no write-then-re-read pass
+    val newFiles = LakeCommit.writeRouted(root,
+      ColMap.toPhysical(df, chainSchema),
+      StatsSpec(statCol, bloomCol, bloomBytes, statCol2),
+      writeOptions = writeOptions).map(_._1)
     commitFiles(root, newFiles, statCol, overwrite, bloomCol, statCol2,
       txn, Some(df.schema.json))
   }
@@ -1486,6 +1491,32 @@ object SnapshotLake {
       .withColumn("__bucket", coalesce(col("__b"), lit(default)))
       .drop("__sfx", "__b", "__src")
   }
+
+  /** Write a rewrite routed back one output file per group of source
+    * files ([[routeToSourceBuckets]]: group i to bucket `f<i>`, rows
+    * from no group to `default`) under `base`'s stat envelope (bloom
+    * capacity inherited), rows within a file ordered by `order`.
+    * Returns each file beside its source group (None: `default`).
+    */
+  private def writeRoutedToSources(s: SparkSession, root: String,
+      base: Snapshot, cur: DataFrame, groups: Seq[Seq[FileStat]],
+      default: String, order: Seq[org.apache.spark.sql.Column] = Nil)
+      : Seq[(FileStat, Option[Seq[FileStat]])] = {
+    val byBucket = groups.zipWithIndex.map { case (g, i) => s"f$i" -> g }.toMap
+    LakeCommit.writeRouted(root, ColMap.toPhysical(routeToSourceBuckets(s,
+        cur, byBucket.toSeq.flatMap { case (b, g) => g.map(_.name -> b) },
+        default), base.schema),
+      StatsSpec(base.statCol, base.bloomCol, inheritedBloomBytes(base),
+        base.statCol2),
+      bucket = Some(col("__bucket")), order = order)
+      .map { case (f, b) => f -> b.flatMap(byBucket.get) }
+  }
+
+  /** A rewrite output takes its source group's partition tags (a
+    * group never spans partitions).
+    */
+  private def inheritPart(f: FileStat, src: Option[Seq[FileStat]]): FileStat =
+    src.fold(f)(g => f.copy(part = g.head.part, part2 = g.head.part2))
 
   /** Bloom sizing for maintenance rewrites: preserve the chain's
     * per-file bloom capacity (the largest existing bloom) so a
@@ -1592,22 +1623,11 @@ object SnapshotLake {
     }
     // route rewritten rows back to one file per source file; inserts
     // (the `__insert__` sentinel) to one fresh file
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-    val insName = "__bucket=ins/".r
-    // one write job with task-side stats (optimization r16, guide
-    // §1.2/§6): the statsFor re-read of every written byte is gone
-    val newFiles = LakeApiWrite.writeBatchWithStats(s, root, batch,
-        ColMap.toPhysical(routeToSourceBuckets(s, newData,
-          touchedFiles.map(_.name).zipWithIndex
-            .map { case (n, i) => n -> s"f$i" },
-          default = "ins"), base.schema)
-          .repartition(col("__bucket")),
-        key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-        bucketCol = Some("__bucket"))
-      .map { f =>
-        val isIns = insName.findFirstIn(f.name).isDefined
-        if (isIns) f.copy(ridNew = true)
-        else if (ridKept) f.copy(ridMat = true) else f
+    val newFiles = writeRoutedToSources(s, root, base, newData,
+        touchedFiles.map(Seq(_)), default = "ins")
+      .map {
+        case (f, None) => f.copy(ridNew = true)
+        case (f, _) => if (ridKept) f.copy(ridMat = true) else f
       }
     // 4. publish with conflict-checked optimistic rebase
     var committed = -1
@@ -1693,16 +1713,9 @@ object SnapshotLake {
         val cur = src
           .withColumn("__src", input_file_name())
           .where(!(col(key) >= lo && col(key) < hi))
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-        LakeApiWrite.writeBatchWithStats(s, root, batch,
-            ColMap.toPhysical(routeToSourceBuckets(s, cur,
-              straddling.map(_.name).zipWithIndex
-                .map { case (n, i) => n -> s"f$i" },
-              default = "x"), base.schema)
-              .repartition(col("__bucket")),
-            key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-            bucketCol = Some("__bucket"))
-          .map(f => if (ridKept) f.copy(ridMat = true) else f)
+        writeRoutedToSources(s, root, base, cur, straddling.map(Seq(_)),
+            default = "x")
+          .map { case (f, _) => if (ridKept) f.copy(ridMat = true) else f }
       }
     val rowsDeleted = dropped.map(_.liveRows).sum +
       (straddling.map(_.liveRows).sum - newFiles.map(_.rows).sum)
@@ -1877,23 +1890,14 @@ object SnapshotLake {
         val cur = src
           .withColumn("__src", input_file_name())
           .where(!coalesce(cond, lit(false)))
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
         // one output per source file: each rewrite inherits its
         // source's partition identity, so a merge-on-read delete on a
         // partitioned lake never degrades partition pruning
-        val fTag = "__bucket=f(\\d+)/".r
-        LakeApiWrite.writeBatchWithStats(s, root, batch,
-            ColMap.toPhysical(routeToSourceBuckets(s, cur,
-              cowFiles.map(_.name).zipWithIndex
-                .map { case (n, i) => n -> s"f$i" },
-              default = "x"), base.schema)
-              .repartition(col("__bucket")),
-            key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-            bucketCol = Some("__bucket"))
-          .map(f => if (ridKept) f.copy(ridMat = true) else f)
-          .map(f => fTag.findFirstMatchIn(f.name)
-            .fold(f)(m => f.copy(part = cowFiles(m.group(1).toInt).part,
-              part2 = cowFiles(m.group(1).toInt).part2)))
+        writeRoutedToSources(s, root, base, cur, cowFiles.map(Seq(_)),
+            default = "x")
+          .map { case (f, src) =>
+            inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
+          }
       }
     val touchedNames = (dvFiles ++ cowFiles).map(_.name).toSet
     var committed = -1
@@ -2019,22 +2023,13 @@ object SnapshotLake {
         cur.where(!hit).unionByName(applySets(cur.where(hit)))
       }).flatten
     val newData = legs.reduce(_ unionByName _)
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
     // in-place rewrites inherit their source's partition identity
     // (the "ins" post-image file spans partitions and stays untagged)
-    val fTag = "__bucket=f(\\d+)/".r
-    val newFiles = LakeApiWrite.writeBatchWithStats(s, root, batch,
-        ColMap.toPhysical(routeToSourceBuckets(s, newData,
-          cowFiles.map(_.name).zipWithIndex
-            .map { case (n, i) => n -> s"f$i" },
-          default = "ins"), base.schema)
-          .repartition(col("__bucket")),
-        key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-        bucketCol = Some("__bucket"))
-      .map(f => if (ridKept) f.copy(ridMat = true) else f)
-      .map(f => fTag.findFirstMatchIn(f.name)
-        .fold(f)(m => f.copy(part = cowFiles(m.group(1).toInt).part,
-              part2 = cowFiles(m.group(1).toInt).part2)))
+    val newFiles = writeRoutedToSources(s, root, base, newData,
+        cowFiles.map(Seq(_)), default = "ins")
+      .map { case (f, src) =>
+        inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
+      }
     val touchedNames = (dvFiles ++ cowFiles).map(_.name).toSet
     var committed = -1
     var filesWithDv = 0
@@ -2131,32 +2126,18 @@ object SnapshotLake {
       Files.deleteIfExists(Paths.get(LakeWrite.stagingDir(root), n)): Unit
     }
     val matNames = matStaged.map(_._1).toSet
-    val newFiles =
-      if (live.isEmpty) Seq.empty[FileStat]
-      else {
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-        Files.createDirectories(Paths.get(root, batch))
-        live.foreach { case (n, _) =>
-          Files.move(Paths.get(LakeWrite.stagingDir(root), n),
-            Paths.get(root, batch, n),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-        // post-image files MATERIALIZE their pre-images' row ids (a
-        // __rid column) — tagged so readers serve _row_id from it;
-        // plain insert legs are GENUINE inserts (fresh base, zero
-        // pre-existing rows) — tagged so the CDF's row-id diff may
-        // include them instead of falling back to the key diff
-        LakeCommit.taskStatFiles(root, batch,
-            live.map { case (n, r) =>
-              LakeStaged(n, r, stats = taskStats.get(n),
-                bytes = taskBytes.get(n)) },
-            StatsSpec(key, base.bloomCol, inheritedBloomBytes(base),
-              base.statCol2))
-          .getOrElse(statsFor(s, root, batch, key, base.bloomCol,
-            inheritedBloomBytes(base), base.statCol2))
-          .map(f => if (matNames(
-              f.name.substring(f.name.lastIndexOf('/') + 1)))
-            f.copy(ridMat = true) else f.copy(ridNew = true))
+    // post-image files MATERIALIZE their pre-images' row ids (a __rid
+    // column) — tagged so readers serve _row_id from it; plain insert
+    // legs are GENUINE inserts (fresh base, zero pre-existing rows) —
+    // tagged so the CDF's row-id diff may include them instead of
+    // falling back to the key diff
+    val newFiles = LakeCommit.land(root,
+        live.map { case (n, r) => LakeStaged(n, r, stats = taskStats.get(n),
+          bytes = taskBytes.get(n)) -> n },
+        StatsSpec(key, base.bloomCol, inheritedBloomBytes(base),
+          base.statCol2))
+      .map { case (f, m) =>
+        if (matNames(m.name)) f.copy(ridMat = true) else f.copy(ridNew = true)
       }
     var committed = -1
     var filesWithDv = 0
@@ -2234,23 +2215,15 @@ object SnapshotLake {
     val purge = base.files.filter(f => f.dv.exists(d =>
       d.count > 0 && d.count.toDouble >= minDeletedFraction * f.rows))
     if (purge.isEmpty) return PurgeResult(base.version, 0, 0L)
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
     // one output file per purged file (merge's layout-preserving
     // routing): the rewrite drops dead positions, nothing else —
     // surviving rows keep their stable ids (__rid) so row tracking
     // survives the maintenance verb
     val (purgeSrc, ridKept) = readFilesForRewrite(s, root, base, purge)
-    val newFiles = LakeApiWrite.writeBatchWithStats(s, root, batch,
-        ColMap.toPhysical(routeToSourceBuckets(s,
-          purgeSrc.withColumn("__src", input_file_name()),
-          purge.map(_.name).zipWithIndex
-            .map { case (n, i) => n -> s"f$i" },
-          default = "x"), base.schema)
-          .repartition(col("__bucket"))
-          .sortWithinPartitions(col(key)),
-        key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-        bucketCol = Some("__bucket"))
-      .map(f => if (ridKept) f.copy(ridMat = true) else f)
+    val newFiles = writeRoutedToSources(s, root, base,
+        purgeSrc.withColumn("__src", input_file_name()), purge.map(Seq(_)),
+        default = "x", order = Seq(col(key)))
+      .map { case (f, _) => if (ridKept) f.copy(ridMat = true) else f }
     val purgedNames = purge.map(_.name).toSet
     var committed = -1
     while (committed < 0) {
@@ -2345,38 +2318,26 @@ object SnapshotLake {
       else {
         val (n, c) = bucketSpec.get
         val rbSo = commonSo(rebucket)
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
         // re-routed rows keep their stable ids (__rid) when the
         // sources carry identity — the old "implicit ids do not
         // survive the re-route" degradation is gone for tracked
         // chains
         val (reread, rbRid) = readFilesForRewrite(s, root, base, rebucket)
-        val bTag = "__bucket=(\\d+)/".r
-        LakeApiWrite.writeBatchWithStats(s, root, batch,
-            ColMap.toPhysical(
+        LakeCommit.writeRouted(root, ColMap.toPhysical(
               reread.withColumn("__bucket",
                 graft.functions.GraftBucket.idColumnFor(col(c), n,
                   reread.schema.fields.find(_.name.equalsIgnoreCase(c))
                     .map(_.dataType).getOrElse(
                       org.apache.spark.sql.types.LongType))),
-              base.schema)
-              .repartition(col("__bucket"))
-              // __bucket leads the sort so the per-bucket data order
-              // is the one the sort declares (the old FileFormatWriter
-              // required-ordering note survives as: keep the routing
-              // column first, data order second)
-              .sortWithinPartitions(col("__bucket"),
-                col(rbSo.getOrElse(key))),
-            key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-            bucketCol = Some("__bucket"))
-          .map(f => if (rbRid) f.copy(ridMat = true) else f)
-          .map(f => rbSo.fold(f)(c2 => f.copy(sorted = Some(c2))))
-          .map { f =>
-            val m = bTag.findFirstMatchIn(f.name).getOrElse(
-              throw new IllegalStateException(
-                s"re-bucketed file ${f.name} lacks a bucket dir"))
-            f.copy(part = Some(
-              graft.functions.GraftBucket.tagCol(n, c) -> m.group(1)))
+              base.schema),
+            StatsSpec(key, base.bloomCol, inheritedBloomBytes(base),
+              base.statCol2),
+            bucket = Some(col("__bucket")),
+            order = Seq(col(rbSo.getOrElse(key))))
+          .map { case (f, b) =>
+            val f1 = if (rbRid) f.copy(ridMat = true) else f
+            f1.copy(sorted = rbSo, part = b.map(
+              graft.functions.GraftBucket.tagCol(n, c) -> _))
           }
       }
     // greedy adjacent pack WITHIN a partition domain: files sharing a
@@ -2408,33 +2369,17 @@ object SnapshotLake {
     val newFiles =
       if (packed.isEmpty) Seq.empty[FileStat]
       else {
-        val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
         // packed rows keep their stable ids (row tracking survives
         // OPTIMIZE — Delta's lineage contract)
         val (packSrc, packRid) =
           readFilesForRewrite(s, root, base, packed.flatten)
         val packSo = commonSo(packed.flatten)
-        val gTag = "__bucket=g(\\d+)/".r
-        LakeApiWrite.writeBatchWithStats(s, root, batch,
-            ColMap.toPhysical(routeToSourceBuckets(s,
-              packSrc.withColumn("__src", input_file_name()),
-              packed.zipWithIndex.flatMap { case (g, gi) =>
-                g.map(f => f.name -> s"g$gi") },
-              default = "x"), base.schema)
-              .repartition(col("__bucket"))
-              // __bucket leads (see the re-bucket branch note)
-              .sortWithinPartitions(col("__bucket"),
-                col(packSo.getOrElse(key))),
-            key, base.bloomCol, inheritedBloomBytes(base), base.statCol2,
-            bucketCol = Some("__bucket"))
-          .map(f => if (packRid) f.copy(ridMat = true) else f)
-          .map(f => packSo.fold(f)(c2 => f.copy(sorted = Some(c2))))
-          // a packed output inherits its group's partition identity
-          // (groups never span partitions, so head's tag is the
-          // group's tag)
-          .map(f => gTag.findFirstMatchIn(f.name)
-            .fold(f)(m => f.copy(part = packed(m.group(1).toInt).head.part,
-              part2 = packed(m.group(1).toInt).head.part2)))
+        writeRoutedToSources(s, root, base,
+            packSrc.withColumn("__src", input_file_name()), packed,
+            default = "x", order = Seq(col(packSo.getOrElse(key))))
+          .map { case (f, g) => inheritPart(
+            (if (packRid) f.copy(ridMat = true) else f).copy(sorted = packSo),
+            g) }
       }
     var committed = -1
     while (committed < 0) {
@@ -2738,15 +2683,13 @@ object SnapshotLake {
       bucket: org.apache.spark.sql.Column, statCol: String,
       overwrite: Boolean = false, bloomCol: Option[String] = None,
       bloomBytes: Int = 1024, statCol2: Option[String] = None): Int = {
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
     val chainSchema =
       if (!overwrite && headVersion(root) >= 0) snapshot(root).schema
       else None
-    val newFiles = LakeApiWrite.writeBatchWithStats(s, root, batch,
-      ColMap.toPhysical(df, chainSchema).withColumn("__bucket", bucket)
-        .repartition(col("__bucket")),
-      statCol, bloomCol, bloomBytes, statCol2,
-      bucketCol = Some("__bucket"))
+    val newFiles = LakeCommit.writeRouted(root,
+      ColMap.toPhysical(df, chainSchema),
+      StatsSpec(statCol, bloomCol, bloomBytes, statCol2),
+      bucket = Some(bucket)).map(_._1)
     // recorded schema = df's own (pre-__bucket): the bucket is a
     // partition directory, invisible to explicit-file-list reads
     commitFiles(root, newFiles, statCol, overwrite, bloomCol, statCol2,
@@ -2801,13 +2744,11 @@ object SnapshotLake {
       java.lang.Long.highestOneBit(
         math.max(1L, (rows + targetRows - 1) / targetRows) * 2 - 1)).toInt
     val bucket = zOrderBucket(xCol, xLo, xHi, yCol, yLo, yHi, buckets)
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-    val newFiles = LakeApiWrite.writeBatchWithStats(s, root, batch,
-      ColMap.toPhysical(df, base.schema).withColumn("__bucket", bucket)
-        .repartition(col("__bucket"))
-        .sortWithinPartitions(col(base.statCol)),
-      base.statCol, base.bloomCol, inheritedBloomBytes(base), Some(yCol),
-      bucketCol = Some("__bucket"))
+    val newFiles = LakeCommit.writeRouted(root,
+      ColMap.toPhysical(df, base.schema),
+      StatsSpec(base.statCol, base.bloomCol, inheritedBloomBytes(base),
+        Some(yCol)),
+      bucket = Some(bucket), order = Seq(col(base.statCol))).map(_._1)
     var committed = -1
     while (committed < 0) {
       val head = snapshot(root)
@@ -2845,26 +2786,16 @@ object SnapshotLake {
       partCol: String, statCol: String,
       overwrite: Boolean = false, bloomCol: Option[String] = None,
       bloomBytes: Int = 1024, statCol2: Option[String] = None): Int = {
-    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
     val chainSchema =
       if (!overwrite && headVersion(root) >= 0) snapshot(root).schema
       else None
-    val dirTag = "__bucket=([^/]+)/".r
-    val tagged = LakeApiWrite.writeBatchWithStats(s, root, batch,
-        ColMap.toPhysical(df, chainSchema)
-          .withColumn("__bucket", col(partCol).cast("string"))
-          .repartition(col("__bucket")),
-        statCol, bloomCol, bloomBytes, statCol2,
-        bucketCol = Some("__bucket"))
-      .map { f =>
-        val m = dirTag.findFirstMatchIn(f.name).getOrElse(
-          throw new IllegalStateException(
-            s"partitioned batch file ${f.name} lacks a partition dir"))
-        // the writer Hive-escapes special chars in dir names; decode
-        // so the tag holds the VALUE, not its encoding
-        f.copy(part = Some(partCol ->
-          java.net.URLDecoder.decode(m.group(1), "UTF-8")))
-      }
+    // each file's tag holds its raw routing value (null: Hive's
+    // default-partition name)
+    val tagged = LakeCommit.writeRouted(root,
+        ColMap.toPhysical(df, chainSchema),
+        StatsSpec(statCol, bloomCol, bloomBytes, statCol2),
+        bucket = Some(col(partCol).cast("string")))
+      .map { case (f, v) => f.copy(part = v.map(partCol -> _)) }
     commitFiles(root, tagged, statCol, overwrite, bloomCol, statCol2,
       txn = None, schemaJson = Some(df.schema.json))
   }
@@ -3018,7 +2949,12 @@ object SnapshotLake {
           if (externalDir.isDefined)
             Paths.get(java.net.URI.create(uri).getPath)
               .toAbsolutePath.normalize.toString
-          else uri.substring(uri.indexOf("/data/") + 1)
+          else {
+            // the URI is percent-encoded: decode so an escaped routing
+            // dir (`a%2Fb`) names the file as it is on disk
+            val path = java.net.URI.create(uri).getPath
+            path.substring(path.indexOf("/data/") + 1)
+          }
         val cstats = csCols.zipWithIndex.flatMap { case ((c, _), i) =>
           val loI = r.fieldIndex(s"__cs_lo_$i")
           // an all-null file records no entry for the column — the
@@ -3048,10 +2984,10 @@ object SnapshotLake {
   }
 
   /** Publish `newFiles` (stats already computed) as the next version
-    * — shared by the Scala verbs (whose write job accumulates stats
-    * task-side, [[LakeApiWrite.writeBatchWithStats]]) and the DSv2
-    * write path (whose BatchWrite.commit stages its own acknowledged
-    * file set the same way).
+    * — shared by the Scala verbs and the DSv2 write path, whose files
+    * the same task writer ([[LakeDataWriter]]) stages with stats
+    * accumulated task-side ([[LakeCommit.writeRouted]] /
+    * BatchWrite.commit).
     */
   private[graft] def commitFiles(root: String, newFiles: Seq[FileStat],
       statCol: String, overwrite: Boolean, bloomCol: Option[String],

@@ -222,6 +222,15 @@ class LakeConnectorSpec extends SparkTestBase {
     SnapshotLake.commit(spark, root, ev.coalesce(1), "event_id",
       writeOptions = Map("parquet.block.size" -> "16384",
         "parquet.page.size" -> "4096"))
+    // any other writer key is refused, by name, before anything stages
+    val refused = intercept[IllegalArgumentException](
+      SnapshotLake.commit(spark, root, ev, "event_id",
+        writeOptions = Map("parquet.block.size" -> "16384",
+          "compression" -> "zstd")))
+    assert(refused.getMessage.contains("'compression'"))
+    assert(SnapshotLake.headVersion(root) === 0)
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(root, "_staging"))
+      .count() === 0)
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
     try {

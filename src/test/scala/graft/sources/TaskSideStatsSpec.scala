@@ -154,8 +154,8 @@ class TaskSideStatsSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS taskstats_map")
   }
 
-  /** r16: the Scala API verbs route through
-    * [[LakeApiWrite.writeBatchWithStats]] — one write job, stats
+  /** The Scala API verbs write through [[LakeCommit.writeRouted]] —
+    * one write job whose tasks each feed one [[LakeDataWriter]], stats
     * accumulated task-side, no read-back pass. Value-identity is
     * pinned the same way as the DSv2 writers: each batch's manifest
     * entries must equal a statsFor read-back of the same files.
@@ -188,6 +188,13 @@ class TaskSideStatsSpec extends SparkTestBase {
     SnapshotLake.commitPartitioned(spark, root4,
       ev.selectExpr("event_id", "cents",
         "concat('r', event_id % 3) AS region"), "region", "event_id")
+    // routing values the dir name must default or escape: the empty
+    // string, null, a slash and an equals sign
+    val root5 = Housekeeping.tempDir("taskstats_api5")
+    SnapshotLake.commitPartitioned(spark, root5,
+      ev.selectExpr("event_id", "cents", """CASE event_id % 5
+        WHEN 0 THEN '' WHEN 1 THEN NULL WHEN 2 THEN 'a/b'
+        WHEN 3 THEN 'x=y' ELSE 'r' END AS region"""), "region", "event_id")
     val (c1, _) = SnapshotLake.statsAccounting
     assert(c1 === c0,
       s"an API verb ran the read-back stats pass (${c1 - c0} calls)")
@@ -215,9 +222,21 @@ class TaskSideStatsSpec extends SparkTestBase {
     certify(root2, None, 1024, None)
     certify(root3, None, 1024, Some("y"))
     certify(root4, None, 1024, None)
+    certify(root5, None, 1024, None)
     // the verbs' judged surfaces still hold: tags, aggregates
     val p = SnapshotLake.snapshot(root4)
     assert(p.files.forall(_.part.exists(_._1 == "region")))
+    // each file's tag holds the raw value; null keeps Hive's name
+    val p5 = SnapshotLake.snapshot(root5)
+    assert(p5.files.map(_.part.map(_._1)).toSet === Set(Some("region")))
+    assert(p5.files.flatMap(_.part).map(_._2).toSet ===
+      Set("", "__HIVE_DEFAULT_PARTITION__", "a/b", "x=y", "r"))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(SnapshotLake.readPartition(spark, root5, "region", "")) ===
+      (0L until 4000L by 5L))
+    assert(ids(SnapshotLake.readPartition(spark, root5, "region", "a/b")) ===
+      (2L until 4000L by 5L))
     assert(SnapshotLake.read(spark, root2)
       .agg(count(lit(1))).head.getLong(0) > 0)
   }
@@ -235,15 +254,42 @@ class TaskSideStatsSpec extends SparkTestBase {
   }
 
   test("partition-dir value escaping matches the replaced writer's contract") {
-    assert(LakeApiWrite.escapeDirValue("f0") === "f0")
-    assert(LakeApiWrite.escapeDirValue("plain-value_1.2") ===
+    assert(LakeCommit.escapeDirValue("f0") === "f0")
+    assert(LakeCommit.escapeDirValue("plain-value_1.2") ===
       "plain-value_1.2")
-    assert(LakeApiWrite.escapeDirValue("a/b") === "a%2Fb")
-    assert(LakeApiWrite.escapeDirValue("a:b=c") === "a%3Ab%3Dc")
-    assert(LakeApiWrite.escapeDirValue("pct%now") === "pct%25now")
-    assert(LakeApiWrite.escapeDirValue("tab\tx") === "tab%09x")
+    assert(LakeCommit.escapeDirValue("a/b") === "a%2Fb")
+    assert(LakeCommit.escapeDirValue("a:b=c") === "a%3Ab%3Dc")
+    assert(LakeCommit.escapeDirValue("pct%now") === "pct%25now")
+    assert(LakeCommit.escapeDirValue("tab\tx") === "tab%09x")
     // space passes through un-escaped (Hive's contract)
-    assert(LakeApiWrite.escapeDirValue("a b") === "a b")
+    assert(LakeCommit.escapeDirValue("a b") === "a b")
+    // the empty string takes the default-partition dir name
+    assert(LakeCommit.escapeDirValue("") === "__HIVE_DEFAULT_PARTITION__")
+  }
+
+  test("64 routing values in one task: one file per value, input row order kept") {
+    val root = Housekeeping.tempDir("taskstats_onetask")
+    // one input partition, one shuffle partition: every value lands
+    // in the same task, interleaved (value = id * 7 % 64)
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try SnapshotLake.commitPartitioned(spark, root,
+        spark.range(0, 6400, 1, 1).selectExpr("id AS event_id",
+          "concat('v', id * 7 % 64) AS p"), "p", "event_id")
+    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val snap = SnapshotLake.snapshot(root)
+    assert(snap.files.length === 64)
+    assert(snap.files.forall(_.name.contains("/part-00000-")),
+      "the 64 values did not share one task")
+    snap.files.foreach { f =>
+      val v = f.part.get._2
+      val rows = spark.read.parquet(SnapshotLake.dataPath(root, f.name))
+        .collect()
+      assert(rows.map(_.getAs[String]("p")).toSet === Set(v))
+      // physical row order = input order for this value
+      assert(rows.map(_.getAs[Long]("event_id")).toSeq ===
+        (0L until 6400L).filter(i => s"v${i * 7 % 64}" == v))
+    }
   }
 
   test("partitioned (multi-segment task) writes carry per-file task-side stats") {
