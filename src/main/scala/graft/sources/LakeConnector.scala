@@ -1219,9 +1219,9 @@ final class LakeScanBuilder(root: String, asOf: Option[Int],
       // a deletion vector may have removed the extremum row: the
       // manifest's lo/hi are a SUPERSET bound (sound for pruning,
       // wrong as an answer) — refuse and take the data path. SUM
-      // additionally needs every file's write-time su= record (a
-      // pre-sum chain or an overflowed file has none) AND an
-      // overflow-free cross-file fold per answered group.
+      // additionally needs every file's write-time su= record (an
+      // overflowed file has none) AND an overflow-free cross-file
+      // fold per answered group.
       case m: Min => refsStatCol(m.column) && statColIsLong && noDv
       case m: Max => refsStatCol(m.column) && statColIsLong && noDv
       case sm: Sum => refsStatCol(sm.column) && statColIsLong &&
@@ -1847,13 +1847,6 @@ final case class LakeScan(root: String, version: Int,
           files.flatMap(_.dv).map(_.count).sum}rows) " else "") +
       s"cols=[${required.fieldNames.mkString(",")}]"
 
-  private def sizeOf(f: SnapshotLake.FileStat): Long =
-    // manifest carries write-time byte sizes; pre-sz manifests fall
-    // back to one driver-side stat(2) per file
-    f.bytes.getOrElse(
-      java.nio.file.Files.size(
-        java.nio.file.Paths.get(SnapshotLake.dataPath(root, f.name))))
-
   /** Manifest-derived table statistics AFTER the prune: exact row
     * counts and on-disk bytes for the kept files, zero footers
     * opened — plus COLUMN statistics (Spark feeds `columnStats()`
@@ -1881,7 +1874,7 @@ final case class LakeScan(root: String, version: Int,
       : org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(files.map(sizeOf).sum)
+        java.util.OptionalLong.of(files.map(_.bytes).sum)
       override def numRows(): java.util.OptionalLong =
         java.util.OptionalLong.of(files.map(_.liveRows).sum)
       override def columnStats(): java.util.Map[
@@ -2033,7 +2026,7 @@ final case class LakeScan(root: String, version: Int,
     val conf = new Configuration()
     effectiveFiles.flatMap { f =>
       val path = SnapshotLake.dataPath(root, f.name)
-      val size = sizeOf(f)
+      val size = f.bytes
       val dvB64 = f.dv.map(_.b64)
       val ridBase = f.rid.getOrElse(-1L)
       val raw: Seq[LakeSplit] =

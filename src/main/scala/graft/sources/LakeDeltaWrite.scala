@@ -141,13 +141,9 @@ final class LakeDeltaBatchWrite(root: String, schema: StructType,
       .groupBy(_._1).map { case (p, gs) => p -> gs.map(_._2) }
     val op = cmd.toString.toLowerCase(java.util.Locale.ROOT)
     val res = SnapshotLake.commitDeltaOps(SparkSession.active, root,
-      deletes, staged.flatMap(_.inserted).map(m => (m.name, m.rows)), op,
-      matStaged = staged.flatMap(_.updated).map(m => (m.name, m.rows)),
-      scannedVersion = Some(scannedVersion),
-      taskStats = staged.flatMap(m => m.inserted ++ m.updated)
-        .flatMap(s => s.stats.map(s.name -> _)).toMap,
-      taskBytes = staged.flatMap(m => m.inserted ++ m.updated)
-        .flatMap(s => s.bytes.map(s.name -> _)).toMap)
+      deletes, staged.flatMap(_.inserted), op,
+      updated = staged.flatMap(_.updated),
+      scannedVersion = Some(scannedVersion))
     // a delta UPDATE/MERGE version mixes vector growth with added
     // post-image files — not derivable from the manifest diff alone,
     // so change-feed tables materialize the CDC sidecar (pure-delete

@@ -40,7 +40,7 @@ object LakeMetaTables {
       StructField("file", StringType, nullable = false),
       StructField("rows", LongType, nullable = false),
       StructField("live_rows", LongType, nullable = false),
-      StructField("bytes", LongType, nullable = true),
+      StructField("bytes", LongType, nullable = false),
       StructField("lo", LongType, nullable = false),
       StructField("hi", LongType, nullable = false),
       StructField("part_col", StringType, nullable = true),
@@ -57,7 +57,7 @@ object LakeMetaTables {
       StructField("n_files", LongType, nullable = false),
       StructField("n_rows", LongType, nullable = false),
       StructField("txn", StringType, nullable = true),
-      StructField("committed_at", LongType, nullable = true),
+      StructField("committed_at", LongType, nullable = false),
       StructField("is_checkpoint", BooleanType, nullable = false)))
     case "partitions" => StructType(Seq(
       StructField("part_col", StringType, nullable = false),
@@ -91,21 +91,21 @@ object LakeMetaTables {
       case "files" =>
         SnapshotLake.snapshot(root).files.map { f =>
           row(s(f.name), f.rows, f.liveRows,
-            f.bytes.map(Long.box).orNull, f.lo, f.hi,
+            f.bytes, f.lo, f.hi,
             sOpt(f.part.map(_._1)), sOpt(f.part.map(_._2)),
             sOpt(f.part2.map(_._1)), sOpt(f.part2.map(_._2)),
             f.dv.fold(0L)(_.count), sOpt(f.sorted),
             f.rid.map(Long.box).orNull, f.ridMat)
         }
       case "history" | "snapshots" =>
-        // newest first (Iceberg's ordering); one header + file list
-        // per un-vacuumed version
+        // newest first (Iceberg's ordering); one header read per
+        // un-vacuumed version
         val head = SnapshotLake.headVersion(root)
         (head to 0 by -1).flatMap { v =>
           SnapshotLake.describeVersion(root, v).map {
             case (op, nf, nr, txn, ts, ckpt) =>
               row(v.toLong, s(op), nf, nr, sOpt(txn),
-                ts.map(Long.box).orNull, ckpt)
+                ts, ckpt)
           }
         }
       case "partitions" =>

@@ -157,9 +157,7 @@ class LakeMicroBatchStream(root: String, required: StructType,
     snap.files
       .filter(f => !prev(f.name) && keep(f))
       .map(f => LakeSplit(SnapshotLake.dataPath(root, f.name), 0L,
-        f.bytes.getOrElse(java.nio.file.Files.size(java.nio.file.Paths.get(
-          SnapshotLake.dataPath(root, f.name)))),
-        f.dv.map(_.b64)): InputPartition)
+        f.bytes, f.dv.map(_.b64)): InputPartition)
       .toArray
   }
 
@@ -239,13 +237,11 @@ final class LakeCdfMicroBatchStream(root: String, required: StructType)
   */
 object LakeCdf {
 
-  private def sizeOf(path: String): Long =
-    java.nio.file.Files.size(java.nio.file.Paths.get(path))
-
   def versionChanges(root: String, v: Int): Seq[InputPartition] = {
     SnapshotLake.changeFiles(root, v).foreach { cdc =>
-      return cdc.map(p =>
-        LakeCdfSplit(LakeSplit(p, 0L, sizeOf(p)), None, v))
+      // change-data sidecars carry no manifest entry: stat them
+      return cdc.map(p => LakeCdfSplit(LakeSplit(p, 0L,
+        java.nio.file.Files.size(java.nio.file.Paths.get(p))), None, v))
     }
     val cur = SnapshotLake.snapshot(root, Some(v))
     val prev =
@@ -260,7 +256,7 @@ object LakeCdf {
       // the file's own vector rides along: a dropped vectored file's
       // pre-image must exclude rows already deleted in EARLIER versions
       LakeCdfSplit(
-        LakeSplit(p, 0L, f.bytes.getOrElse(sizeOf(p)), f.dv.map(_.b64)),
+        LakeSplit(p, 0L, f.bytes, f.dv.map(_.b64)),
         Some(ct), v)
     }
     // a same-name entry whose DELETION VECTOR changed derives its
@@ -277,7 +273,7 @@ object LakeCdf {
         val newSet = newPos.toSet
         val path = SnapshotLake.dataPath(root, f.name)
         def inc(ps: Array[Long], ct: String) = LakeCdfSplit(
-          LakeSplit(path, 0L, f.bytes.getOrElse(sizeOf(path))),
+          LakeSplit(path, 0L, f.bytes),
           Some(ct), v,
           includeB64 = Some(SnapshotLake.Dv.fromPositions(ps).b64))
         Seq(

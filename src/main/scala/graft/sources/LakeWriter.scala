@@ -346,10 +346,14 @@ final case class LakePartSpec(col: String, idx: Int,
 }
 
 /** One acknowledged staged file + its row count (empty writers are
-  * dropped at commit, not published as zero-row files). `partVal` is
-  * the file's single partition value when the write was partitioned.
+  * dropped at commit, not published as zero-row files) and its
+  * on-disk byte size, stat(2)'d by the TASK at segment close — the
+  * writer is the one party that already has the file local, so the
+  * publish path never re-stats it driver-side (O(files) metadata
+  * round-trips per commit on an object store). `partVal` is the
+  * file's single partition value when the write was partitioned.
   */
-final case class LakeStaged(name: String, rows: Long,
+final case class LakeStaged(name: String, rows: Long, bytes: Long,
     partVal: Option[String] = None,
     partVal2: Option[String] = None,
     /** Highest identity allocation unit this task consumed,
@@ -363,18 +367,11 @@ final case class LakeStaged(name: String, rows: Long,
       * carries a [[SegStats]] whose spec matches the publish-time
       * resolution, the driver builds the manifest entries directly
       * and the [[SnapshotLake.statsFor]] read-back job is skipped.
-      * `None` (disabled column shapes, older messages) falls back to
-      * the read-back pass — same values either way, certified by
-      * TaskSideStatsSpec.
+      * `None` (a column shape the accumulator does not cover) falls
+      * back to the read-back pass — same values either way, certified
+      * by TaskSideStatsSpec.
       */
-    stats: Option[SegStats] = None,
-    /** On-disk byte size, stat(2)'d by the TASK at segment close —
-      * the writer is the one party that already has the file local,
-      * so the publish path never re-stats it driver-side (O(files)
-      * metadata round-trips per commit on an object store). `None`
-      * (older messages) falls back to a driver-side `Files.size`.
-      */
-    bytes: Option[Long] = None)
+    stats: Option[SegStats] = None)
     extends WriterCommitMessage
 
 /** The stat-envelope configuration a writer accumulated against —
@@ -609,27 +606,23 @@ private[sources] object LakeCommit {
     * publish-time stat envelope (specKey match) — skipping the
     * write-then-re-read [[SnapshotLake.statsFor]] pass, which re-reads
     * every byte just written as a second Spark job (optimization r15,
-    * guide §1.2/§6). Any miss — an older message shape, a column
-    * outside the accumulator's replicated set, spec drift from a
-    * concurrent first-commit — returns None and the caller falls back
-    * to the read-back pass; the two paths are value-identical
-    * (TaskSideStatsSpec pins FileStat equality on shared fixtures).
+    * guide §1.2/§6). Any miss — a column outside the accumulator's
+    * replicated set, spec drift from a concurrent first-commit —
+    * returns None and the caller falls back to the read-back pass;
+    * the two paths are value-identical (TaskSideStatsSpec pins
+    * FileStat equality on shared fixtures).
     */
-  private[sources] def taskStatFiles(root: String, batch: String,
+  private[sources] def taskStatFiles(batch: String,
       live: Seq[LakeStaged], spec: StatsSpec)
       : Option[Seq[SnapshotLake.FileStat]] =
     if (live.isEmpty || !live.forall(_.stats.exists(_.specKey == spec.key)))
       None
     else Some(live.map { m =>
       val st = m.stats.get
-      val rel = s"$batch/${m.name}"
-      SnapshotLake.FileStat(rel, st.lo, st.hi, m.rows,
-        bloom = st.bloom, dim2 = st.dim2,
-        // byte size stat(2)'d by the writing task at segment close
-        // (invariant under the staging→batch ATOMIC_MOVE); only a
-        // legacy message without it costs a driver-side stat
-        bytes = m.bytes.orElse(
-          Some(Files.size(Paths.get(root, rel)))),
+      // the task's byte size is invariant under the staging→batch
+      // ATOMIC_MOVE
+      SnapshotLake.FileStat(s"$batch/${m.name}", st.lo, st.hi, m.rows,
+        m.bytes, bloom = st.bloom, dim2 = st.dim2,
         sum = st.su, cstats = st.cstats)
     }.sortBy(_.name))
 
@@ -652,7 +645,7 @@ private[sources] object LakeCommit {
           StandardCopyOption.ATOMIC_MOVE)
       }
       val byName = live.map { case (m, to) => s"$batch/$to" -> m }.toMap
-      taskStatFiles(root, batch,
+      taskStatFiles(batch,
           live.map { case (m, to) => m.copy(name = to) }, spec)
         .getOrElse(SnapshotLake.statsFor(SparkSession.active, root, batch,
           spec.statCol, spec.bloomCol, spec.bloomBytes, spec.statCol2))
@@ -1256,9 +1249,8 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
 
   private def closeSeg(): Unit = if (writer != null) {
     writer.close()
-    finished += LakeStaged(segName, rows, curVal, curVal2,
-      stats = Option(acc).flatMap(_.finish),
-      bytes = Some(Files.size(segPath)))
+    finished += LakeStaged(segName, rows, Files.size(segPath), curVal,
+      curVal2, stats = Option(acc).flatMap(_.finish))
     writer = null
   }
 
@@ -1358,7 +1350,7 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
           // an empty unpartitioned task still acknowledges a zero-row
           // marker (publish drops it), preserving the old protocol
           s"part-$partitionId-$taskId-" +
-            s"${UUID.randomUUID().toString.take(8)}.parquet", 0L))
+            s"${UUID.randomUUID().toString.take(8)}.parquet", 0L, 0L))
     else LakeStagedSet(finished.toSeq, idMax)
   }
   override def abort(): Unit = {

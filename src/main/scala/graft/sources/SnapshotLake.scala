@@ -62,24 +62,26 @@ object SnapshotLake {
     org.slf4j.LoggerFactory.getLogger("graft.sources.SnapshotLake")
 
   /** One live data file: path relative to the lake root, inclusive
-    * min/max of the stat column, its row count, an optional second
-    * [min, max] on the declared second stat dimension (what makes a
-    * Z-ordered layout prunable as 2-D boxes), and an optional
-    * per-file bloom filter over the bloom column (the point-lookup
-    * index for columns where min/max says nothing).
+    * min/max of the stat column, its row count, its on-disk byte
+    * size (recorded at write time, so splits and size statistics
+    * never stat storage), an optional second [min, max] on the
+    * declared second stat dimension (what makes a Z-ordered layout
+    * prunable as 2-D boxes), and an optional per-file bloom filter
+    * over the bloom column (the point-lookup index for columns where
+    * min/max says nothing).
     */
   final case class FileStat(name: String, lo: Long, hi: Long, rows: Long,
+      bytes: Long,
       bloom: Option[Array[Byte]] = None,
       dim2: Option[(Long, Long)] = None,
-      bytes: Option[Long] = None,
       part: Option[(String, String)] = None,
       dv: Option[Dv] = None,
       /** Write-time `sum(statCol)` over the file's PHYSICAL rows —
         * what lets a full-table (or grouped) SUM answer
         * from the manifest with zero files opened. `None` on
-        * pre-sum chains or when the write-time try_sum overflowed;
-        * pushdown refuses in either case, and under a deletion
-        * vector (the dead rows' contribution is unknown).
+        * overflow (the write-time try_sum); pushdown refuses then,
+        * and under a deletion vector (the dead rows' contribution is
+        * unknown).
         */
       sum: Option[Long] = None,
       /** Per-column write-time statistics BEYOND the stat column
@@ -382,12 +384,10 @@ object SnapshotLake {
   final case class Snapshot(version: Int, statCol: String,
       bloomCol: Option[String], files: Seq[FileStat],
       statCol2: Option[String] = None,
-      txn: Option[(String, Long)] = None,
       txns: Map[String, Long] = Map.empty,
       schemaJson: Option[String] = None,
       op: Option[String] = None,
-      retired: Set[String] = Set.empty,
-      ts: Option[Long] = None) {
+      retired: Set[String] = Set.empty) {
     def schema: Option[org.apache.spark.sql.types.StructType] =
       schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -738,7 +738,7 @@ object SnapshotLake {
         g.append("rows", f.rows)
         f.dim2.foreach { case (a, b) =>
           g.append("d2lo", a); g.append("d2hi", b): Unit }
-        f.bytes.foreach(n => g.append("sz", n): Unit)
+        g.append("sz", f.bytes)
         f.bloom.foreach(b => g.append("bf",
           org.apache.parquet.io.api.Binary.fromConstantByteArray(b)): Unit)
         f.part.foreach { case (c, v) =>
@@ -801,20 +801,17 @@ object SnapshotLake {
             logDir(root).resolve(name).toString))
         .build()
       try Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
-        // containsField first: a checkpoint written by an OLDER
-        // build lacks later optional fields entirely, and the
-        // repetition-count lookup on an unknown field throws
-        def opt(field: String): Boolean =
-          g.getType.containsField(field) &&
-            g.getFieldRepetitionCount(field) > 0
+        // Ckpt.write always writes the full schema, so every field is
+        // known; an optional one is present iff it repeats once
+        def opt(field: String): Boolean = g.getFieldRepetitionCount(field) > 0
         FileStat(
           g.getString("name", 0),
           g.getLong("lo", 0), g.getLong("hi", 0), g.getLong("rows", 0),
+          g.getLong("sz", 0),
           bloom = if (opt("bf")) Some(g.getBinary("bf", 0).getBytes)
             else None,
           dim2 = if (opt("d2lo")) Some((g.getLong("d2lo", 0),
             g.getLong("d2hi", 0))) else None,
-          bytes = if (opt("sz")) Some(g.getLong("sz", 0)) else None,
           part = if (opt("pcol")) Some((g.getString("pcol", 0),
             g.getString("pval", 0))) else None,
           dv = if (!opt("dvn")) None
@@ -843,14 +840,6 @@ object SnapshotLake {
     def delete(root: String, name: String): Unit =
       Files.deleteIfExists(logDir(root).resolve(name)): Unit
 
-    /** The `ckptfile=` pointer of version v's manifest, if any. */
-    def pointerOf(root: String, v: Int): Option[String] = {
-      val in = Files.newBufferedReader(manifestPath(root, v),
-        StandardCharsets.UTF_8)
-      try in.readLine().split('\t')
-        .find(_.startsWith("ckptfile=")).map(_.stripPrefix("ckptfile="))
-      finally in.close()
-    }
   }
 
   /** Latest committed version, or -1 for an empty lake. Listing the
@@ -918,12 +907,11 @@ object SnapshotLake {
     */
   private final case class Manifest(statCol: String,
       bloomCol: Option[String], statCol2: Option[String],
-      txn: Option[(String, Long)], txns: Map[String, Long],
+      txns: Map[String, Long],
       schemaJson: Option[String], op: Option[String],
       retired: Set[String],
       isDelta: Boolean, files: Seq[FileStat],
-      adds: Seq[FileStat], removes: Set[String],
-      ts: Option[Long] = None)
+      adds: Seq[FileStat], removes: Set[String])
 
   private def parseFileLine(root: String,
       fields: Array[String]): FileStat = {
@@ -936,8 +924,10 @@ object SnapshotLake {
     }
     val bloom = extras.find(_.startsWith("bf=")).map(t =>
       java.util.Base64.getDecoder.decode(t.stripPrefix("bf=")))
-    val bytes = extras.find(_.startsWith("sz="))
-      .map(_.stripPrefix("sz=").toLong)
+    val bytes = extras.find(_.startsWith("sz=")).getOrElse(
+      throw new IllegalStateException(
+        s"manifest file line for ${fields(0)} has no 'sz=' byte size"))
+      .stripPrefix("sz=").toLong
     // pt=<col>:<base64 value>: the file's partition identity — the
     // value is base64 so arbitrary partition values cannot collide
     // with the manifest's tab/colon delimiters
@@ -972,7 +962,7 @@ object SnapshotLake {
     // | ri=new:<base> (implicit ids on a genuine-insert file)
     val ri = extras.find(_.startsWith("ri=")).map(_.stripPrefix("ri="))
     FileStat(fields(0), fields(1).toLong, fields(2).toLong,
-      fields(3).toLong, bloom, dim2, bytes, part, dv, sum, cstats,
+      fields(3).toLong, bytes, bloom, dim2, part, dv, sum, cstats,
       rid = ri.filter(_ != "mat").map(v =>
         (if (v.startsWith("new:")) v.stripPrefix("new:") else v).toLong),
       ridMat = ri.contains("mat"),
@@ -983,11 +973,12 @@ object SnapshotLake {
 
   /** PROTOCOL VERSION (Delta's reader-version idea): every commit
     * stamps the protocol it was written under, and a reader REFUSES
-    * a manifest stamped by a newer protocol with a clear upgrade
-    * error instead of silently mis-reading features it does not
-    * know. Old manifests without the stamp read as protocol 0 —
-    * every extension so far is an OPTIONAL tagged field, which is
-    * exactly why the version has never needed to move.
+    * any manifest not stamped with exactly this one — a newer stamp
+    * may carry features this reader does not know, and no commit
+    * ever publishes an unstamped manifest — with a clear upgrade
+    * error instead of silently mis-reading it. Every extension so far
+    * is an OPTIONAL tagged field, which is why the version has never
+    * needed to move.
     */
   private[graft] val ProtocolVersion = 1
 
@@ -997,86 +988,99 @@ object SnapshotLake {
     */
   private[graft] var manifestParses: Long = 0L
 
+  /** Version `v`'s header line as tagged fields — the one reader of a
+    * manifest header, and the protocol gate every manifest read goes
+    * through. One line, no file list, no chain replay: the header
+    * records the snapshot-level counts (`nf`/`nr`/`nlr`), the publish
+    * time and the row-id / identity high-waters precisely so history,
+    * time-travel resolution, retention and allocation cost one header
+    * read per version. None if the version was vacuumed (or never
+    * committed).
+    */
+  private def headerFields(root: String, v: Int): Option[Array[String]] = {
+    val p = manifestPath(root, v)
+    if (!Files.exists(p)) None
+    else {
+      val in = Files.newBufferedReader(p, StandardCharsets.UTF_8)
+      val h = try in.readLine().split('\t') finally in.close()
+      val proto = headerTag(h, "proto")
+      if (!proto.contains(ProtocolVersion.toString))
+        throw new IllegalStateException(
+          s"lake at $root v$v was written under protocol " +
+            s"${proto.getOrElse("(unstamped)")}; this reader supports " +
+            s"protocol $ProtocolVersion only — upgrade before reading " +
+            "(refusing is the contract: a silent partial read could " +
+            "drop deletion vectors or misread layout claims)")
+      Some(h)
+    }
+  }
+
+  private def headerTag(h: Array[String], key: String): Option[String] =
+    h.find(_.startsWith(key + "=")).map(_.stripPrefix(key + "="))
+
+  /** A required numeric header field; a missing one throws naming the
+    * field and the version (the header's leading `v=` field).
+    */
+  private def headerLong(h: Array[String], key: String): Long =
+    headerTag(h, key).getOrElse(throw new IllegalStateException(
+      s"manifest ${h(0)} has no '$key=' header field")).toLong
+
   private def parseManifest(root: String, v: Int): Manifest = {
     manifestParses += 1
-    val lines = Files.readAllLines(
-      manifestPath(root, v), StandardCharsets.UTF_8).asScala.toSeq
-    val header = lines.head.split('\t')
-    header.find(_.startsWith("proto="))
-      .map(_.stripPrefix("proto=").toInt)
-      .filter(_ > ProtocolVersion)
-      .foreach(p => throw new IllegalStateException(
-        s"lake at $root v$v was written under protocol $p; this " +
-          s"reader supports up to $ProtocolVersion — upgrade before " +
-          "reading (refusing is the contract: a silent partial read " +
-          "could drop deletion vectors or misread layout claims)"))
+    val header = headerFields(root, v).getOrElse(
+      throw new java.nio.file.NoSuchFileException(
+        manifestPath(root, v).toString))
+    val body = Files.readAllLines(
+      manifestPath(root, v), StandardCharsets.UTF_8).asScala.toSeq.tail
     val statCol = header(1)
-    val bloomCol = header.find(_.startsWith("bloom=")).map(_.stripPrefix("bloom="))
-    val statCol2 = header.find(_.startsWith("stat2=")).map(_.stripPrefix("stat2="))
-    val txn = header.find(_.startsWith("txn=")).map { t =>
-      val body = t.stripPrefix("txn=")
-      val i = body.lastIndexOf(':')
-      (body.substring(0, i), body.substring(i + 1).toLong)
-    }
-    val txns = header.find(_.startsWith("txns="))
-      .map(_.stripPrefix("txns=").split(',').map { e =>
+    val bloomCol = headerTag(header, "bloom")
+    val statCol2 = headerTag(header, "stat2")
+    val txns = headerTag(header, "txns")
+      .map(_.split(',').map { e =>
         val i = e.lastIndexOf(':')
         e.substring(0, i) -> e.substring(i + 1).toLong
       }.toMap)
       .getOrElse(Map.empty[String, Long])
-    val schemaJson = header.find(_.startsWith("schema=")).map(t =>
-      new String(java.util.Base64.getDecoder.decode(
-        t.stripPrefix("schema=")), StandardCharsets.UTF_8))
-    val op = header.find(_.startsWith("op=")).map(_.stripPrefix("op="))
-    val retired = header.find(_.startsWith("retired="))
-      .map(_.stripPrefix("retired=").split(',').toSet)
+    val schemaJson = headerTag(header, "schema").map(t =>
+      new String(java.util.Base64.getDecoder.decode(t),
+        StandardCharsets.UTF_8))
+    val op = headerTag(header, "op")
+    val retired = headerTag(header, "retired")
+      .map(_.split(',').toSet)
       .getOrElse(Set.empty[String])
-    val ts = header.find(_.startsWith("ts="))
-      .map(_.stripPrefix("ts=").toLong)
     val isDelta = header.contains("kind=delta")
     if (isDelta) {
-      val (addLines, rmLines) = lines.tail.partition(_.startsWith("add\t"))
-      Manifest(statCol, bloomCol, statCol2, txn, txns, schemaJson, op,
+      val (addLines, rmLines) = body.partition(_.startsWith("add\t"))
+      Manifest(statCol, bloomCol, statCol2, txns, schemaJson, op,
         retired, isDelta = true, Seq.empty,
         addLines.map(l => parseFileLine(root, l.split('\t').drop(1))),
-        rmLines.map(_.stripPrefix("rm\t")).toSet, ts)
+        rmLines.map(_.stripPrefix("rm\t")).toSet)
     } else {
       // checkpoint manifests externalize the file list as a parquet
-      // sidecar; pre-sidecar chains (and empty lists) stay inline
-      val files = header.find(_.startsWith("ckptfile="))
-        .map(p => Ckpt.read(root, p.stripPrefix("ckptfile=")))
-        .getOrElse(lines.tail.map(l =>
-          parseFileLine(root, l.split('\t'))))
-      Manifest(statCol, bloomCol, statCol2, txn, txns, schemaJson, op,
-        retired, isDelta = false, files, Seq.empty, Set.empty, ts)
+      // sidecar; an empty list stays inline (no body lines)
+      val files = headerTag(header, "ckptfile")
+        .map(Ckpt.read(root, _))
+        .getOrElse(body.map(l => parseFileLine(root, l.split('\t'))))
+      Manifest(statCol, bloomCol, statCol2, txns, schemaJson, op,
+        retired, isDelta = false, files, Seq.empty, Set.empty)
     }
   }
 
   /** Greatest committed version whose publish timestamp is ≤
     * `tsMillis` — `TIMESTAMP AS OF` resolution (Delta's
-    * `versionAtTimestamp`). One header line per version, newest
+    * `versionAtTimestamp`). One header read per version, newest
     * first, stopping at the first qualifying manifest; vacuumed
-    * versions are skipped. Pre-timestamp manifests (chains written
-    * before ts= landed) never qualify, so asking for a time before
-    * the first stamped commit refuses with the same clear error as
-    * an out-of-range time.
+    * versions are skipped, and a time before the earliest retained
+    * commit refuses with a clear error.
     */
   def versionAt(root: String, tsMillis: Long): Int = {
     val head = headVersion(root)
     require(head >= 0, s"lake at $root has no committed snapshot")
-    val found = (head to 0 by -1).find { v =>
-      Files.exists(manifestPath(root, v)) && {
-        val in = Files.newBufferedReader(manifestPath(root, v),
-          StandardCharsets.UTF_8)
-        val ts = try in.readLine().split('\t')
-          .find(_.startsWith("ts=")).map(_.stripPrefix("ts=").toLong)
-        finally in.close()
-        ts.exists(_ <= tsMillis)
-      }
-    }
-    found.getOrElse(throw new IllegalArgumentException(
-      s"no committed version of $root at or before timestamp $tsMillis " +
-        "(earliest retained commit is newer, or predates timestamps)"))
+    (head to 0 by -1)
+      .find(v => headerFields(root, v).exists(headerLong(_, "ts") <= tsMillis))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no committed version of $root at or before timestamp " +
+          s"$tsMillis (earliest retained commit is newer)"))
   }
 
   /** Test hook: manifest files read by the last [[snapshot]] call —
@@ -1105,20 +1109,16 @@ object SnapshotLake {
       acc.filterNot(f => d.removes(f.name)) ++ d.adds
     }
     lastSnapshotReads = reads
-    Snapshot(v, top.statCol, top.bloomCol, files, top.statCol2, top.txn,
-      top.txns, top.schemaJson, top.op, top.retired, top.ts)
+    Snapshot(v, top.statCol, top.bloomCol, files, top.statCol2,
+      top.txns, top.schemaJson, top.op, top.retired)
   }
 
   /** Highest batch id recorded for writer `appId`, or -1 if none —
     * answered from the HEAD manifest alone. Every publish carries
     * the accumulated per-app high-water map forward in its header
     * (`txns=app:batch,...` — Delta's `_last_checkpoint` economics
-    * applied to `txn` actions), so the lookup is O(1) manifest reads
-    * no matter how long the chain: a sink committing every 10 s for
-    * a week is ~60k versions, and walking them all per commit — the
-    * pre-round-8 shape — was O(versions²) cumulative parses.
-    *
-    * Because the map rides the head, vacuum no longer truncates the
+    * applied to `txn` actions), so the lookup costs one snapshot read
+    * however long the chain, and vacuum never truncates the
     * replay-dedup horizon: dropping old manifests drops only their
     * per-commit `txn=` audit records, never the accumulated map.
     * The map is one entry per distinct writer app — bounded by
@@ -1127,30 +1127,31 @@ object SnapshotLake {
   def lastTxn(root: String, appId: String): Long = {
     val head = headVersion(root)
     if (head < 0) -1L
-    else txnHighWater(root, snapshot(root, Some(head)), appId)
+    else snapshot(root, Some(head)).txns.getOrElse(appId, -1L)
   }
 
-  /** The app's replay-dedup horizon: the head's accumulated map when
-    * it knows the app (the O(1) fast path every post-map commit
-    * feeds), else a one-time walk of the surviving manifests' legacy
-    * per-commit `txn=` records — a chain written before the map
-    * existed must NOT read as horizon -1, or a restarted sink
-    * re-lands batches it already committed (exactly-once broken on
-    * upgrade). The walk is bounded by vacuum retention and
-    * amortizes away: the app's next commit enters the map.
+  /** The row-id high-water recorded by version `v`'s header (0 for a
+    * version that does not exist) — the next implicit base starts
+    * here.
     */
-  private def txnHighWater(root: String, head: Snapshot,
-      appId: String): Long =
-    head.txns.getOrElse(appId, {
-      (0 to head.version)
-        .filter(v => Files.exists(manifestPath(root, v)))
-        .foldLeft(-1L) { (acc, v) =>
-          snapshot(root, Some(v)).txn match {
-            case Some((a, b)) if a == appId => math.max(acc, b)
-            case _ => acc
-          }
-        }
-    })
+  private def ridHwOf(root: String, v: Int): Long =
+    headerFields(root, v).fold(0L)(headerLong(_, "ridhw"))
+
+  /** IDENTITY-column allocation high-water recorded by version `v`'s
+    * header — the number of allocation UNITS consumed so far (a
+    * value is `start + step × unit`; units are sparse across tasks,
+    * the Delta identity contract: unique, direction-monotonic across
+    * commits, gaps allowed). 0 until the chain first generates: the
+    * tag is written only once non-zero.
+    */
+  private def idhwOf(root: String, v: Int): Long =
+    headerFields(root, v).flatMap(headerTag(_, "idhw")).fold(0L)(_.toLong)
+
+  /** The chain's identity high-water (consumed allocation units) —
+    * what the next generating write reserves its block above.
+    */
+  def identityHighWater(root: String): Long =
+    idhwOf(root, headVersion(root))
 
   /** Stage + atomically publish version `v`; false = lost the race.
     *
@@ -1162,42 +1163,6 @@ object SnapshotLake {
     * cannot state a parent (bootstrap, overwrite-by-intent verbs
     * like restore/clone) pass None and publish a full checkpoint.
     */
-  /** The row-id high-water recorded by version `v`'s manifest header
-    * (0 for pre-row-tracking chains) — the next implicit base starts
-    * here. A header read, never a body parse.
-    */
-  private def ridHwOf(root: String, v: Int): Long = {
-    if (!Files.exists(manifestPath(root, v))) return 0L
-    val in = Files.newBufferedReader(manifestPath(root, v),
-      StandardCharsets.UTF_8)
-    try in.readLine().split('\t')
-      .find(_.startsWith("ridhw=")).map(_.stripPrefix("ridhw=").toLong)
-      .getOrElse(0L)
-    finally in.close()
-  }
-
-  /** IDENTITY-column allocation high-water recorded by version `v`'s
-    * header — the number of allocation UNITS consumed so far (a
-    * value is `start + step × unit`; units are sparse across tasks,
-    * the Delta identity contract: unique, direction-monotonic across
-    * commits, gaps allowed). 0 for chains that never generated.
-    */
-  private def idhwOf(root: String, v: Int): Long = {
-    if (v < 0 || !Files.exists(manifestPath(root, v))) return 0L
-    val in = Files.newBufferedReader(manifestPath(root, v),
-      StandardCharsets.UTF_8)
-    try in.readLine().split('\t')
-      .find(_.startsWith("idhw=")).map(_.stripPrefix("idhw=").toLong)
-      .getOrElse(0L)
-    finally in.close()
-  }
-
-  /** The chain's identity high-water (consumed allocation units) —
-    * what the next generating write reserves its block above.
-    */
-  def identityHighWater(root: String): Long =
-    idhwOf(root, headVersion(root))
-
   private def tryPublish(root: String, v: Int, statCol: String,
       bloomCol: Option[String], overwrite: Boolean,
       files: Seq[FileStat], statCol2: Option[String] = None,
@@ -1272,7 +1237,7 @@ object SnapshotLake {
     def fileLine(f: FileStat): String = {
       val base = s"${f.name}\t${f.lo}\t${f.hi}\t${f.rows}"
       val withD2 = f.dim2.fold(base) { case (a, b) => s"$base\td2=$a:$b" }
-      val withSz = f.bytes.fold(withD2)(n => s"$withD2\tsz=$n")
+      val withSz = s"$withD2\tsz=${f.bytes}"
       val withPt = f.part.fold(withSz) { case (c, v) =>
         s"$withSz\tpt=$c:${java.util.Base64.getEncoder.encodeToString(
           v.getBytes(StandardCharsets.UTF_8))}" }
@@ -2080,8 +2045,9 @@ object SnapshotLake {
     * driver half): per-file deletion-vector growth (`deletes`: data
     * path → STAGED position specs, each an inline b64 encoding or a
     * task-written `@` sidecar pointer — see [[Dv.stageSpec]]) plus
-    * ordinary appended files (`staged`: acknowledged staging names +
-    * row counts) in ONE atomic version. This is what SQL
+    * the tasks' acknowledged staged files — `inserted` (plain insert
+    * legs) and `updated` (post-images materializing their pre-images'
+    * row ids) — in ONE atomic version. This is what SQL
     * UPDATE/MERGE/DELETE under `SupportsDelta` land as — the
     * merge-on-read economics of [[updateRows]] with Spark supplying
     * the matched rows. The driver never holds position arrays across
@@ -2098,17 +2064,9 @@ object SnapshotLake {
     */
   def commitDeltaOps(s: SparkSession, root: String,
       deletes: Map[String, Seq[String]],
-      staged: Seq[(String, Long)], op: String,
-      matStaged: Seq[(String, Long)] = Seq.empty,
-      scannedVersion: Option[Int] = None,
-      // task-side per-file stats (name → SegStats) from the DSv2
-      // delta writers: when every live file carries one under the
-      // base's stat envelope, the read-back stats pass is skipped
-      // (optimization r15, guide §1.2) — else statsFor as before
-      taskStats: Map[String, SegStats] = Map.empty,
-      // task-side per-file byte sizes (optimization r16): publish
-      // skips its driver-side stat(2) per file when present
-      taskBytes: Map[String, Long] = Map.empty): DeltaDmlResult = {
+      inserted: Seq[LakeStaged], op: String,
+      updated: Seq[LakeStaged] = Seq.empty,
+      scannedVersion: Option[Int] = None): DeltaDmlResult = {
     // the conflict baseline is the version the row-level scan was
     // PLANNED against, not the head at commit time: a concurrent
     // vector change landing between scan and commit would otherwise
@@ -2121,19 +2079,15 @@ object SnapshotLake {
       s"delta $op targets unknown file $p"))
     val deleteByName: Map[String, Seq[String]] =
       deletes.map { case (p, ps) => byPath(p).name -> ps }
-    val (live, empty) = (staged ++ matStaged).partition(_._2 > 0)
-    empty.foreach { case (n, _) =>
-      Files.deleteIfExists(Paths.get(LakeWrite.stagingDir(root), n)): Unit
-    }
-    val matNames = matStaged.map(_._1).toSet
+    val (live, empty) = (inserted ++ updated).partition(_.rows > 0)
+    empty.foreach(LakeCommit.discard(root, _))
+    val matNames = updated.map(_.name).toSet
     // post-image files MATERIALIZE their pre-images' row ids (a __rid
     // column) — tagged so readers serve _row_id from it; plain insert
     // legs are GENUINE inserts (fresh base, zero pre-existing rows) —
     // tagged so the CDF's row-id diff may include them instead of
     // falling back to the key diff
-    val newFiles = LakeCommit.land(root,
-        live.map { case (n, r) => LakeStaged(n, r, stats = taskStats.get(n),
-          bytes = taskBytes.get(n)) -> n },
+    val newFiles = LakeCommit.land(root, live.map(m => m -> m.name),
         StatsSpec(key, base.bloomCol, inheritedBloomBytes(base),
           base.statCol2))
       .map { case (f, m) =>
@@ -2189,7 +2143,7 @@ object SnapshotLake {
         committed = head.version + 1
     } finally Dv.discardStaged(deletes.values.flatten)
     DeltaDmlResult(committed, filesWithDv, filesDropped, newFiles.size,
-      rowsDeleted, live.map(_._2).sum)
+      rowsDeleted, live.map(_.rows).sum)
   }
 
   final case class PurgeResult(version: Int, filesPurged: Int,
@@ -2858,8 +2812,8 @@ object SnapshotLake {
     * Since r16 this is the FALLBACK face of write-time stats — the
     * API verbs and DSv2 writers accumulate the identical stats while
     * writing ([[SegStatsAcc]]) and only land here on a column shape
-    * the accumulator doesn't replicate, an older commit message, or
-    * the add_files import (external bytes really do need reading).
+    * the accumulator doesn't replicate, or the add_files import
+    * (external bytes really do need reading).
     *
     * `externalDir`: compute the same stats over a directory OUTSIDE
     * the lake (the add_files import path) — files record under their
@@ -2900,7 +2854,6 @@ object SnapshotLake {
       bloomUdaf(col(c).cast("long")).as("bloom")
     }
     val bloomIdx = 5 + d2Aggs.size
-    val __planT0 = System.nanoTime()
     val df = s.read.parquet(externalDir.getOrElse(s"$root/$batch"))
     // per-column CBO statistics for the integral columns the stat
     // envelope does NOT cover: exact [min, max] plus a bounded KMV
@@ -2934,15 +2887,9 @@ object SnapshotLake {
           .as(s"__cs_kmv_$i"))
     }
     val all = aggs ++ csAggs
-    val __t1 = System.nanoTime()
-    val __rows = df.groupBy(input_file_name().as("f"))
+    df.groupBy(input_file_name().as("f"))
       .agg(all.head, all.tail: _*)
       .collect()
-    if (sys.env.contains("GRAFT_STATS_DEBUG"))
-      println(f"[statsFor] plan=${(__t1 - __planT0) / 1e9}%.3f s " +
-        f"agg=${(System.nanoTime() - __t1) / 1e9}%.3f s " +
-        s"files=${__rows.length}")
-    __rows
       .map { r =>
         val uri = r.getString(0)
         val rel =
@@ -2971,12 +2918,12 @@ object SnapshotLake {
         // SupportsReportStatistics and size splits without touching
         // storage at plan time
         FileStat(rel, r.getLong(1), r.getLong(2), r.getLong(3),
+          Files.size(if (rel.startsWith("/")) Paths.get(rel)
+            else Paths.get(root, rel)),
           if (bloomCol.isDefined) Some(r.getAs[Array[Byte]](bloomIdx))
           else None,
           if (statCol2.isDefined) Some((r.getLong(5), r.getLong(6)))
           else None,
-          Some(Files.size(if (rel.startsWith("/")) Paths.get(rel)
-            else Paths.get(root, rel))),
           sum = if (r.isNullAt(4)) None else Some(r.getLong(4)),
           cstats = cstats)
       }
@@ -3010,10 +2957,9 @@ object SnapshotLake {
       val headSnap = if (head < 0) None else Some(snapshot(root, Some(head)))
       // txn replay check INSIDE the loop: a racer that lost the slot
       // CAS rebases here and sees the winner's identical (app, batch)
-      // in the head's accumulated txns map (legacy chains fall back
-      // to the per-commit record walk)
+      // in the head's accumulated txns map
       txn.collect { case (a, b)
-          if headSnap.exists(h => txnHighWater(root, h, a) >= b) =>
+          if headSnap.exists(_.txns.getOrElse(a, -1L) >= b) =>
         return head
       }
       val parent = if (overwrite) None else headSnap
@@ -3223,6 +3169,32 @@ object SnapshotLake {
     expr(s"shiftright($z, $shift)")
   }
 
+  /** True iff version v's manifest is a full checkpoint (not a
+    * delta) — decided from the header line alone.
+    */
+  private def isCheckpoint(root: String, v: Int): Boolean =
+    headerFields(root, v).exists(!_.contains("kind=delta"))
+
+  /** TIME-BASED retention (Delta's `VACUUM … RETAIN n HOURS`,
+    * Iceberg's `expire_snapshots(older_than)`): drop every version
+    * whose manifest published at or before `cutoffMs`, keeping the
+    * head unconditionally (a table must always be readable, even if
+    * every commit predates the horizon). Delegates to [[vacuum]], so
+    * the checkpoint-snapping and tag/branch retention-root rules
+    * apply identically — an operator expiring by wall clock gets the
+    * same safety envelope as one expiring by count.
+    */
+  def vacuumOlderThan(root: String, cutoffMs: Long): (Int, Int) = {
+    val head = headVersion(root)
+    require(head >= 0, s"lake at $root has no committed snapshot")
+    // the first version younger than the horizon: every manifest
+    // records its publish ts, one header read per version
+    val keepFrom = (0 to head)
+      .find(v => headerFields(root, v).exists(headerLong(_, "ts") > cutoffMs))
+      .getOrElse(head)
+    vacuum(root, head - keepFrom + 1)
+  }
+
   /** Retention: drop manifests older than the `keepVersions` newest
     * and delete every data file no surviving manifest references.
     * This is the lake's ONLY destructive verb, and it is what makes
@@ -3237,44 +3209,6 @@ object SnapshotLake {
     * prune — no cluster I/O. Returns (versions dropped, data files
     * deleted).
     */
-  /** True iff version v's manifest is a full checkpoint (not a
-    * delta) — decided from the header line alone.
-    */
-  private def isCheckpoint(root: String, v: Int): Boolean = {
-    val in = Files.newBufferedReader(manifestPath(root, v),
-      StandardCharsets.UTF_8)
-    try !in.readLine().split('\t').contains("kind=delta")
-    finally in.close()
-  }
-
-  /** TIME-BASED retention (Delta's `VACUUM … RETAIN n HOURS`,
-    * Iceberg's `expire_snapshots(older_than)`): drop every version
-    * whose manifest published at or before `cutoffMs`, keeping the
-    * head unconditionally (a table must always be readable, even if
-    * every commit predates the horizon). Delegates to [[vacuum]], so
-    * the checkpoint-snapping and tag/branch retention-root rules
-    * apply identically — an operator expiring by wall clock gets the
-    * same safety envelope as one expiring by count.
-    */
-  def vacuumOlderThan(root: String, cutoffMs: Long): (Int, Int) = {
-    val head = headVersion(root)
-    require(head >= 0, s"lake at $root has no committed snapshot")
-    // the first version younger than the horizon; every retained
-    // manifest records its publish ts in the header, one header read
-    // per version — the probe reads ONLY the header's ts field (not
-    // describeVersion, whose legacy-manifest fallback reconstructs
-    // the full snapshot and would turn this loop quadratic-ish on a
-    // long pre-count history). A manifest WITHOUT a ts (legacy,
-    // pre-ts format) counts as YOUNG: deleting on an unknown age is
-    // the one wrong default for a destructive verb
-    val keepFrom = (0 to head).find(v =>
-      Files.exists(manifestPath(root, v)) &&
-        headerFields(root, v)
-          .flatMap(headerLong(_, "ts")).forall(_ > cutoffMs))
-      .getOrElse(head)
-    vacuum(root, head - keepFrom + 1)
-  }
-
   def vacuum(root: String, keepVersions: Int): (Int, Int) = {
     require(keepVersions >= 1, "must keep at least the head version")
     val head = headVersion(root)
@@ -3287,8 +3221,7 @@ object SnapshotLake {
     // surviving manifest is always full.
     val wanted = head - keepVersions + 1
     val cutoff0 = (wanted to 0 by -1)
-      .find(v => Files.exists(manifestPath(root, v)) &&
-        isCheckpoint(root, v))
+      .find(isCheckpoint(root, _))
       .getOrElse(0)
     // REFS ARE RETENTION ROOTS (Iceberg's expire-respects-refs): a
     // tagged version must stay readable forever, and a LIVE BRANCH
@@ -3302,8 +3235,7 @@ object SnapshotLake {
     val cutoff = pinned.filter(_ < cutoff0)
       .minOption.fold(cutoff0)(t =>
         (t to 0 by -1)
-          .find(v => Files.exists(manifestPath(root, v)) &&
-            isCheckpoint(root, v))
+          .find(isCheckpoint(root, _))
           .getOrElse(0))
     val dropped = (0 until cutoff)
       .filter(v => Files.exists(manifestPath(root, v)))
@@ -3343,7 +3275,8 @@ object SnapshotLake {
       .foreach(p => Files.deleteIfExists(Paths.get(p)): Unit)
     dropped.foreach { v =>
       // a dropped checkpoint takes its parquet sidecar with it
-      Ckpt.pointerOf(root, v).foreach(Ckpt.delete(root, _))
+      headerFields(root, v).flatMap(headerTag(_, "ckptfile"))
+        .foreach(Ckpt.delete(root, _))
       // ...and its change-data sidecar: a version that can no longer
       // be time-traveled to can't anchor a CDF replay either — Delta
       // vacuums CDC files on the same retention clock as data files
@@ -4405,68 +4338,33 @@ object SnapshotLake {
     committed
   }
 
+  /** One version's header facts for the metadata tables: (op, live
+    * file count, live row count, txn record, publish millis, is the
+    * manifest a full checkpoint) — one header read. None if the
+    * manifest was vacuumed.
+    */
+  private[sources] def describeVersion(root: String, v: Int)
+      : Option[(String, Long, Long, Option[String], Long, Boolean)] =
+    headerFields(root, v).map { h =>
+      (headerTag(h, "op").getOrElse("unknown"), headerLong(h, "nf"),
+        headerLong(h, "nlr"), headerTag(h, "txn"), headerLong(h, "ts"),
+        !h.contains("kind=delta"))
+    }
+
   /** DESCRIBE HISTORY: the audit trail as a DataFrame, answered
-    * entirely from the un-vacuumed manifests — version, the verb
-    * that produced it (`op=` header tag), live file/row counts, and
+    * entirely from the un-vacuumed manifests' headers — version, the
+    * verb that produced it (`op=` header tag), file/row counts, and
     * the txn record if the commit was transactional. KB-scale driver
     * metadata; no data file is ever opened.
     */
-  /** One version's header facts for the metadata tables: (op, live
-    * file count, live row count, txn record, publish millis, is the
-    * manifest a full checkpoint). None if the manifest was vacuumed.
-    */
-  /** Version `v`'s header line as tagged fields — ONE read, no file
-    * list, no chain replay. The commit header records the snapshot-
-    * level counts (`nf`/`nr`/`nlr`) precisely so the history /
-    * snapshots meta tables cost O(versions) header reads instead of
-    * O(versions × chain-depth) manifest parses at planning time.
-    */
-  private def headerFields(root: String, v: Int): Option[Array[String]] =
-    if (!Files.exists(manifestPath(root, v))) None
-    else {
-      val in = Files.newBufferedReader(manifestPath(root, v),
-        StandardCharsets.UTF_8)
-      try Some(in.readLine().split('\t')) finally in.close()
-    }
-
-  private def headerLong(h: Array[String], key: String): Option[Long] =
-    h.find(_.startsWith(key + "=")).map(_.stripPrefix(key + "=").toLong)
-
-  private[sources] def describeVersion(root: String, v: Int)
-      : Option[(String, Long, Long, Option[String], Option[Long], Boolean)] =
-    headerFields(root, v).map { h =>
-      val op = h.find(_.startsWith("op=")).map(_.stripPrefix("op="))
-      val txn = h.find(_.startsWith("txn=")).map(_.stripPrefix("txn="))
-      val ts = headerLong(h, "ts")
-      (headerLong(h, "nf"), headerLong(h, "nlr")) match {
-        case (Some(nf), Some(nlr)) =>
-          (op.getOrElse("unknown"), nf, nlr, txn, ts, isCheckpoint(root, v))
-        case _ =>
-          // legacy manifest (pre-count headers): full reconstruction
-          val sn = snapshot(root, Some(v))
-          (sn.op.getOrElse("unknown"), sn.files.size.toLong,
-            sn.files.map(_.liveRows).sum,
-            sn.txn.map { case (a, b) => s"$a:$b" },
-            sn.ts, isCheckpoint(root, v))
-      }
-    }
-
   def history(s: SparkSession, root: String): DataFrame = {
     val head = headVersion(root)
     require(head >= 0, s"lake at $root has no committed snapshot")
     val rows = (0 to head).flatMap { v =>
       headerFields(root, v).map { h =>
-        val op = h.find(_.startsWith("op=")).map(_.stripPrefix("op="))
-        val txn = h.find(_.startsWith("txn=")).map(_.stripPrefix("txn="))
-        (headerLong(h, "nf"), headerLong(h, "nr")) match {
-          case (Some(nf), Some(nr)) =>
-            (v.toLong, op.getOrElse("unknown"), nf, nr, txn.orNull)
-          case _ => // legacy manifest: full reconstruction
-            val sn = snapshot(root, Some(v))
-            (v.toLong, sn.op.getOrElse("unknown"), sn.files.size.toLong,
-              sn.files.map(_.rows).sum,
-              sn.txn.map { case (a, b) => s"$a:$b" }.orNull)
-        }
+        (v.toLong, headerTag(h, "op").getOrElse("unknown"),
+          headerLong(h, "nf"), headerLong(h, "nr"),
+          headerTag(h, "txn").orNull)
       }
     }
     s.createDataFrame(rows)

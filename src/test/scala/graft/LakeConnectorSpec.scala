@@ -237,7 +237,7 @@ class LakeConnectorSpec extends SparkTestBase {
       val df = lakeRead(root)
       val scan = plannedScan(df)
       val parts = scan.toBatch.planInputPartitions()
-      assert(scan.files.head.bytes.exists(_ > 64 * 1024),
+      assert(scan.files.head.bytes > 64 * 1024,
         s"fixture file too small to exercise splitting: ${scan.files}")
       assert(parts.length > 1,
         s"one ${parts.length}-partition plan for a multi-row-group file")

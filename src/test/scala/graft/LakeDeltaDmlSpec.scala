@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotLake
+import graft.sources.{LakeStaged, SnapshotLake}
 
 /** SQL UPDATE/MERGE/DELETE through the DSv2 DELTA protocol
   * (`SupportsDelta`) on `dv=true` tables: the `_pos` metadata
@@ -180,7 +180,8 @@ class LakeDeltaDmlSpec extends SparkTestBase {
     val ex = intercept[SnapshotLake.MergeConflictException] {
       SnapshotLake.commitDeltaOps(spark, root,
         Map(s"$root/${file.name}" -> Seq(spec)),
-        staged = Seq((name, 1L)), op = "update",
+        inserted = Seq(LakeStaged(name, 1L,
+          Files.size(stage.resolve(name)))), op = "update",
         scannedVersion = Some(v0))
     }
     assert(ex.getMessage.contains("deletion-vector change"))
@@ -188,7 +189,7 @@ class LakeDeltaDmlSpec extends SparkTestBase {
     // vector union is idempotent, delete∪delete stays exact
     val res = SnapshotLake.commitDeltaOps(spark, root,
       Map(s"$root/${file.name}" -> Seq(spec)),
-      staged = Seq.empty, op = "delete", scannedVersion = Some(v0))
+      inserted = Seq.empty, op = "delete", scannedVersion = Some(v0))
     assert(res.rowsDeleted === 1L)
     assert(SnapshotLake.read(spark, root)
       .where(col("k").isin(101L, 102L)).count() === 0L)

@@ -157,7 +157,8 @@ class LakeMutationSpec extends SparkTestBase {
     // is a rewrite, not a conflict, when seen at base time; the conflict
     // arm needs the append INVISIBLE at base — drive rebaseCheck pure
     val base = SnapshotLake.snapshot(root)
-    val appended = SnapshotLake.FileStat("data/x/p.parquet", 420L, 470L, 51L)
+    val appended = SnapshotLake.FileStat("data/x/p.parquet", 420L, 470L, 51L,
+      bytes = 1024L)
     val head = base.copy(version = base.version + 1,
       files = base.files :+ appended)
     intercept[MergeConflictException] {

@@ -78,8 +78,8 @@ class LakeRuntimeFilterSpec extends SparkTestBase {
 
   test("filter() semantics are safe: unrecognized predicates prune nothing") {
     val files = Seq(
-      SnapshotLake.FileStat("data/a", 0L, 99L, 100L),
-      SnapshotLake.FileStat("data/b", 100L, 199L, 100L))
+      SnapshotLake.FileStat("data/a", 0L, 99L, 100L, bytes = 1024L),
+      SnapshotLake.FileStat("data/b", 100L, 199L, 100L, bytes = 1024L))
     val scan = LakeScan("/tmp/x", 0, files, 2,
       new org.apache.spark.sql.types.StructType(), "", statCol = "k")
     import org.apache.spark.sql.connector.expressions.Expressions

@@ -290,7 +290,7 @@ class SnapshotLakeSpec extends SparkTestBase {
     (0 until 1000).foreach { i =>
       SnapshotLake.commitFiles(root,
         Seq(SnapshotLake.FileStat(f"data/b-$i%05d/part-0.parquet",
-          i * 10L, i * 10L + 9, 10L)),
+          i * 10L, i * 10L + 9, 10L, bytes = 1024L)),
         "k", overwrite = false, bloomCol = None)
     }
     def manifestSize(v: Int): Long =
@@ -517,15 +517,16 @@ class SnapshotLakeSpec extends SparkTestBase {
   test("merge rebase carries non-overlapping concurrent appends, conflicts on overlap") {
     import SnapshotLake.{FileStat, Snapshot}
     val base = Snapshot(0, "k", None,
-      Seq(FileStat("data/a", 0, 24, 25), FileStat("data/b", 25, 49, 25)))
+      Seq(FileStat("data/a", 0, 24, 25, bytes = 1024L),
+        FileStat("data/b", 25, 49, 25, bytes = 1024L)))
     val keepAndTouched = base.files
     // non-overlapping append since base: carried through the rebase
-    val farAppend = FileStat("data/c", 1000, 1024, 25)
+    val farAppend = FileStat("data/c", 1000, 1024, 25, bytes = 1024L)
     val head1 = Snapshot(1, "k", None, base.files :+ farAppend)
     assert(SnapshotLake.rebaseCheck(base, head1, keepAndTouched, 30, 40) ===
       Seq(farAppend))
     // overlapping append: write-write conflict
-    val nearAppend = FileStat("data/d", 35, 60, 25)
+    val nearAppend = FileStat("data/d", 35, 60, 25, bytes = 1024L)
     val head2 = Snapshot(1, "k", None, base.files :+ nearAppend)
     intercept[SnapshotLake.MergeConflictException] {
       SnapshotLake.rebaseCheck(base, head2, keepAndTouched, 30, 40)
@@ -606,17 +607,19 @@ class SnapshotLakeSpec extends SparkTestBase {
     assert(SnapshotLake.read(spark, root).count() === 180L)
   }
 
-  test("protocol gate: a newer-protocol manifest refuses with an " +
-      "upgrade error; pre-protocol manifests read as legacy") {
+  test("protocol gate: an unstamped or newer-protocol manifest " +
+      "refuses with an upgrade error") {
     val root = freshRoot()
     SnapshotLake.commit(spark, root, tbl(0 until 10), "k")
     val mf = Paths.get(root, "_log", "v00000.manifest")
     val body = new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
     assert(body.contains("\tproto=1\t"), "commit did not stamp proto=")
-    // legacy chain (no stamp at all) keeps reading
+    // an unstamped manifest was never written by this lake: refused
     Files.write(mf, body.replace("\tproto=1", "")
       .getBytes(StandardCharsets.UTF_8))
-    assert(SnapshotLake.read(spark, root).count() === 10L)
+    intercept[IllegalStateException] {
+      SnapshotLake.read(spark, root).count()
+    }
     // a FUTURE protocol refuses loudly instead of half-reading
     Files.write(mf, body.replace("\tproto=1", "\tproto=9")
       .getBytes(StandardCharsets.UTF_8))
@@ -624,5 +627,68 @@ class SnapshotLakeSpec extends SparkTestBase {
       SnapshotLake.read(spark, root).count()
     }
     assert(e.getMessage.contains("protocol 9"))
+  }
+
+  test("every verb writes the one manifest format: a full header, the " +
+      "txns map carried forward, a byte size on every file entry") {
+    val root = freshRoot()
+    SnapshotLake.commit(spark, root, tbl(0 until 100), "k") // v0
+    val txnV = SnapshotLake.commit(spark, root, tbl(100 until 200), "k",
+      txn = Some(("app", 0L)))
+    SnapshotLake.commitPartitioned(spark, root,
+      (200 until 300).map(i => (i.toLong, (i % 2).toLong)).toDF("k", "v"),
+      "v", "k")
+    SnapshotLake.merge(spark, root,
+      upserts = (150 until 250).map(i => (i.toLong, i.toLong)).toDF("k", "v"),
+      deleteKeys = Seq(3L).toDF("k"))
+    SnapshotLake.deleteRows(spark, root, col("k") % 5 === 1L)
+    SnapshotLake.updateRows(spark, root, col("k") === 10L,
+      Seq("v" -> lit(-1L)))
+    SnapshotLake.compactLake(spark, root, targetRows = 1000L)
+    SnapshotLake.restore(root, txnV)
+    SnapshotLake.addColumn(root, "extra",
+      org.apache.spark.sql.types.LongType)
+    val ext = Files.createTempDirectory("lake_spec_ext_").toString
+    tbl(5000 until 5050).coalesce(1).write.mode("overwrite").parquet(ext)
+    SnapshotLake.addFiles(spark, root, ext)
+    // small appends carry the chain past the v16 checkpoint sidecar
+    var i = 0
+    while (SnapshotLake.headVersion(root) < SnapshotLake.CheckpointInterval + 1) {
+      SnapshotLake.commit(spark, root, tbl(300 + i until 301 + i), "k")
+      i += 1
+    }
+    val clone = freshRoot()
+    SnapshotLake.shallowClone(root, clone)
+    val head = SnapshotLake.headVersion(root)
+    def manifestLines(r: String, v: Int): Seq[String] =
+      Files.readAllLines(Paths.get(r, "_log", f"v$v%05d.manifest"),
+        StandardCharsets.UTF_8).asScala.toSeq
+    def sizes(line: String): Seq[Long] = line.split('\t').toSeq
+      .filter(_.startsWith("sz=")).map(_.stripPrefix("sz=").toLong)
+    val versions = (0 to head).map(root -> _) :+ (clone -> 0)
+    versions.foreach { case (r, v) =>
+      val lines = manifestLines(r, v)
+      val h = lines.head.split('\t')
+      assert(h.contains("proto=1"), s"$r v$v: ${lines.head}")
+      Seq("ridhw", "nf", "nr", "nlr", "ts").foreach(t =>
+        assert(h.exists(_.startsWith(t + "=")), s"$r v$v lacks $t="))
+      lines.tail.filterNot(_.startsWith("rm\t")).foreach { l =>
+        val sz = sizes(l)
+        assert(sz.size === 1 && sz.head > 0, s"$r v$v file line: $l")
+      }
+    }
+    (txnV to head).foreach(v =>
+      assert(SnapshotLake.snapshot(root, Some(v)).txns.get("app") ===
+        Some(0L), s"v$v dropped the txns map"))
+    val v16 = f"v${SnapshotLake.CheckpointInterval}%05d.ckpt-"
+    val logFiles = Files.list(Paths.get(root, "_log"))
+    try assert(logFiles.iterator().asScala
+      .exists(_.getFileName.toString.startsWith(v16)), s"no $v16 sidecar")
+    finally logFiles.close()
+    val ckptSz = spark.read
+      .parquet(Seq(root, clone).map(r => s"$r/_log/v*.ckpt-*.parquet"): _*)
+      .select("sz").as[Option[Long]].collect()
+    assert(ckptSz.nonEmpty && ckptSz.forall(_.exists(_ > 0)),
+      "checkpoint row without a positive sz")
   }
 }

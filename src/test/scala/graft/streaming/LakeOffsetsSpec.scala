@@ -37,35 +37,6 @@ class LakeOffsetsSpec extends SparkTestBase {
     assert(SnapshotLake.read(spark, root).count() === 110)
   }
 
-  test("legacy chains without a txns map keep their replay horizon") {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Housekeeping.tempDir("txn_legacy")
-    SnapshotLake.commit(spark, root, frame(50), "event_id",
-      txn = Some(("appL", 5L)))
-    // simulate a pre-map chain: strip the accumulated txns= field,
-    // keeping only the per-commit txn= record (what old code wrote)
-    val mf = Paths.get(root, "_log", "v00000.manifest")
-    val lines = Files.readAllLines(mf, StandardCharsets.UTF_8).asScala
-    val legacyHeader = lines.head.split('\t')
-      .filterNot(_.startsWith("txns=")).mkString("\t")
-    Files.write(mf, (legacyHeader +: lines.tail).asJava)
-    assert(SnapshotLake.snapshot(root).txns.isEmpty, "fixture broken")
-    // the horizon must come from the legacy record, not read as -1
-    assert(SnapshotLake.lastTxn(root, "appL") === 5L)
-    // and a replayed legacy batch must STILL be swallowed
-    val v = SnapshotLake.commit(spark, root, frame(50), "event_id",
-      txn = Some(("appL", 5L)))
-    assert(v === 0, "legacy replay landed — exactly-once broken on upgrade")
-    assert(SnapshotLake.read(spark, root).count() === 50)
-    // a genuinely new batch commits and re-enters the map
-    SnapshotLake.commit(spark, root, frame(10), "event_id",
-      txn = Some(("appL", 6L)))
-    assert(SnapshotLake.snapshot(root).txns.get("appL") === Some(6L))
-    assert(SnapshotLake.read(spark, root).count() === 60)
-  }
-
   test("txn identity is per-app: another writer's batch ids don't collide") {
     val root = Housekeeping.tempDir("txn_apps")
     SnapshotLake.commit(spark, root, frame(5), "event_id",
