@@ -1,5 +1,7 @@
 package graft.weather
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -142,7 +144,7 @@ object Weather {
   /** Q1 (Job1): per (city, month) total precipitation hours and mean
     * temperature. Inner join drops weather rows whose location_id has
     * no dim row (`Job1.java:80` emits only when both sides present).
-    * The 26-row dim is broadcast — the reference instead shuffled
+    * The 27-row dim is broadcast — the reference instead shuffled
     * every fact row to reducers keyed by location_id (`Job1.java:59-80`),
     * a plan that cannot scale past one hot reducer per city; a
     * broadcast hash join keeps the fact table's partitioning intact
@@ -211,16 +213,21 @@ object Weather {
 
   // -- driver-judged parity queries ------------------------------------
 
-  /** The location dim is the REFERENCE'S OWN artifact, read verbatim
-    * (27 rows incl. the `Kilinochchi[1]` quirk); the weather fact is
-    * the committed reconstruction (`tools/gen_weather_fixture.py` —
-    * the reference's weather file was stripped from its repo). Both
-    * are fixed-path fixtures, so the judged fns ignore the sfDir
-    * argument: these two queries ARE the reference, and don't scale
-    * with the synthetic TPC-H-ish tables.
+  /** The location dim is the reference's own file when present, else
+    * the committed twin (`fixtures/locationData.csv`: 27 rows, ids
+    * 0-26, the `Kilinochchi[1]` quirk; FIXTURES.md §A.1 says which
+    * rows are verbatim reference lines and which are placeholders).
+    * The weather fact is the committed reconstruction
+    * (`tools/gen_weather_fixture.py` — the reference's weather file
+    * was stripped from its repo). Both are fixed-path fixtures, so the
+    * judged fns ignore the sfDir argument: these two queries ARE the
+    * reference, and don't scale with the synthetic TPC-H-ish tables.
     */
   val WeatherCsv = graft.sources.Fixtures.path("fixtures/weather.csv")
-  val LocationCsv = "/root/reference/input/locationData.csv"
+  val ReferenceLocationCsv = "/root/reference/input/locationData.csv"
+  val LocationCsv: String =
+    if (Files.exists(Paths.get(ReferenceLocationCsv))) ReferenceLocationCsv
+    else graft.sources.Fixtures.path("fixtures/locationData.csv")
 
   /** Oracle-side equivalent of the engine's line-level CSV handling:
     * whole lines in, trim, drop blanks/headers, split keeping

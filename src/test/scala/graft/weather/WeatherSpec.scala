@@ -1,6 +1,6 @@
 package graft.weather
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import graft.SparkTestBase
 
 /** Micro-fixture tests asserting the reference's sharpest behavioral
@@ -102,7 +102,9 @@ class WeatherSpec extends SparkTestBase {
 
   test("real reference artifact: locationData.csv reads verbatim") {
     // the actual file the reference ships, not a synthesized twin
-    val loc = Weather.readLocation(spark, Weather.LocationCsv)
+    assume(Files.exists(Paths.get(Weather.ReferenceLocationCsv)),
+      s"reference artifact ${Weather.ReferenceLocationCsv} is not present")
+    val loc = Weather.readLocation(spark, Weather.ReferenceLocationCsv)
     val rows = loc.collect()
     assert(rows.length === 27, "27 location rows (ids 0-26)")
     val byId = rows.map(r => r.getInt(0) -> r.getString(7)).toMap
