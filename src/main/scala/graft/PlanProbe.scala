@@ -91,86 +91,12 @@ object StreamProbe {
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       (1 to 2).foreach { i =>
-        val (c0, s0) = graft.sources.SnapshotLake.statsAccounting
         val t0 = System.nanoTime()
         val n = Catalog.queryMap(name)(spark, dir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        val (c1, s1) = graft.sources.SnapshotLake.statsAccounting
-        println(f"[probe] $name run$i: $dt%.2f s ($n rows) " +
-          f"statsPass=${c1 - c0} calls ${s1 - s0}%.2f s")
+        println(f"[probe] $name run$i: $dt%.2f s ($n rows)")
       }
     }
-    spark.stop()
-  }
-}
-
-/** Dev utility: measure d7's two EXACT plans against each other on a
-  * given fixture — the r15/r16 verdict ask ("verify with one
-  * experiment whether an exact length/df bound prunes pairs before
-  * the count-agg without touching recall"). Both plans ARE the exact
-  * bounds in question: the size filter (J ≥ τ ⇒ min ≥ τ·max) rides
-  * both joins, and the prefix plan is the df-rank bound (PPJoin's
-  * prefix theorem — the only exact df-based prune there is). Usage:
-  * `sbt "runMain graft.D7Ablation [sfDir]"` (default sf0.1).
-  */
-object D7Ablation {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.get()
-    val docs = graft.operators.Dedup.docShingles(
-      graft.sources.Tables.documents(spark, dir))
-    val share = graft.operators.Dedup.hotShingleShare(docs)
-    println(f"[d7ablation] hotShingleShare=$share%.4f " +
-      s"(threshold ${graft.operators.Dedup.HotShareThreshold})")
-    def time(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val n = df.count() // warmup: codegen + file listing
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); df.count(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[d7ablation] $tag: median ${runs(1)}%.2f s ($n rows; " +
-        s"runs ${runs.map(t => f"$t%.2f").mkString(", ")})")
-    }
-    val tau = graft.operators.Dedup.D7Tau
-    time("count-agg")(graft.operators.Dedup.d7CountAgg(docs, tau))
-    time("prefix-filtered")(graft.operators.Dedup.d7Prefix(docs, tau))
-    spark.stop()
-  }
-}
-
-/** Dev utility: measure q70's native broadcast range join against the
-  * stock BroadcastNestedLoopJoin formulation of the identical query
-  * (same fixture, same aggregate) — the ablation behind the custom
-  * operator's existence. Usage:
-  * `sbt "runMain graft.RangeJoinAblation [sfDir]"` (default sf0.1).
-  */
-object RangeJoinAblation {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.get()
-    def time(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      df.count() // warmup: codegen + file listing
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); df.count(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[ablation] $tag: median ${runs(1)}%.2f s " +
-        s"(runs ${runs.map(t => f"$t%.2f").mkString(", ")})")
-    }
-    val iv = spark.range(0, 4096).select(
-      col("id").as("interval_id"),
-      (col("id") * 9973 % 100000 * 100).as("lo_cents"),
-      ((col("id") * 9973 % 100000 + 10 + col("id") % 200) * 100).as("hi_cents"))
-    def probe = graft.sources.Tables.lineitem(spark, dir)
-      .select(round(col("l_extendedprice") * 100).cast(LongType).as("cents"))
-    time("native-range-join")(
-      graft.operators.Joins.q70RangeJoinNative(spark, dir))
-    time("stock-broadcast-nlj")(
-      probe.join(broadcast(iv),
-          col("cents") >= col("lo_cents") && col("cents") < col("hi_cents"))
-        .groupBy(col("interval_id"))
-        .agg(count(lit(1)).as("n_items"), sum(col("cents")).as("sum_cents"))
-        .orderBy(col("interval_id")))
     spark.stop()
   }
 }

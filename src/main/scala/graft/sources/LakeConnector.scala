@@ -1154,7 +1154,7 @@ final class LakeScanBuilder(root: String, asOf: Option[Int],
   // -- manifest-answered aggregates ----------------------------------
   // COUNT(*) = Σ per-file row counts; MIN/MAX(statCol) = min lo /
   // max hi across the manifest — each already maintained by the
-  // commit-time stats pass, so a full-table count or stat-column
+  // write-time stats, so a full-table count or stat-column
   // extremum is a KB-scale metadata walk, zero data files opened.
   // Complete pushdown only (one exact row): Spark offers it only
   // when no residual filters remain, and we keep every filter

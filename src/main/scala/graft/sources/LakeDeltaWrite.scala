@@ -115,9 +115,10 @@ final class LakeDeltaBatchWrite(root: String, schema: StructType,
     Files.createDirectories(Paths.get(LakeWrite.stagingDir(root)))
     val phys = LakeWrite.physicalFor(root, schema, overwrite = false)
     // commit resolves the stat envelope from the PINNED scanned
-    // version — mirror it exactly so the task-side specKey matches
+    // version — mirror it exactly so the task-side specKey matches.
+    // A DELETE's delta carries no row columns and writes no file.
     val spec =
-      if (scannedVersion < 0) None
+      if (scannedVersion < 0 || schema.isEmpty) None
       else {
         val base = SnapshotLake.snapshot(root, Some(scannedVersion))
         Some(StatsSpec(base.statCol, base.bloomCol,
@@ -167,6 +168,7 @@ final class LakeDeltaWriterFactory(root: String,
     confKVs: Map[String, String], matConfKVs: Map[String, String],
     statsSpec: Option[StatsSpec] = None)
     extends DeltaWriterFactory {
+  SegStatsAcc.check(confKVs, statsSpec)
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new LakeDeltaDataWriter(root, confKVs, matConfKVs, partitionId, taskId,

@@ -39,12 +39,13 @@ import org.apache.spark.sql.types.StructType
   *     nothing a running, failed, or speculatively-retried task
   *     writes is ever visible;
   *  2. the driver's BatchWrite.commit moves EXACTLY the acknowledged
-  *     non-empty files into a fresh `data/b-*` batch dir, runs the
-  *     standard stats pass over them ([[SnapshotLake.statsFor]]:
-  *     per-file min/max + optional bloom + dim2 in one aggregate),
-  *     and publishes through [[SnapshotLake.commitFiles]]'s
-  *     optimistic-concurrency loop — a zombie task's orphan is named
-  *     by no message, stays in staging, and can never surface;
+  *     non-empty files into a fresh `data/b-*` batch dir, builds their
+  *     manifest entries from the stats each task accumulated while
+  *     writing ([[SegStatsAcc]]: per-file min/max + sum + optional
+  *     bloom + dim2 + column stats), and publishes through
+  *     [[SnapshotLake.commitFiles]]'s optimistic-concurrency loop — a
+  *     zombie task's orphan is named by no message, stays in staging,
+  *     and can never surface;
   *  3. BatchWrite.abort deletes the staged files, leaving the table
   *     untouched.
   *
@@ -319,6 +320,12 @@ object LakeWrite {
       "spark.sql.session.timeZone" ->
         g("spark.sql.session.timeZone", "UTC"))
   }
+
+  /** The physical row schema a [[writeConf]] carries. */
+  def rowSchema(confKVs: Map[String, String]): StructType =
+    org.apache.spark.sql.types.DataType
+      .fromJson(confKVs(ParquetWriteSupport.SPARK_ROW_SCHEMA))
+      .asInstanceOf[StructType]
 }
 
 /** A partitioned write's layout spec: the partition column (name,
@@ -363,15 +370,10 @@ final case class LakeStaged(name: String, rows: Long, bytes: Long,
     idMaxUnit: Long = -1L,
     /** Per-file stats accumulated WHILE WRITING by the task's
       * [[LakeDataWriter]] — on the DSv2 paths and the Scala verbs'
-      * [[LakeCommit.writeRouted]] alike: when every acknowledged file
-      * carries a [[SegStats]] whose spec matches the publish-time
-      * resolution, the driver builds the manifest entries directly
-      * and the [[SnapshotLake.statsFor]] read-back job is skipped.
-      * `None` (a column shape the accumulator does not cover) falls
-      * back to the read-back pass — same values either way, certified
-      * by TaskSideStatsSpec.
+      * [[LakeCommit.writeRouted]] alike; the driver builds the
+      * manifest entry from them directly ([[LakeCommit.land]]).
       */
-    stats: Option[SegStats] = None)
+    stats: SegStats)
     extends WriterCommitMessage
 
 /** The stat-envelope configuration a writer accumulated against —
@@ -388,79 +390,80 @@ final case class StatsSpec(statCol: String, bloomCol: Option[String],
     .mkString("|")
 }
 
-/** Task-side per-file statistics, value-identical to one row of
-  * [[SnapshotLake.statsFor]]'s aggregate (same null/overflow
-  * conventions — see [[SegStatsAcc]]).
+/** One file's manifest statistics, as [[SegStatsAcc]] accumulates
+  * them (null/overflow conventions documented there).
   */
 final case class SegStats(specKey: String, lo: Long, hi: Long,
     su: Option[Long], bloom: Option[Array[Byte]],
     dim2: Option[(Long, Long)],
     cstats: Map[String, SnapshotLake.ColStat])
 
-/** Streaming replication of the read-back stats aggregate, fed one
-  * InternalRow at a time as the parquet writer consumes it. Exact
-  * equivalences replicated (TaskSideStatsSpec pins each against a
-  * statsFor read-back of the same files):
+/** The lake's one per-file statistics implementation, fed one
+  * InternalRow at a time — by the task writer as the parquet writer
+  * consumes each row, and by `add_files` over each imported file.
+  * Each value equals a plain Spark aggregate over the file
+  * (TaskSideStatsSpec and AddFilesSpec pin them against one):
   *
-  *  - `lo`/`hi` = min/max(statCol) cast long; all-null → 0 (the
-  *    Row.getLong-on-null convention the read-back path lands on);
+  *  - `lo`/`hi` = min/max(statCol) cast long; all-null → 0;
   *  - `su` = try_sum(statCol): None on overflow or all-null. Known
   *    corner (deliberately accepted): overflow detection is
   *    order-dependent — the sequential Math.addExact can overflow at
-  *    an intermediate prefix where the read-back aggregate's split
-  *    ordering would not (or vice versa), so on overflow-EDGE data
-  *    the two paths may disagree about recording the sum. Results
-  *    stay correct either way: an absent sum only makes the manifest
-  *    SUM pushdown refuse and fall back to scanning. A strict
-  *    equality check on such data should expect this, not flag it;
-  *
-  *  - bloom = [[SnapshotLake.Bloom.set]] per non-null value — a NULL
-  *    bloom-column value disables the accumulator (the UDAF path's
-  *    null handling is its own; fall back rather than guess);
+  *    an intermediate prefix where a split aggregate would not (or
+  *    vice versa), so on overflow-EDGE data the two may disagree
+  *    about recording the sum. Results stay correct either way: an
+  *    absent sum only makes the manifest SUM pushdown refuse and fall
+  *    back to scanning;
+  *  - dim2 = min/max(statCol2) cast long, all-null → 0;
+  *  - bloom = [[SnapshotLake.Bloom.set]] per non-null value; nulls
+  *    are skipped (the bloom answers only `=`/`IN`, which never
+  *    match NULL);
   *  - cstats per [[SnapshotLake.csColsFor]] column: min/max (ints)
   *    or length-sum/length-max (strings, in CHARACTERS — Spark's
   *    `length`), null count, and the K-smallest-distinct KMV over
   *    `xxhash64(col) & Long.MaxValue` — the hash evaluated by the
-  *    REAL catalyst XxHash64 expression bound to the row, so the
-  *    task-side hash cannot diverge from the SQL one (nulls hash to
-  *    the seed, exactly as in the aggregate);
+  *    REAL catalyst XxHash64 expression bound to the row, so it
+  *    cannot diverge from the SQL one (nulls hash to the seed);
   *  - a column with zero non-null values records no entry.
   *
-  * Column shapes outside the replicated set (non-integral stat
-  * columns, castable bloom columns) mark the accumulator unsupported
-  * and the publish path falls back to the read-back pass.
+  * The stat, dim2 and bloom columns must be integral (tinyint,
+  * smallint, int, bigint): construction refuses any other type, or a
+  * column the schema lacks, naming it. The writers construct one on
+  * the driver first ([[SegStatsAcc.check]]) so the refusal comes
+  * before any task stages a file.
   */
 final class SegStatsAcc(schema: StructType, spec: StatsSpec) {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+  import org.apache.spark.sql.types.{
+    ByteType, IntegerType, LongType, ShortType}
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
 
   private def idxOf(name: String): Int =
     schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
-  private def longReader(name: String): Option[Int => InternalRow => Long] =
-    Some(idxOf(name)).filter(_ >= 0).flatMap { i =>
-      schema.fields(i).dataType match {
-        case LongType => Some((j: Int) => (r: InternalRow) => r.getLong(j))
-        case IntegerType =>
-          Some((j: Int) => (r: InternalRow) => r.getInt(j).toLong)
-        case _ => None
-      }
-    }
-
-  private val statIdx = idxOf(spec.statCol)
-  private val statGet = longReader(spec.statCol).map(_(statIdx))
-  private val stat2Idx = spec.statCol2.map(idxOf).getOrElse(-1)
-  private val stat2Get =
-    spec.statCol2.flatMap(longReader).map(_(stat2Idx))
-  private val bloomIdx = spec.bloomCol.map(idxOf).getOrElse(-1)
-  private val bloomGet =
-    spec.bloomCol.flatMap(longReader).map(_(bloomIdx))
-
-  /** Disabled when a declared column is missing or outside the
-    * replicated long/int shapes — publish falls back to statsFor.
+  /** `(index, reader)` of an envelope column; refuses a missing or
+    * non-integral column.
     */
-  var supported: Boolean = statGet.isDefined &&
-    (spec.statCol2.isEmpty || stat2Get.isDefined) &&
-    (spec.bloomCol.isEmpty || bloomGet.isDefined)
+  private def longReader(role: String,
+      name: String): (Int, InternalRow => Long) = {
+    val i = idxOf(name)
+    require(i >= 0, s"$role column '$name' is not in the written " +
+      s"schema (${schema.fieldNames.mkString(", ")})")
+    (i, schema.fields(i).dataType match {
+      case LongType => (r: InternalRow) => r.getLong(i)
+      case IntegerType => (r: InternalRow) => r.getInt(i).toLong
+      case ShortType => (r: InternalRow) => r.getShort(i).toLong
+      case ByteType => (r: InternalRow) => r.getByte(i).toLong
+      case other => throw new IllegalArgumentException(
+        s"$role column '$name' has type ${other.simpleString}: lake " +
+          "stats cover only tinyint, smallint, int and bigint columns")
+    })
+  }
+
+  // hoisted out of Option so the per-row path allocates nothing
+  // (this runs once per written row — the write hot loop)
+  private val (statIdx, statFn) = longReader("stat", spec.statCol)
+  private val (stat2Idx, stat2Fn) =
+    spec.statCol2.map(longReader("dim2", _)).getOrElse((-1, null))
+  private val (bloomIdx, bloomFn) =
+    spec.bloomCol.map(longReader("bloom", _)).getOrElse((-1, null))
 
   private val cs: Array[(String, Boolean, Int)] =
     SnapshotLake.csColsFor(schema, spec.statCol, spec.statCol2)
@@ -475,7 +478,6 @@ final class SegStatsAcc(schema: StructType, spec: StatsSpec) {
   private val csIsLong: Array[Boolean] =
     cs.map { case (_, _, i) => schema.fields(i).dataType == LongType }
 
-  private var rows = 0L
   private var lo = Long.MaxValue; private var hi = Long.MinValue
   private var seenStat = false
   private var sum = 0L; private var sumOverflow = false
@@ -490,16 +492,8 @@ final class SegStatsAcc(schema: StructType, spec: StatsSpec) {
   private val csKmv = Array.fill(cs.length)(
     new java.util.TreeSet[java.lang.Long]())
 
-  // hoisted out of Option so the per-row path allocates nothing
-  // (this runs once per written row — the write hot loop)
-  private val statFn = statGet.orNull
-  private val stat2Fn = stat2Get.orNull
-  private val bloomFn = bloomGet.orNull
-
   def update(row: InternalRow): Unit = {
-    if (!supported) return
-    rows += 1
-    if (statFn != null && !row.isNullAt(statIdx)) {
+    if (!row.isNullAt(statIdx)) {
       val v = statFn(row); seenStat = true
       if (v < lo) lo = v
       if (v > hi) hi = v
@@ -512,10 +506,8 @@ final class SegStatsAcc(schema: StructType, spec: StatsSpec) {
       if (v < lo2) lo2 = v
       if (v > hi2) hi2 = v
     }
-    if (bloomFn != null) {
-      if (row.isNullAt(bloomIdx)) { supported = false; return }
+    if (bloomFn != null && !row.isNullAt(bloomIdx))
       SnapshotLake.Bloom.set(bloomBits, bloomFn(row))
-    }
     var i = 0
     while (i < cs.length) {
       val isStr = cs(i)._2
@@ -547,12 +539,9 @@ final class SegStatsAcc(schema: StructType, spec: StatsSpec) {
     }
   }
 
-  /** The finished per-file stats (None when a row disabled the
-    * accumulator mid-stream).
-    */
-  def finish: Option[SegStats] =
-    if (!supported) None
-    else Some(SegStats(spec.key,
+  /** The finished per-file stats. */
+  def finish: SegStats =
+    SegStats(spec.key,
       lo = if (seenStat) lo else 0L,
       hi = if (seenStat) hi else 0L,
       su = if (seenStat && !sumOverflow) Some(sum) else None,
@@ -564,7 +553,17 @@ final class SegStatsAcc(schema: StructType, spec: StatsSpec) {
           n.toLowerCase(java.util.Locale.ROOT) -> SnapshotLake.ColStat(
             csLo(i), csHi(i), csNulls(i),
             csKmv(i).iterator().asScala.map(_.longValue()).toVector)
-      }.toMap))
+      }.toMap)
+}
+
+object SegStatsAcc {
+  /** The driver-side refusal every lake write runs before any task
+    * stages a file: one accumulator built over the write schema the
+    * tasks will bind (the parquet write conf's row schema), so an
+    * envelope column it cannot cover fails here, under the same rule.
+    */
+  def check(confKVs: Map[String, String], spec: Option[StatsSpec]): Unit =
+    spec.foreach(new SegStatsAcc(LakeWrite.rowSchema(confKVs), _): Unit)
 }
 
 /** A partitioned task's acknowledged files — one per partition-value
@@ -586,8 +585,9 @@ final case class IdentityFill(col: String, idx: Int, start: Long,
     step: Long, allowExplicit: Boolean, baseUnits: Long)
 
 /** The driver-side publish shared by the batch and streaming commit
-  * paths: acknowledged staged files → batch dir → stats pass →
-  * optimistic manifest publish, with the txn replay short-circuit.
+  * paths: acknowledged staged files → batch dir → manifest entries
+  * from the tasks' stats → optimistic manifest publish, with the txn
+  * replay short-circuit.
   */
 private[sources] object LakeCommit {
   def discard(root: String, m: LakeStaged): Unit =
@@ -601,56 +601,39 @@ private[sources] object LakeCommit {
     case _ => Seq.empty
   }
 
-  /** Build the manifest entries from TASK-SIDE stats when every live
-    * staged file carries a [[SegStats]] accumulated under exactly the
-    * publish-time stat envelope (specKey match) — skipping the
-    * write-then-re-read [[SnapshotLake.statsFor]] pass, which re-reads
-    * every byte just written as a second Spark job (optimization r15,
-    * guide §1.2/§6). Any miss — a column outside the accumulator's
-    * replicated set, spec drift from a concurrent first-commit —
-    * returns None and the caller falls back to the read-back pass;
-    * the two paths are value-identical (TaskSideStatsSpec pins
-    * FileStat equality on shared fixtures).
-    */
-  private[sources] def taskStatFiles(batch: String,
-      live: Seq[LakeStaged], spec: StatsSpec)
-      : Option[Seq[SnapshotLake.FileStat]] =
-    if (live.isEmpty || !live.forall(_.stats.exists(_.specKey == spec.key)))
-      None
-    else Some(live.map { m =>
-      val st = m.stats.get
-      // the task's byte size is invariant under the staging→batch
-      // ATOMIC_MOVE
-      SnapshotLake.FileStat(s"$batch/${m.name}", st.lo, st.hi, m.rows,
-        m.bytes, bloom = st.bloom, dim2 = st.dim2,
-        sum = st.su, cstats = st.cstats)
-    }.sortBy(_.name))
-
   /** Land acknowledged staged files in a fresh batch dir — each moved
     * (ATOMIC_MOVE) to its batch-relative target name — and build their
-    * manifest entries: task-side stats when every file carries them
-    * ([[taskStatFiles]]), else the read-back pass. The one staged →
-    * batch move of every lake write; each entry comes back (sorted by
-    * name) beside the message that staged it.
+    * manifest entries from the stats each task accumulated while
+    * writing. The one staged → batch move of every lake write; each
+    * entry comes back (sorted by name) beside the message that staged
+    * it. A file staged under another stat envelope than the one the
+    * publish resolved (a concurrent first commit changed it) never
+    * publishes: every staged file is discarded and the write
+    * conflicts.
     */
   private[sources] def land(root: String, live: Seq[(LakeStaged, String)],
-      spec: StatsSpec): Seq[(SnapshotLake.FileStat, LakeStaged)] =
-    if (live.isEmpty) Seq.empty
-    else {
-      val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
-      live.foreach { case (m, to) =>
-        val dest = Paths.get(root, batch, to)
-        Files.createDirectories(dest.getParent)
-        Files.move(Paths.get(LakeWrite.stagingDir(root), m.name), dest,
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      val byName = live.map { case (m, to) => s"$batch/$to" -> m }.toMap
-      taskStatFiles(batch,
-          live.map { case (m, to) => m.copy(name = to) }, spec)
-        .getOrElse(SnapshotLake.statsFor(SparkSession.active, root, batch,
-          spec.statCol, spec.bloomCol, spec.bloomBytes, spec.statCol2))
-        .map(f => f -> byName(f.name))
+      spec: StatsSpec): Seq[(SnapshotLake.FileStat, LakeStaged)] = {
+    live.find(_._1.stats.specKey != spec.key).foreach { case (m, _) =>
+      live.foreach { case (l, _) => discard(root, l) }
+      throw new SnapshotLake.MergeConflictException(
+        s"the stat envelope of $root changed under the write: files " +
+          s"were staged under '${m.stats.specKey}', the head publishes " +
+          s"under '${spec.key}'; retry the write")
     }
+    val batch = s"data/b-${UUID.randomUUID().toString.take(8)}"
+    live.map { case (m, to) =>
+      val dest = Paths.get(root, batch, to)
+      Files.createDirectories(dest.getParent)
+      Files.move(Paths.get(LakeWrite.stagingDir(root), m.name), dest,
+        StandardCopyOption.ATOMIC_MOVE)
+      val st = m.stats
+      // the task's byte size is invariant under the staging→batch
+      // ATOMIC_MOVE
+      SnapshotLake.FileStat(s"$batch/$to", st.lo, st.hi, m.rows, m.bytes,
+        bloom = st.bloom, dim2 = st.dim2, sum = st.su,
+        cstats = st.cstats) -> m
+    }.sortBy(_._1.name)
+  }
 
   /** Tag a landed file with the partition value(s) its writer declared. */
   private def tagPart(f: SnapshotLake.FileStat, m: LakeStaged,
@@ -709,6 +692,7 @@ private[sources] object LakeCommit {
     val keep = fields.indices.filterNot(bIdx.contains)
     val confKVs = LakeWrite.writeConf(StructType(keep.map(fields(_)))) ++
       writeOptions
+    SegStatsAcc.check(confKVs, Some(spec))
     val nullName = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
     Files.createDirectories(Paths.get(LakeWrite.stagingDir(root)))
     val segs = in.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
@@ -732,40 +716,43 @@ private[sources] object LakeCommit {
     }, spec).map { case (f, m) => f -> m.partVal }
   }
 
-  /** The stat envelope the batch-append/streaming publish resolves —
-    * factory-time mirror of [[publish]]'s own resolution, so the
-    * task-side specKey can only match when publish would compute
-    * stats under the same rules. None (unresolvable statCol: first
-    * commit without the option) simply disables task-side stats.
+  private def headOf(root: String): Option[SnapshotLake.Snapshot] =
+    if (SnapshotLake.headVersion(root) >= 0) Some(SnapshotLake.snapshot(root))
+    else None
+
+  /** The stat envelope a write publishes under: options over the
+    * head's statCol; a replace (`inherit`) also takes the head's
+    * bloomCol/statCol2. The writer factories resolve it when they are
+    * built and the commit resolves it again — files staged under a
+    * different one conflict in [[land]]. None: no head and no statCol.
     */
-  private[sources] def publishSpec(root: String,
-      opts: Map[String, String]): Option[StatsSpec] = {
-    val head =
-      if (SnapshotLake.headVersion(root) >= 0)
-        Some(SnapshotLake.snapshot(root))
-      else None
+  private def envelope(opts: Map[String, String],
+      head: Option[SnapshotLake.Snapshot],
+      inherit: Boolean): Option[StatsSpec] = {
+    val inherited = head.filter(_ => inherit)
     opts.get("statcol").orElse(head.map(_.statCol)).map { sc =>
-      StatsSpec(sc, opts.get("bloomcol"),
+      StatsSpec(sc, opts.get("bloomcol").orElse(inherited.flatMap(_.bloomCol)),
         opts.get("bloombytes").map(_.toInt).getOrElse(1024),
-        opts.get("statcol2"))
+        opts.get("statcol2").orElse(inherited.flatMap(_.statCol2)))
     }
   }
 
-  /** Factory-time mirror of [[publishPartitionReplace]]'s envelope
-    * resolution (bloom/statCol2 inherit from the head there).
+  /** The refusal of a write that resolves no envelope. */
+  private[sources] def noEnvelope(root: String): Nothing =
+    throw new IllegalArgumentException(
+      s"first commit to empty lake $root requires OPTIONS(statCol …)")
+
+  /** The envelope of a batch append or streaming epoch ([[publish]]). */
+  private[sources] def publishSpec(root: String,
+      opts: Map[String, String]): Option[StatsSpec] =
+    envelope(opts, headOf(root), inherit = false)
+
+  /** The envelope of a replace ([[publishPartitionReplace]], the
+    * row-level rewrites).
     */
   private[sources] def replaceSpec(root: String,
-      opts: Map[String, String]): Option[StatsSpec] = {
-    val head =
-      if (SnapshotLake.headVersion(root) >= 0)
-        Some(SnapshotLake.snapshot(root))
-      else None
-    opts.get("statcol").orElse(head.map(_.statCol)).map { sc =>
-      StatsSpec(sc, opts.get("bloomcol").orElse(head.flatMap(_.bloomCol)),
-        opts.get("bloombytes").map(_.toInt).getOrElse(1024),
-        opts.get("statcol2").orElse(head.flatMap(_.statCol2)))
-    }
-  }
+      opts: Map[String, String]): Option[StatsSpec] =
+    envelope(opts, headOf(root), inherit = true)
 
   /** The manifest tag column a level's files tag under: bucket and
     * truncate transforms carry their parameter in the tag name;
@@ -824,16 +811,9 @@ private[sources] object LakeCommit {
     }
     val (live, empty) = staged.partition(_.rows > 0)
     empty.foreach(discard(root, _))
-    val head =
-      if (SnapshotLake.headVersion(root) >= 0)
-        Some(SnapshotLake.snapshot(root))
-      else None
-    val statCol = opts.get("statcol").orElse(head.map(_.statCol))
-      .getOrElse(throw new IllegalArgumentException(
-        s"first commit to empty lake $root requires OPTIONS(statCol …)"))
-    val bloomCol = opts.get("bloomcol")
-    val bloomBytes = opts.get("bloombytes").map(_.toInt).getOrElse(1024)
-    val statCol2 = opts.get("statcol2")
+    val head = headOf(root)
+    val spec = envelope(opts, head, inherit = false)
+      .getOrElse(noEnvelope(root))
     // replay short-circuit BEFORE moving files (the in-loop check in
     // commitFiles still guards the race window)
     txn.foreach { case (a, b) =>
@@ -845,12 +825,12 @@ private[sources] object LakeCommit {
       // zero acknowledged rows: an overwrite still truncates (empty
       // file list, txn map carried); an empty append publishes nothing
       if (overwrite)
-        SnapshotLake.commitFiles(root, Seq.empty, statCol, overwrite = true,
-          bloomCol, statCol2, txn, schemaJson): Unit
+        SnapshotLake.commitFiles(root, Seq.empty, spec.statCol,
+          overwrite = true, spec.bloomCol, spec.statCol2, txn,
+          schemaJson): Unit
       return
     }
-    val files = land(root, live.map(m => m -> m.name),
-      StatsSpec(statCol, bloomCol, bloomBytes, statCol2))
+    val files = land(root, live.map(m => m -> m.name), spec)
     // partitioned write: each staged file declared its single value —
     // carry it into the manifest tag the prune/SPJ machinery reads.
     // Bucketed tables tag under `bucketN(c)` (the value is a bucket
@@ -874,8 +854,8 @@ private[sources] object LakeCommit {
         tagged.map(_.copy(sorted = Some(ph)))
       case None => tagged
     }
-    SnapshotLake.commitFiles(root, stamped, statCol, overwrite, bloomCol,
-      statCol2, txn, schemaJson, idReserve): Unit
+    SnapshotLake.commitFiles(root, stamped, spec.statCol, overwrite,
+      spec.bloomCol, spec.statCol2, txn, schemaJson, idReserve): Unit
   }
 
   /** Partition-scoped INSERT OVERWRITE: the files tagged with the
@@ -906,14 +886,10 @@ private[sources] object LakeCommit {
     val head = SnapshotLake.snapshot(root)
     val replaced = head.files.filter(_.part.exists { case (c, v) =>
       c.equalsIgnoreCase(colName) && values(v) }).map(_.name)
-    val statCol = opts.get("statcol").getOrElse(head.statCol)
-    val bloomCol = opts.get("bloomcol").orElse(head.bloomCol)
-    val bloomBytes = opts.get("bloombytes").map(_.toInt).getOrElse(1024)
-    val statCol2 = opts.get("statcol2").orElse(head.statCol2)
+    val spec = envelope(opts, Some(head), inherit = true).get
     val tagName2 = opts.get("partcol2").map(pc2 =>
       tagNameFor(opts, pc2, "partbuckets2", "parttrunc2"))
-    val newFiles = land(root, live.map(m => m -> m.name),
-        StatsSpec(statCol, bloomCol, bloomBytes, statCol2))
+    val newFiles = land(root, live.map(m => m -> m.name), spec)
       .map { case (f, m) => tagPart(f, m, colName, tagName2) }
       // partition replace runs the same planned-sort batch write,
       // so its replacement files keep the sorted-layout stamp —
@@ -923,7 +899,7 @@ private[sources] object LakeCommit {
       .map(f => sortStamp.fold(f)(sc => f.copy(sorted =
         Some(physSortStamp(sc, head.schema, schemaJson)))))
     SnapshotLake.commitReplaceFiles(root, replaced, newFiles, "overwrite",
-      statCol, bloomCol, statCol2, schemaJson): Unit
+      spec.statCol, spec.bloomCol, spec.statCol2, schemaJson): Unit
   }
 }
 
@@ -1008,21 +984,12 @@ final class LakeReplaceBatchWrite(root: String, schema: StructType,
     val replaced = scanOf().fold(Seq.empty[String])(
       _.effectiveFiles.map(_.name))
     if (live.isEmpty && replaced.isEmpty) return // vacuous (empty chain)
-    val head =
-      if (SnapshotLake.headVersion(root) >= 0)
-        Some(SnapshotLake.snapshot(root))
-      else None
-    val statCol = opts.get("statcol").orElse(head.map(_.statCol))
-      .getOrElse(throw new IllegalArgumentException(
-        s"first commit to empty lake $root requires OPTIONS(statCol …)"))
-    val bloomCol = opts.get("bloomcol").orElse(head.flatMap(_.bloomCol))
-    val bloomBytes = opts.get("bloombytes").map(_.toInt).getOrElse(1024)
-    val statCol2 = opts.get("statcol2").orElse(head.flatMap(_.statCol2))
-    val newFiles = LakeCommit.land(root, live.map(m => m -> m.name),
-        StatsSpec(statCol, bloomCol, bloomBytes, statCol2))
+    val spec = LakeCommit.replaceSpec(root, opts)
+      .getOrElse(LakeCommit.noEnvelope(root))
+    val newFiles = LakeCommit.land(root, live.map(m => m -> m.name), spec)
       .map { case (f, m) => if (matNames(m.name)) f.copy(ridMat = true) else f }
     val v = SnapshotLake.commitReplaceFiles(root, replaced, newFiles, op,
-      statCol, bloomCol, statCol2, Some(schema.json))
+      spec.statCol, spec.bloomCol, spec.statCol2, Some(schema.json))
     // change-feed tables materialize the CDC sidecar for every CoW
     // rewrite — the streaming CDF replays it (a rewrite's row changes
     // are not derivable from the manifest diff alone)
@@ -1037,6 +1004,7 @@ final class LakeReplaceBatchWrite(root: String, schema: StructType,
 final class LakeReplaceRidWriterFactory(root: String,
     confKVs: Map[String, String], ridIdx: Int,
     statsSpec: Option[StatsSpec] = None) extends DataWriterFactory {
+  SegStatsAcc.check(confKVs, statsSpec)
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new LakeReplaceRidWriter(root, confKVs, ridIdx, partitionId, taskId,
@@ -1096,9 +1064,11 @@ final class LakeBatchWrite(root: String, schema: StructType,
       LakeWrite.writeConf(LakeWrite.physicalFor(root, schema, overwrite)),
       partSpec, identity,
       // resolve the stat envelope the COMMIT path will publish under
-      // (replaceWhere routes to the partition-replace resolution)
-      if (replaceWhere.isDefined) LakeCommit.replaceSpec(root, opts)
-      else LakeCommit.publishSpec(root, opts))
+      // (replaceWhere routes to the partition-replace resolution); no
+      // envelope can commit, so refuse before any task runs
+      Some((if (replaceWhere.isDefined) LakeCommit.replaceSpec(root, opts)
+        else LakeCommit.publishSpec(root, opts))
+        .getOrElse(LakeCommit.noEnvelope(root))))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1145,7 +1115,8 @@ final class LakeStreamingWrite(root: String, schema: StructType,
     Files.createDirectories(Paths.get(LakeWrite.stagingDir(root)))
     val inner = new LakeWriterFactory(root,
       LakeWrite.writeConf(LakeWrite.physicalFor(root, schema, overwrite)),
-      statsSpec = LakeCommit.publishSpec(root, opts))
+      statsSpec = Some(LakeCommit.publishSpec(root, opts)
+        .getOrElse(LakeCommit.noEnvelope(root))))
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
@@ -1170,6 +1141,7 @@ final class LakeWriterFactory(root: String,
     partSpec: Option[LakePartSpec] = None,
     identity: Option[IdentityFill] = None,
     statsSpec: Option[StatsSpec] = None) extends DataWriterFactory {
+  SegStatsAcc.check(confKVs, statsSpec)
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(root, confKVs, partitionId, taskId, partSpec,
@@ -1192,10 +1164,7 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
 
   // the physical write schema rides in the parquet write conf the
   // factory already ships — the stats accumulator binds to it
-  private lazy val writeSchema: StructType =
-    org.apache.spark.sql.types.DataType
-      .fromJson(confKVs(ParquetWriteSupport.SPARK_ROW_SCHEMA))
-      .asInstanceOf[StructType]
+  private lazy val writeSchema: StructType = LakeWrite.rowSchema(confKVs)
   private var acc: SegStatsAcc = null
 
   // identity generation state: units consumed by THIS task
@@ -1243,14 +1212,15 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
       s"${UUID.randomUUID().toString.take(8)}.parquet"
     segPath = Paths.get(LakeWrite.stagingDir(root), segName)
     rows = 0L
-    acc = statsSpec.map(new SegStatsAcc(writeSchema, _)).orNull
+    acc = new SegStatsAcc(writeSchema,
+      statsSpec.getOrElse(LakeCommit.noEnvelope(root)))
     writer = LakeWrite.openParquet(segPath, confKVs)
   }
 
   private def closeSeg(): Unit = if (writer != null) {
     writer.close()
     finished += LakeStaged(segName, rows, Files.size(segPath), curVal,
-      curVal2, stats = Option(acc).flatMap(_.finish))
+      curVal2, stats = acc.finish)
     writer = null
   }
 
@@ -1335,7 +1305,7 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
       closeSeg(); curVal = v; curVal2 = v2; openSeg()
     }
     writer.write(row)
-    if (acc != null) acc.update(row)
+    acc.update(row)
     rows += 1
   }
 
@@ -1344,14 +1314,11 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
     // the high-water this task consumed to, EXCLUSIVE (-1: nothing
     // generated — an all-explicit or identity-free write)
     val idMax = if (idLocal > 0) idUnitBase + idLocal else -1L
-    if (partSpec.isEmpty && finished.forall(_.partVal.isEmpty))
-      finished.headOption.map(_.copy(idMaxUnit = idMax))
-        .getOrElse(LakeStaged(
-          // an empty unpartitioned task still acknowledges a zero-row
-          // marker (publish drops it), preserving the old protocol
-          s"part-$partitionId-$taskId-" +
-            s"${UUID.randomUUID().toString.take(8)}.parquet", 0L, 0L))
-    else LakeStagedSet(finished.toSeq, idMax)
+    finished.toSeq match {
+      case Seq(m) if partSpec.isEmpty && m.partVal.isEmpty =>
+        m.copy(idMaxUnit = idMax)
+      case fs => LakeStagedSet(fs, idMax) // an empty task acks none
+    }
   }
   override def abort(): Unit = {
     if (writer != null) { writer.close(); writer = null }
@@ -1371,8 +1338,8 @@ final class LakeDataWriter(root: String, confKVs: Map[String, String],
   * hash-checked column: v0 bootstrap + one append = 1, so a commit
   * that silently no-ops or double-publishes goes red. The oracle
   * recomputes the aggregate from the base table — writer encoding,
-  * stats pass, manifest publish, and connector read-back must agree
-  * exactly.
+  * write-time stats, manifest publish, and connector read-back must
+  * agree exactly.
   */
 object LakeWriteQueries {
   import org.apache.spark.sql.{DataFrame, SparkSession}

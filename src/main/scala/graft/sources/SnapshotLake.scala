@@ -637,29 +637,6 @@ object SnapshotLake {
     }
   }
 
-  /** Mergeable bloom build: zero = empty bitset, reduce = set bits,
-    * merge = bitwise OR — commutative/associative, so the per-file
-    * aggregate is safe under any partial-aggregation tree.
-    */
-  final class BloomAgg(numBytes: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        Long, Array[Byte], Array[Byte]] {
-    override def zero: Array[Byte] = new Array[Byte](numBytes)
-    override def reduce(b: Array[Byte], v: Long): Array[Byte] = {
-      Bloom.set(b, v); b
-    }
-    override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-      var i = 0
-      while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }
-      a
-    }
-    override def finish(b: Array[Byte]): Array[Byte] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
   private def logDir(root: String): Path = Paths.get(root, "_log")
 
   /** Resolve a manifest file entry to a filesystem path. Entries are
@@ -1370,8 +1347,10 @@ object SnapshotLake {
       txn, Some(df.schema.json))
   }
 
-  /** Conflict raised when a MERGE's optimistic rebase finds the table
-    * changed underneath it in a way that can affect its result.
+  /** Conflict raised when a write's optimistic rebase finds the
+    * table changed underneath it in a way that can affect its result
+    * (a MERGE's rebase, or a stat envelope that changed between
+    * staging and publish).
     */
   final class MergeConflictException(msg: String)
       extends RuntimeException(msg)
@@ -1652,7 +1631,7 @@ object SnapshotLake {
     *
     * `rowsDeleted` is exact and costs nothing extra: dropped files'
     * counts come from the manifest; rewritten files' delta falls out
-    * of the stats pass the rewrite needs anyway.
+    * of the row counts the rewrite's writer reports anyway.
     *
     * Publish is the same conflict-checked optimistic rebase as
     * [[merge]]: concurrent appends outside [lo, hi) carry through,
@@ -2624,8 +2603,8 @@ object SnapshotLake {
 
   /** Clustered bulk commit: route rows to buckets with ONE shuffle
     * and write one file per bucket, so a whole clustered layout
-    * lands as a single write job + a single stats pass + one
-    * manifest — the bulk-ingest shape, vs. N sequential [[commit]]
+    * lands as a single write job (stats accumulated as it writes) +
+    * one manifest — the bulk-ingest shape, vs. N sequential [[commit]]
     * calls costing 2N jobs. Clustering is what gives the per-file
     * stats their selectivity (tight min/max ranges, small blooms),
     * so this is the write path that feeds [[readPruned]]/
@@ -2771,14 +2750,19 @@ object SnapshotLake {
       .where(col(partCol).cast("string") === value)
   }
 
-  /** Column-stat eligibility, shared by the read-back stats pass
-    * ([[statsFor]]) and the DSv2 writers' task-side accumulation
-    * ([[LakeWriter]]): long/int/string columns, engine columns
-    * (`_`-prefixed) and the stat envelope's own columns excluded,
-    * INTEGRALS FIRST within the 4-column budget (see the ordering
-    * note in statsFor). One definition so the two paths cannot
-    * drift — drift would mean a task-side manifest differs from a
-    * read-back one on identical data.
+  /** The columns [[SegStatsAcc]] records CBO column stats for:
+    * long/int/string columns, engine columns (`_`-prefixed) and the
+    * stat envelope's own columns excluded, capped at 4 so manifest
+    * lines stay bounded. STRING columns count — they are what
+    * TPC-H-style dims and dedup digests JOIN on, so leaving them out
+    * makes CBO guess exactly where reorder matters most (their record
+    * reuses the numeric slots: lo = total non-null length in chars,
+    * hi = max length, merged into avgLen/maxLen). INTEGRALS FIRST,
+    * then strings: string eligibility arrived after chains had
+    * already recorded integral stats, and the scan-side merge drops a
+    * column whenever ANY kept file lacks it — schema-order mixing
+    * would shift previously-covered integral columns out of the
+    * window on existing chains and regress their CBO estimates.
     */
   private[sources] def csColsFor(schema: org.apache.spark.sql.types.StructType,
       statCol: String, statCol2: Option[String]): Seq[(String, Boolean)] = {
@@ -2795,139 +2779,6 @@ object SnapshotLake {
       .toSeq
     val (strs, ints) = candidates.partition(_._2)
     (ints ++ strs).take(4)
-  }
-
-  /** Wall-clock + call-count accounting for the write-then-re-read
-    * stats pass — measurement hooks for the optimization rounds
-    * (read via [[statsAccounting]]; negligible overhead).
-    */
-  private val statsPassNanos = new java.util.concurrent.atomic.AtomicLong
-  private val statsPassCalls = new java.util.concurrent.atomic.AtomicLong
-  def statsAccounting: (Long, Double) =
-    (statsPassCalls.get(), statsPassNanos.get() / 1e9)
-
-  /** One pass over the batch's files only: per-file stats keyed by
-    * the physical file each row came from; the optional bloom rides
-    * the same aggregate (write-time index build, never a second scan).
-    * Since r16 this is the FALLBACK face of write-time stats — the
-    * API verbs and DSv2 writers accumulate the identical stats while
-    * writing ([[SegStatsAcc]]) and only land here on a column shape
-    * the accumulator doesn't replicate, or the add_files import
-    * (external bytes really do need reading).
-    *
-    * `externalDir`: compute the same stats over a directory OUTSIDE
-    * the lake (the add_files import path) — files record under their
-    * ABSOLUTE normalized paths (the shallow-clone borrowed-ref
-    * idiom: vacuum never deletes them, reads resolve them as-is).
-    */
-  private[sources] def statsFor(s: SparkSession, root: String, batch: String,
-      statCol: String, bloomCol: Option[String],
-      bloomBytes: Int, statCol2: Option[String] = None,
-      externalDir: Option[String] = None): Seq[FileStat] = {
-    val __t0 = System.nanoTime()
-    try statsForImpl(s, root, batch, statCol, bloomCol, bloomBytes,
-      statCol2, externalDir)
-    finally {
-      statsPassNanos.addAndGet(System.nanoTime() - __t0)
-      statsPassCalls.incrementAndGet(): Unit
-    }
-  }
-
-  private def statsForImpl(s: SparkSession, root: String, batch: String,
-      statCol: String, bloomCol: Option[String],
-      bloomBytes: Int, statCol2: Option[String] = None,
-      externalDir: Option[String] = None): Seq[FileStat] = {
-    val baseAggs = Seq(
-      min(col(statCol)).cast("long").as("lo"),
-      max(col(statCol)).cast("long").as("hi"),
-      count(lit(1)).as("rows"),
-      // write-time per-file sum of the stat column — what makes a
-      // full-table/grouped SUM manifest-answerable. try_sum: an
-      // overflowing file records no sum (pushdown refuses) instead
-      // of failing the whole stats pass
-      expr(s"try_sum(`$statCol`)").cast("long").as("su"))
-    val d2Aggs = statCol2.toSeq.flatMap(c => Seq(
-      min(col(c)).cast("long").as("lo2"),
-      max(col(c)).cast("long").as("hi2")))
-    val aggs = baseAggs ++ d2Aggs ++ bloomCol.map { c =>
-      val bloomUdaf = udaf(new BloomAgg(bloomBytes))
-      bloomUdaf(col(c).cast("long")).as("bloom")
-    }
-    val bloomIdx = 5 + d2Aggs.size
-    val df = s.read.parquet(externalDir.getOrElse(s"$root/$batch"))
-    // per-column CBO statistics for the integral columns the stat
-    // envelope does NOT cover: exact [min, max] plus a bounded KMV
-    // sketch of the hashed values (capped at 4 columns so manifest
-    // lines stay bounded; engine columns and routing dirs excluded)
-    // STRING columns record stats too — they are what TPC-H-style
-    // dims and dedup digests JOIN on, so leaving them out makes CBO
-    // guess exactly where reorder matters most. The record reuses
-    // the numeric slots with a type-driven reading (the table schema
-    // is authoritative on the scan side): lo = total non-null length
-    // (chars), hi = max length — merged into avgLen/maxLen, the two
-    // size stats catalyst keeps for strings — while NDV comes from
-    // the same KMV over xxhash64 (which hashes string bytes natively).
-    // INTEGRALS FIRST, then strings, within the 4-column budget: the
-    // string eligibility arrived after chains had already recorded
-    // integral stats, and the scan-side merge drops a column whenever
-    // ANY kept file lacks it — schema-order mixing would silently
-    // shift previously-covered integral columns out of the window on
-    // existing chains and regress their CBO estimates. Integral-first
-    // keeps old coverage byte-identical; strings fill leftover slots.
-    val csCols: Seq[(String, Boolean)] = csColsFor(df.schema, statCol, statCol2)
-    val minK = udaf(new graft.operators.KmvSketch.MinKDistinct(ColStat.K))
-    val csAggs = csCols.zipWithIndex.flatMap { case ((c, isStr), i) =>
-      val (loAgg, hiAgg) =
-        if (isStr) (sum(length(col(c))).cast("long"),
-          max(length(col(c))).cast("long"))
-        else (min(col(c)).cast("long"), max(col(c)).cast("long"))
-      Seq(loAgg.as(s"__cs_lo_$i"), hiAgg.as(s"__cs_hi_$i"),
-        count(when(col(c).isNull, 1)).as(s"__cs_nn_$i"),
-        minK(expr(s"xxhash64(`$c`)").bitwiseAND(lit(Long.MaxValue)))
-          .as(s"__cs_kmv_$i"))
-    }
-    val all = aggs ++ csAggs
-    df.groupBy(input_file_name().as("f"))
-      .agg(all.head, all.tail: _*)
-      .collect()
-      .map { r =>
-        val uri = r.getString(0)
-        val rel =
-          if (externalDir.isDefined)
-            Paths.get(java.net.URI.create(uri).getPath)
-              .toAbsolutePath.normalize.toString
-          else {
-            // the URI is percent-encoded: decode so an escaped routing
-            // dir (`a%2Fb`) names the file as it is on disk
-            val path = java.net.URI.create(uri).getPath
-            path.substring(path.indexOf("/data/") + 1)
-          }
-        val cstats = csCols.zipWithIndex.flatMap { case ((c, _), i) =>
-          val loI = r.fieldIndex(s"__cs_lo_$i")
-          // an all-null file records no entry for the column — the
-          // scan-side merge skips the column whenever ANY kept file
-          // lacks it (absence never misestimates)
-          if (r.isNullAt(loI)) None
-          else Some(c.toLowerCase(java.util.Locale.ROOT) -> ColStat(
-            r.getLong(loI), r.getLong(r.fieldIndex(s"__cs_hi_$i")),
-            r.getLong(r.fieldIndex(s"__cs_nn_$i")),
-            r.getSeq[Long](r.fieldIndex(s"__cs_kmv_$i"))))
-        }.toMap
-        // on-disk byte size recorded at write time (one stat(2) per
-        // NEW file, driver-side) so the connector can report
-        // SupportsReportStatistics and size splits without touching
-        // storage at plan time
-        FileStat(rel, r.getLong(1), r.getLong(2), r.getLong(3),
-          Files.size(if (rel.startsWith("/")) Paths.get(rel)
-            else Paths.get(root, rel)),
-          if (bloomCol.isDefined) Some(r.getAs[Array[Byte]](bloomIdx))
-          else None,
-          if (statCol2.isDefined) Some((r.getLong(5), r.getLong(6)))
-          else None,
-          sum = if (r.isNullAt(4)) None else Some(r.getLong(4)),
-          cstats = cstats)
-      }
-      .sortBy(_.name).toSeq
   }
 
   /** Publish `newFiles` (stats already computed) as the next version
@@ -4229,11 +4080,13 @@ object SnapshotLake {
     * of Delta's `CONVERT TO DELTA`): commit pre-existing parquet
     * files into the chain by ABSOLUTE path — zero bytes moved or
     * rewritten, the verb that onboards a 100 TB directory in
-    * O(manifest). One Spark job computes the full per-file stat
-    * envelope (rows, statCol lo/hi, write-time sum, dim2 box,
-    * CBO column stats) grouped by file, so every stat/range/agg
-    * prune and manifest-answered aggregate works on imported files
-    * exactly as on owned ones. Imported files follow the
+    * O(manifest). One Spark job reads each file once, whole, in one
+    * task, feeding its rows to the same [[SegStatsAcc]] every lake
+    * write stats through (under the head's statCol/statCol2, no
+    * bloom): rows, statCol lo/hi, sum, dim2 box and CBO column stats,
+    * so every stat/range/agg prune and manifest-answered aggregate
+    * works on imported files exactly as on owned ones. A file with no
+    * rows records no entry. Imported files follow the
     * shallow-clone ownership contract: borrowed, never owned —
     * vacuum never deletes them, and row-level DML rewrites them into
     * owned files copy-on-write (dropping the reference, not the
@@ -4267,9 +4120,8 @@ object SnapshotLake {
     // surfaces as the guard's clear refusal before anything commits
     head.schema.foreach(ps =>
       evolveSchema(ps, df.schema, head.retired): Unit)
-    val stats = statsFor(s, root, batch = "", head.statCol,
-      bloomCol = None, bloomBytes = 1024, head.statCol2,
-      externalDir = Some(src))
+    val stats = externalStats(s, df,
+      StatsSpec(head.statCol, None, 1024, head.statCol2))
     require(stats.nonEmpty, s"no parquet data files under $src")
     // duplicate-registration guard (Iceberg add_files refuses dupes):
     // a re-run after an ambiguous failure must not double-count rows,
@@ -4289,6 +4141,36 @@ object SnapshotLake {
       bloomCol = None, head.statCol2,
       schemaJson = Some(df.schema.json))
     (v, stats.size.toLong, stats.map(_.rows).sum)
+  }
+
+  /** [[addFiles]]' stats job: one task per file of `df`'s listing,
+    * each entry named by the file's absolute normalized path.
+    */
+  private def externalStats(s: SparkSession, df: DataFrame,
+      spec: StatsSpec): Seq[FileStat] = {
+    val schema = df.schema
+    new SegStatsAcc(schema, spec): Unit // refuse on the driver first
+    val conf = LakeReaderFactory.sessionConf()
+    val paths = df.inputFiles.toSeq.map(uri =>
+      Paths.get(java.net.URI.create(uri).getPath)
+        .toAbsolutePath.normalize.toString)
+    s.sparkContext.parallelize(paths, math.max(1, paths.size)).flatMap { p =>
+      val bytes = Files.size(Paths.get(p))
+      val acc = new SegStatsAcc(schema, spec)
+      var rows = 0L
+      val reader = LakeReaderFactory.openSplit(LakeSplit(p, 0L, bytes),
+        conf, schema)
+      try while (reader.nextBatch()) {
+        val it = reader.resultBatch().rowIterator()
+        while (it.hasNext) { acc.update(it.next()); rows += 1 }
+      } finally reader.close()
+      if (rows == 0) None
+      else {
+        val st = acc.finish
+        Some(FileStat(p, st.lo, st.hi, rows, bytes, st.bloom, st.dim2,
+          sum = st.su, cstats = st.cstats))
+      }
+    }.collect().toSeq.sortBy(_.name)
   }
 
   /** SHALLOW CLONE (Delta's zero-copy clone): publish a manifest at
@@ -4384,7 +4266,7 @@ object SnapshotLake {
     * oracle recomputes all three from the base table because every
     * snapshot is a pure function of it. Scale shape: time travel
     * reads are manifest picks (no data copies), and each commit's
-    * stats pass scans only that commit's files.
+    * stats cover only that commit's files.
     */
   def q81TimeTravel(s: SparkSession, d: String): DataFrame = {
     val root = Housekeeping.tempDir("q81")
@@ -4485,7 +4367,7 @@ object SnapshotLake {
     // bucket = max i with event_id >= bound(i): EXACTLY the oracle's
     // floor(i·span/8) breakpoints (a closed-form id*8/span disagrees
     // at boundaries when 8 ∤ span); one clustered commit = one
-    // shuffle + one stats pass for the whole 8-file layout
+    // shuffle + one write job for the whole 8-file layout
     val bucket = rangeBucket("event_id", 8, span)
     commitClustered(s, root, ev, bucket, "event_id")
     // the prune now happens INSIDE Catalyst: the range predicate is
@@ -4516,7 +4398,7 @@ object SnapshotLake {
     * hash-checked COLUMN (q82's discipline): if the pushdown ever
     * stops firing, the query goes red, not slow. The values
     * themselves are certified against the oracle's recomputation
-    * from the base table — the commit-time stats pass, the manifest
+    * from the base table — the write-time stats, the manifest
     * round-trip, and the pushdown translation all have to agree.
     */
   def q103LakeAggStats(s: SparkSession, d: String): DataFrame = {
@@ -4539,7 +4421,7 @@ object SnapshotLake {
     * 8 files bucketed by user_id, so every file's event_id [min, max] spans
     * essentially the whole domain — q82's range pruning would keep
     * all 8 files. The per-file bloom on event_id (10 bits/key,
-    * write-time build riding the stats pass) recovers the skip: the
+    * built while each file is written) recovers the skip: the
     * probed id lives in exactly one file, and the judged row comes
     * back through the pruned read with its exact residual filter.
     * The spec asserts the skip counts and the no-false-negative

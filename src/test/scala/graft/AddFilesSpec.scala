@@ -57,6 +57,51 @@ class AddFilesSpec extends SparkTestBase {
     }
   }
 
+  test("imported stat values equal the reference aggregate over each " +
+      "file; a zero-row file records no entry") {
+    import scala.jdk.CollectionConverters._
+    def fields(f: SnapshotLake.FileStat) =
+      (f.name, f.lo, f.hi, f.rows, f.sum, f.dim2, f.bloom.map(_.toSeq),
+        f.bytes, f.cstats)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr("id AS k",
+      "cast(id % 17 AS int) AS n",
+      "CASE WHEN id % 5 = 0 THEN NULL ELSE concat('s-', id % 41) END AS s")
+    withCatalog {
+      spark.sql(s"""
+        CREATE TABLE $cat.pv (k BIGINT, n INT, s STRING)
+        TBLPROPERTIES ('statCol' = 'k')""")
+      spark.sql(s"INSERT INTO $cat.pv " +
+        "SELECT id, cast(id AS int), 'x' FROM range(10)")
+      val ext = Files.createTempDirectory("addf_vals_").toString
+      rows(100, 1300).repartitionByRange(3, col("k"))
+        .write.mode("overwrite").parquet(ext)
+      // a zero-row file of the same schema beside the three
+      val empty = Files.createTempDirectory("addf_empty_").toString
+      rows(0, 0).coalesce(1).write.mode("overwrite").parquet(empty)
+      Files.copy(Files.list(Paths.get(empty)).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get,
+        Paths.get(ext, "part-zero-rows.parquet"))
+      val dataFiles = Files.list(Paths.get(ext)).iterator().asScala
+        .map(_.toAbsolutePath.normalize.toString)
+        .filter(_.endsWith(".parquet")).toSeq
+      assert(dataFiles.size === 4)
+      val r = spark.sql(s"CALL $cat.add_files(table => 'pv', " +
+        s"source_dir => '$ext')").head
+      assert(r.getLong(1) === 3L) // files_added
+      assert(r.getLong(2) === 1200L) // rows_added
+      val imported = SnapshotLake.snapshot(s"$suiteBase/pv").files
+        .filter(_.name.startsWith("/"))
+      val ref = graft.sources.TaskSideStatsSpec.reference(spark, dataFiles,
+        "k", None, 1024, None)
+      assert(ref.size === 3) // the zero-row file forms no group
+      assert(imported.map(_.name).toSet === ref.keySet)
+      imported.foreach(f => assert(fields(f) === fields(ref(f.name))))
+      assert(imported.forall(f => f.cstats.keySet === Set("n", "s") &&
+        f.cstats.values.forall(_.kmv.nonEmpty) && f.cstats("s").nulls > 0))
+      assert(spark.table(s"$cat.pv").count() === 1210L)
+    }
+  }
+
   test("refusal gates: source inside the lake root; column-mapped " +
       "chain; missing table") {
     withCatalog {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.{LakeStaged, SnapshotLake}
+import graft.sources.{LakeStaged, SegStats, SnapshotLake, StatsSpec}
 
 /** SQL UPDATE/MERGE/DELETE through the DSv2 DELTA protocol
   * (`SupportsDelta`) on `dv=true` tables: the `_pos` metadata
@@ -181,7 +181,9 @@ class LakeDeltaDmlSpec extends SparkTestBase {
       SnapshotLake.commitDeltaOps(spark, root,
         Map(s"$root/${file.name}" -> Seq(spec)),
         inserted = Seq(LakeStaged(name, 1L,
-          Files.size(stage.resolve(name)))), op = "update",
+          Files.size(stage.resolve(name)), stats = SegStats(
+            StatsSpec("k", None, 1024, None).key, 102L, 102L, Some(102L),
+            None, None, Map.empty))), op = "update",
         scannedVersion = Some(v0))
     }
     assert(ex.getMessage.contains("deletion-vector change"))

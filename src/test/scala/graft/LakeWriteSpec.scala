@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{
   Housekeeping, LakeBatchWrite, LakeDataWriter, LakeStaged, LakeWrite,
-  SnapshotLake}
+  SnapshotLake, StatsSpec}
 
 /** The lake's DSv2 WRITE path: SQL INSERT / df.write land as real
   * lake commits (stats pass + optimistic manifest publish) through a
@@ -82,7 +82,8 @@ class LakeWriteSpec extends SparkTestBase {
     val schema = lakeRead(root).schema
     val conf = LakeWrite.writeConf(schema)
     def stage(id: Long, cents: Long, task: Long): LakeStaged = {
-      val w = new LakeDataWriter(root, conf, 0, task)
+      val w = new LakeDataWriter(root, conf, 0, task,
+        statsSpec = Some(StatsSpec("event_id", None, 1024, None)))
       w.write(InternalRow(id, cents))
       w.commit().asInstanceOf[LakeStaged]
     }

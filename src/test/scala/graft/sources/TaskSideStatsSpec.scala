@@ -1,25 +1,43 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** Task-side write statistics (optimization r15): the DSv2 writers
-  * accumulate each file's manifest stats WHILE WRITING and the
-  * publish skips the write-then-re-read [[SnapshotLake.statsFor]]
-  * pass — these specs pin the one invariant that makes the skip
-  * safe: the task-side entries are VALUE-IDENTICAL to what the
-  * read-back pass computes over the same files, and any column
-  * shape the accumulator does not replicate falls back to the
-  * read-back pass rather than guessing.
+/** Write-time statistics: every lake write accumulates each file's
+  * manifest stats WHILE WRITING ([[SegStatsAcc]]) — the only stats
+  * implementation. These specs pin the entries against a plain Spark
+  * aggregate over the same files ([[TaskSideStatsSpec.reference]]),
+  * and pin the refusal of stat/dim2/bloom column types the
+  * accumulator does not cover.
   */
 class TaskSideStatsSpec extends SparkTestBase {
 
   private val Fmt = "graft.sources.GraftLakeSource"
 
   private def statFields(f: SnapshotLake.FileStat) =
-    (f.name, f.lo, f.hi, f.rows, f.sum, f.dim2,
-      f.bloom.map(_.toSeq), f.bytes, f.cstats)
+    (f.lo, f.hi, f.rows, f.sum, f.dim2, f.bloom.map(_.toSeq), f.bytes,
+      f.cstats)
+
+  /** Each manifest entry of `files` equals the reference computed
+    * over the same physical files, field by field (incl. bytes,
+    * blooms, cstats).
+    */
+  private def certify(root: String, files: Seq[SnapshotLake.FileStat],
+      bloomCol: Option[String] = None, bloomBytes: Int = 1024,
+      statCol2: Option[String] = None): Unit = {
+    val paths = files.map(f => SnapshotLake.dataPath(root, f.name))
+    val ref = TaskSideStatsSpec.reference(spark, paths,
+      SnapshotLake.snapshot(root).statCol, bloomCol, bloomBytes, statCol2)
+    assert(ref.keySet === paths.toSet)
+    files.zip(paths).foreach { case (f, p) =>
+      assert(statFields(f) === statFields(ref(p)),
+        s"${f.name} of $root diverges from the reference aggregate")
+    }
+  }
 
   test("task-side stats are value-identical to the read-back pass, which is skipped") {
     val root = Housekeeping.tempDir("taskstats_eq")
@@ -34,23 +52,15 @@ class TaskSideStatsSpec extends SparkTestBase {
         "CASE WHEN id % 7 = 0 THEN NULL ELSE cast(id % 13 AS int) END AS cat",
         "CASE WHEN id % 11 = 0 THEN NULL ELSE concat('u-', id % 257) END AS tag")
       .repartitionByRange(3, col("event_id"))
-    val (calls0, _) = SnapshotLake.statsAccounting
     df.write.format(Fmt).option("path", root)
       .option("statCol", "event_id").option("bloomCol", "cents")
       .option("bloomBytes", "512").option("statCol2", "dim2")
       .mode("append").save()
-    val (calls1, _) = SnapshotLake.statsAccounting
-    assert(calls1 === calls0,
-      "publish ran the read-back stats pass — task-side stats did not engage")
     val snap = SnapshotLake.snapshot(root)
     assert(snap.files.length === 3)
-    val head = snap.files.head
-    val batch = head.name.substring(0, head.name.lastIndexOf('/'))
-    val readBack = SnapshotLake.statsFor(spark, root, batch,
-      "event_id", Some("cents"), 512, Some("dim2"))
-    assert(snap.files.map(statFields).sortBy(_._1)
-      === readBack.map(statFields).sortBy(_._1))
+    certify(root, snap.files, Some("cents"), 512, Some("dim2"))
     // the string column really recorded char-length stats + a KMV
+    val head = snap.files.head
     val tag = head.cstats("tag")
     assert(tag.hi > 0 && tag.kmv.nonEmpty && tag.nulls > 0)
     assert(head.cstats.contains("cat"))
@@ -60,21 +70,15 @@ class TaskSideStatsSpec extends SparkTestBase {
     assert(pruned.count() === 1000)
   }
 
-  test("a column shape outside the accumulator falls back to the read-back pass") {
+  test("a smallint stat column publishes task-side stats equal to the reference") {
     val root = Housekeeping.tempDir("taskstats_fb")
-    // statCol of SMALLINT type: the accumulator replicates only the
-    // long/int shapes and declines (supported = false) — publish
-    // must fall back to statsFor and still commit identically
-    val (calls0, _) = SnapshotLake.statsAccounting
     spark.range(0, 300)
       .selectExpr("cast(id AS smallint) AS event_id",
         "concat('v', id) AS label")
       .write.format(Fmt).option("path", root)
       .option("statCol", "event_id")
       .mode("append").save()
-    val (calls1, _) = SnapshotLake.statsAccounting
-    assert(calls1 === calls0 + 1,
-      "fallback did not run the read-back stats pass exactly once")
+    certify(root, SnapshotLake.snapshot(root).files)
     assert(spark.read.format(Fmt).option("path", root).load().count() === 300)
   }
 
@@ -84,16 +88,13 @@ class TaskSideStatsSpec extends SparkTestBase {
       .write.format(Fmt).option("path", root).option("statCol", "k")
       .mode("append").save()
     // dv table: UPDATE routes through the DSv2 delta protocol — the
-    // post-image file must carry task-side stats under the PINNED
+    // post-image file carries task-side stats under the PINNED
     // scanned version's envelope
     spark.sql("DROP TABLE IF EXISTS taskstats_dv")
     spark.sql(s"""CREATE TABLE taskstats_dv (k BIGINT, v BIGINT)
       USING graft.sources.GraftLakeSource
       OPTIONS (path '$root', statCol 'k', dv 'true')""")
-    val (c0, _) = SnapshotLake.statsAccounting
     spark.sql("UPDATE taskstats_dv SET v = -1 WHERE k % 100 = 7")
-    val (c1, _) = SnapshotLake.statsAccounting
-    assert(c1 === c0, "delta DML post-image ran the read-back stats pass")
     assert(spark.sql("SELECT count(*) FROM taskstats_dv WHERE v = -1")
       .head().getLong(0) === 4)
     // group-CoW (non-dv) table on its own chain: the rewrite legs
@@ -106,12 +107,11 @@ class TaskSideStatsSpec extends SparkTestBase {
     spark.sql(s"""CREATE TABLE taskstats_cow (k BIGINT, v BIGINT)
       USING graft.sources.GraftLakeSource
       OPTIONS (path '$root2', statCol 'k')""")
-    val (c2, _) = SnapshotLake.statsAccounting
     spark.sql("UPDATE taskstats_cow SET v = -2 WHERE k % 100 = 7")
-    val (c3, _) = SnapshotLake.statsAccounting
-    assert(c3 === c2, "group-CoW rewrite ran the read-back stats pass")
     assert(spark.sql("SELECT count(*) FROM taskstats_cow WHERE v = -2")
       .head().getLong(0) === 4)
+    certify(root, SnapshotLake.snapshot(root).files)
+    certify(root2, SnapshotLake.snapshot(root2).files)
     spark.sql("DROP TABLE IF EXISTS taskstats_dv")
     spark.sql("DROP TABLE IF EXISTS taskstats_cow")
   }
@@ -129,25 +129,17 @@ class TaskSideStatsSpec extends SparkTestBase {
       OPTIONS (path '$root', statCol 'event_id')""")
     // rename a cs-eligible column: appends now write under a mapped
     // PHYSICAL name — the accumulator must resolve the same physical
-    // columns the read-back pass would, or decline
+    // columns the reference reads
     spark.sql("ALTER TABLE taskstats_map RENAME COLUMN cents TO amount")
-    val (c0, _) = SnapshotLake.statsAccounting
     spark.sql("""INSERT INTO taskstats_map
       SELECT id + 1000 AS event_id, id * 9 AS amount,
         concat('v', id % 7) AS tag FROM range(0, 400)""")
-    val (c1, _) = SnapshotLake.statsAccounting
-    assert(c1 === c0,
-      "mapped-chain DSv2 append ran the read-back stats pass")
     val snap = SnapshotLake.snapshot(root)
-    // the appended files' stats must equal a read-back of the same
-    // batch (physical column names, lowercased — same key space)
+    // the appended files' stats must equal the reference over the
+    // same files (physical column names, lowercased — same key space)
     val newest = snap.files.filter(_.lo >= 1000)
     assert(newest.nonEmpty)
-    val batch = newest.head.name.substring(0, newest.head.name.lastIndexOf('/'))
-    val readBack = SnapshotLake.statsFor(spark, root, batch,
-      "event_id", None, 1024, None)
-    assert(newest.map(statFields).sortBy(_._1)
-      === readBack.map(statFields).sortBy(_._1))
+    certify(root, newest)
     assert(spark.sql(
       "SELECT sum(amount) FROM taskstats_map WHERE event_id >= 1000")
       .head().getLong(0) === (0 until 400).map(_ * 9L).sum)
@@ -156,16 +148,14 @@ class TaskSideStatsSpec extends SparkTestBase {
 
   /** The Scala API verbs write through [[LakeCommit.writeRouted]] —
     * one write job whose tasks each feed one [[LakeDataWriter]], stats
-    * accumulated task-side, no read-back pass. Value-identity is
-    * pinned the same way as the DSv2 writers: each batch's manifest
-    * entries must equal a statsFor read-back of the same files.
+    * accumulated task-side; each chain's manifest entries must equal
+    * the reference over the same files.
     */
   test("the Scala API verbs publish with task-side stats — no read-back pass") {
     val ev = spark.range(0, 4000)
       .selectExpr("id AS event_id", "id * 31 % 1000 AS cents")
     val root = Housekeeping.tempDir("taskstats_api")
     val root2 = Housekeeping.tempDir("taskstats_api2")
-    val (c0, _) = SnapshotLake.statsAccounting
     // plain commit (bloom + repartitioned input = several files)
     SnapshotLake.commit(spark, root, ev.repartition(3), "event_id",
       bloomCol = Some("cents"), bloomBytes = 512)
@@ -195,34 +185,12 @@ class TaskSideStatsSpec extends SparkTestBase {
       ev.selectExpr("event_id", "cents", """CASE event_id % 5
         WHEN 0 THEN '' WHEN 1 THEN NULL WHEN 2 THEN 'a/b'
         WHEN 3 THEN 'x=y' ELSE 'r' END AS region"""), "region", "event_id")
-    val (c1, _) = SnapshotLake.statsAccounting
-    assert(c1 === c0,
-      s"an API verb ran the read-back stats pass (${c1 - c0} calls)")
-    // value-identity per batch: manifest entries == read-back of the
-    // same files, field by field (incl. bytes, blooms, cstats)
-    def certify(r: String, bloomCol: Option[String], bloomBytes: Int,
-        statCol2: Option[String]): Unit = {
-      val snap = SnapshotLake.snapshot(r)
-      snap.files.groupBy(f => f.name.substring(0, f.name.indexOf('/',
-          f.name.indexOf('/') + 1))).foreach { case (batch, fs) =>
-        // compare by name: a batch dir can hold files an overwrite
-        // stopped referencing (time travel keeps them on disk)
-        val byName = SnapshotLake.statsFor(spark, r, batch,
-          snap.statCol, bloomCol, bloomBytes, statCol2)
-          .map(f => f.name -> f).toMap
-        fs.foreach { f =>
-          assert(byName.contains(f.name),
-            s"${f.name} of $r not found by the read-back pass")
-          assert(statFields(f) === statFields(byName(f.name)),
-            s"${f.name} of $r diverges from the read-back pass")
-        }
-      }
-    }
-    certify(root, Some("cents"), 512, None)
-    certify(root2, None, 1024, None)
-    certify(root3, None, 1024, Some("y"))
-    certify(root4, None, 1024, None)
-    certify(root5, None, 1024, None)
+    def files(r: String) = SnapshotLake.snapshot(r).files
+    certify(root, files(root), Some("cents"), 512)
+    certify(root2, files(root2))
+    certify(root3, files(root3), statCol2 = Some("y"))
+    certify(root4, files(root4))
+    certify(root5, files(root5))
     // the verbs' judged surfaces still hold: tags, aggregates
     val p = SnapshotLake.snapshot(root4)
     assert(p.files.forall(_.part.exists(_._1 == "region")))
@@ -241,16 +209,90 @@ class TaskSideStatsSpec extends SparkTestBase {
       .agg(count(lit(1))).head.getLong(0) > 0)
   }
 
-  test("an API-verb column shape outside the accumulator falls back to read-back") {
+  test("an API-verb smallint stat column publishes task-side stats equal to the reference") {
     val root = Housekeeping.tempDir("taskstats_api_fb")
-    val (c0, _) = SnapshotLake.statsAccounting
     SnapshotLake.commit(spark, root, spark.range(0, 300)
       .selectExpr("cast(id AS smallint) AS event_id",
         "concat('v', id) AS label"), "event_id")
-    val (c1, _) = SnapshotLake.statsAccounting
-    assert(c1 === c0 + 1,
-      "API-verb fallback did not run the read-back pass exactly once")
+    certify(root, SnapshotLake.snapshot(root).files)
     assert(SnapshotLake.read(spark, root).count() === 300)
+  }
+
+  test("a non-integral stat, dim2 or bloom column refuses before any file is staged") {
+    val df = spark.range(0, 100)
+      .selectExpr("id AS k", "cast(id AS double) / 4 AS x")
+    def refused(root: String, version: Int)(write: => Unit): Unit = {
+      val e = intercept[Exception](write)
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msg.contains("'x'") && msg.contains("double"), msg)
+      val staged = Option(new java.io.File(LakeWrite.stagingDir(root))
+        .list()).toSeq.flatten
+      assert(staged.isEmpty, s"staged files left behind: $staged")
+      assert(SnapshotLake.headVersion(root) === version)
+    }
+    // a fresh lake whose first commit declares the DOUBLE stat column
+    val r1 = Housekeeping.tempDir("taskstats_dbl1")
+    refused(r1, -1)(df.write.format(Fmt).option("path", r1)
+      .option("statCol", "x").mode("append").save())
+    val r2 = Housekeeping.tempDir("taskstats_dbl2")
+    refused(r2, -1)(SnapshotLake.commit(spark, r2, df, "x"))
+    // an existing chain: a DOUBLE dim2 or bloom column refuses and
+    // the head stays where it was
+    SnapshotLake.commit(spark, r2, df, "k")
+    refused(r2, 0)(df.write.format(Fmt).option("path", r2)
+      .option("statCol2", "x").mode("append").save())
+    refused(r2, 0)(SnapshotLake.commit(spark, r2, df, "k",
+      bloomCol = Some("x")))
+    assert(SnapshotLake.read(spark, r2).count() === 100)
+  }
+
+  test("a bloom column holding nulls publishes; = and IN still find every non-null value") {
+    val df = spark.range(0, 600).selectExpr("id AS event_id",
+      "CASE WHEN id % 4 = 0 THEN NULL ELSE id * 3 END AS v")
+      .repartition(3)
+    val r1 = Housekeeping.tempDir("taskstats_nullbloom1")
+    df.write.format(Fmt).option("path", r1).option("statCol", "event_id")
+      .option("bloomCol", "v").option("bloomBytes", "256")
+      .mode("append").save()
+    val r2 = Housekeeping.tempDir("taskstats_nullbloom2")
+    SnapshotLake.commit(spark, r2, df, "event_id", bloomCol = Some("v"),
+      bloomBytes = 256)
+    val present = (0L until 600L).filter(_ % 4 != 0).map(_ * 3)
+    Seq(r1, r2).foreach { r =>
+      val files = SnapshotLake.snapshot(r).files
+      assert(files.forall(_.bloom.isDefined))
+      assert(files.map(_.rows).sum === 600)
+      certify(r, files, Some("v"), 256)
+      val lake = spark.read.format(Fmt).option("path", r).load()
+      assert(lake.count() === 600)
+      assert(lake.where(col("v").isNull).count() === 150)
+      assert(lake.where(col("v").isin(present: _*)).count() === 450)
+      present.filter(_ % 7 == 1).take(6).foreach { v =>
+        assert(lake.where(col("v") === v).count() === 1, s"v = $v")
+      }
+    }
+  }
+
+  test("files staged under another stat envelope never publish: the write conflicts and staging drains") {
+    val root = Housekeeping.tempDir("taskstats_drift")
+    spark.range(0, 10).selectExpr("id AS event_id", "id AS cents")
+      .write.format(Fmt).option("path", root).option("statCol", "event_id")
+      .mode("append").save()
+    val schema = spark.read.format(Fmt).option("path", root).load().schema
+    val w = new LakeDataWriter(root, LakeWrite.writeConf(schema), 0, 1L,
+      statsSpec = Some(StatsSpec("event_id", None, 1024, None)))
+    w.write(org.apache.spark.sql.catalyst.InternalRow(100L, 1L))
+    val staged = w.commit()
+    // the commit resolves a bloom envelope the task did not write under
+    val e = intercept[SnapshotLake.MergeConflictException](
+      new LakeBatchWrite(root, schema, overwrite = false,
+        Map("bloomcol" -> "cents")).commit(Array(staged)))
+    assert(e.getMessage.contains("stat envelope"))
+    assert(Option(new java.io.File(LakeWrite.stagingDir(root)).list())
+      .toSeq.flatten.isEmpty)
+    assert(SnapshotLake.headVersion(root) === 0)
+    assert(spark.read.format(Fmt).option("path", root).load().count() === 10)
   }
 
   test("partition-dir value escaping matches the replaced writer's contract") {
@@ -294,28 +336,78 @@ class TaskSideStatsSpec extends SparkTestBase {
 
   test("partitioned (multi-segment task) writes carry per-file task-side stats") {
     val root = Housekeeping.tempDir("taskstats_part")
-    val (calls0, _) = SnapshotLake.statsAccounting
     spark.range(0, 1200)
       .selectExpr("id AS event_id", "cast(id % 3 AS string) AS p",
         "id * 2 AS cents")
       .write.format(Fmt).option("path", root)
       .option("statCol", "event_id").option("partCol", "p")
       .mode("append").save()
-    val (calls1, _) = SnapshotLake.statsAccounting
-    assert(calls1 === calls0,
-      "partitioned publish ran the read-back stats pass")
     val snap = SnapshotLake.snapshot(root)
     assert(snap.files.nonEmpty)
     assert(snap.files.forall(f => f.part.exists(_._1 == "p")))
     assert(snap.files.map(_.rows).sum === 1200)
-    // per-file ranges must be real: a point filter prunes
-    val batch = snap.files.head.name
-      .substring(0, snap.files.head.name.lastIndexOf('/'))
-    val readBack = SnapshotLake.statsFor(spark, root, batch,
-      "event_id", None, 1024, None)
-    assert(snap.files.map(statFields).map(t => (t._1, t._2, t._3, t._4,
-      t._5, t._9)).sortBy(_._1)
-      === readBack.map(statFields).map(t => (t._1, t._2, t._3, t._4,
-        t._5, t._9)).sortBy(_._1))
+    // per-file ranges must be real: each entry equals the reference
+    certify(root, snap.files)
+  }
+}
+
+object TaskSideStatsSpec {
+
+  /** The reference for the manifest stats of `paths`: one plain Spark
+    * aggregate grouped by input file — min/max(statCol) cast long,
+    * count, try_sum, the dim2 min/max, a bloom built with
+    * [[SnapshotLake.Bloom.set]] over the non-null values, and per
+    * [[SnapshotLake.csColsFor]] column min/max (char-length sum/max
+    * for strings), null count and the K-smallest-distinct KMV over
+    * `xxhash64(col) & Long.MaxValue`. An all-null min/max reads 0 and
+    * an all-null column records no column stat (the accumulator's
+    * conventions). Keyed by each file's absolute path; `bytes` is the
+    * file's size. A file with no rows has no entry.
+    */
+  def reference(s: SparkSession, paths: Seq[String], statCol: String,
+      bloomCol: Option[String], bloomBytes: Int,
+      statCol2: Option[String]): Map[String, SnapshotLake.FileStat] = {
+    val df = s.read.parquet(paths: _*)
+    val cs = SnapshotLake.csColsFor(df.schema, statCol, statCol2)
+    val minK = udaf(
+      new graft.operators.KmvSketch.MinKDistinct(SnapshotLake.ColStat.K))
+    def minMax(c: String) =
+      Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))
+    val aggs = minMax(statCol) ++ Seq(count(lit(1)),
+      expr(s"try_sum(`$statCol`)").cast("long")) ++
+      statCol2.toSeq.flatMap(minMax) ++
+      bloomCol.map(c => collect_list(col(c).cast("long"))) ++
+      cs.flatMap { case (c, isStr) =>
+        val v = if (isStr) length(col(c)) else col(c)
+        Seq(if (isStr) sum(v).cast("long") else min(v).cast("long"),
+          max(v).cast("long"), count(when(col(c).isNull, 1)),
+          minK(xxhash64(col(c)).bitwiseAND(lit(Long.MaxValue))))
+      }
+    df.groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
+      .collect().map { r =>
+        val path = Paths.get(java.net.URI.create(r.getString(0)).getPath)
+          .toAbsolutePath.normalize.toString
+        def orZero(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+        val d2 = 5
+        val bl = d2 + statCol2.size * 2
+        val c0 = bl + bloomCol.size
+        val bloom = bloomCol.map { _ =>
+          val bits = new Array[Byte](bloomBytes)
+          r.getSeq[Long](bl).foreach(SnapshotLake.Bloom.set(bits, _))
+          bits
+        }
+        val cstats = cs.zipWithIndex.flatMap { case ((c, _), k) =>
+          val j = c0 + 4 * k
+          if (r.isNullAt(j)) None
+          else Some(c.toLowerCase(java.util.Locale.ROOT) ->
+            SnapshotLake.ColStat(r.getLong(j), r.getLong(j + 1),
+              r.getLong(j + 2), r.getSeq[Long](j + 3)))
+        }.toMap
+        path -> SnapshotLake.FileStat(path, orZero(1), orZero(2),
+          r.getLong(3), Files.size(Paths.get(path)), bloom,
+          statCol2.map(_ => (orZero(d2), orZero(d2 + 1))),
+          sum = if (r.isNullAt(4)) None else Some(r.getLong(4)),
+          cstats = cstats)
+      }.toMap
   }
 }
