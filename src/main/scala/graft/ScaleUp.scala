@@ -33,17 +33,20 @@ object ScaleUp {
     def load(t: String): DataFrame =
       spark.read.parquet(s"$src/$t.parquet")
     // per-key shift base: one more than the key's max, so copies'
-    // key ranges never collide
-    def base(df: DataFrame, key: String): Long =
-      df.agg(max(col(key))).head.getLong(0) + 1
+    // key ranges never collide; the cast admits int keys
+    def base(t: String, key: String): Long = {
+      val m = load(t).agg(max(col(key)).cast("long")).head()
+      require(!m.isNullAt(0), s"scale-up: table $t has no $key values to shift from")
+      m.getLong(0) + 1
+    }
 
-    val cb = base(load("customer"), "c_custkey")
-    val ob = base(load("orders"), "o_orderkey")
-    val pb = base(load("part"), "p_partkey")
-    val sb = base(load("supplier"), "s_suppkey")
-    val eb = base(load("events"), "event_id")
-    val db = base(load("documents"), "doc_id")
-    val vb = base(load("embeddings"), "vec_id")
+    val cb = base("customer", "c_custkey")
+    val ob = base("orders", "o_orderkey")
+    val pb = base("part", "p_partkey")
+    val sb = base("supplier", "s_suppkey")
+    val eb = base("events", "event_id")
+    val db = base("documents", "doc_id")
+    val vb = base("embeddings", "vec_id")
 
     val copies = spark.range(k).select(col("id").as("__copy"))
     /** K key-shifted copies in one pass: cross-join the K-row copy

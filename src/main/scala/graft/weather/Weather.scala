@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+
+import graft.plans.{SplitCount, SplitField}
 
 /** Reference-parity weather analytics.
   *
@@ -28,8 +31,9 @@ import org.apache.spark.sql.types._
 object Weather {
 
   /** `location` dim schema — 8 positional columns
-    * (reference `input/locationData.csv:1`, dispatch on
-    * `parts.length == 8` at `Job1.java:33`).
+    * (reference `input/locationData.csv:1`; a location line has
+    * exactly 8 fields, the reference's `parts.length == 8` at
+    * `Job1.java:33`).
     */
   val locationSchema: StructType = StructType(Seq(
     StructField("location_id", IntegerType),
@@ -56,41 +60,53 @@ object Weather {
     // `Job2.java:26` skips any `location_id` prefix — we use the wider test).
     line.startsWith("location_id")
 
-  /** Tokenized lines: trim, drop blanks and headers, split(",", -1)
-    * preserving trailing empties (`Job1.java:23-30`, `Job2.java:25-28`).
-    * Declarative (split/size/element_at), so the whole pipeline stays
-    * inside whole-stage codegen — no UDFs, no driver loops.
+  /** Field `k` (1-based) of `s` split on `d` keeping trailing empties:
+    * `java.lang.String.split(d, -1)(k - 1)` (`Job1.java:30`,
+    * `Job2.java:28`). A byte scan that copies out one field
+    * ([[graft.plans.SplitField]]), so the copies filter pushdown makes
+    * of a field reference stay cheap; NULL past the last field.
     */
-  private def tokensFromLines(lines: DataFrame): DataFrame =
+  private def field(s: Column, d: Char, k: Int): Column =
+    Bridge.column(SplitField(Bridge.expression(s), d, k))
+
+  /** Field count of `s` split on `d`, the reference's `parts.length`
+    * after `split(d, -1)` ([[graft.plans.SplitCount]]).
+    */
+  private def fieldCount(s: Column, d: Char): Column =
+    Bridge.column(SplitCount(Bridge.expression(s), d))
+
+  /** Data lines: trim, drop blanks and headers (`Job1.java:23-30`,
+    * `Job2.java:25-28`). Each reader then tokenizes the `line` column
+    * with [[field]]/[[fieldCount]] — declarative Catalyst expressions,
+    * so the whole pipeline stays inside whole-stage codegen — no UDFs,
+    * no driver loops, and no per-row array of fields.
+    */
+  private def linesOf(lines: DataFrame): DataFrame =
     lines
       .select(trim(col("value")).as("line"))
       .where(col("line") =!= "" && !isHeader(col("line")))
-      // split with limit -1 keeps trailing empty fields, matching
-      // java.lang.String.split(",", -1)
-      .select(split(col("line"), ",", -1).as("parts"))
 
-  private def tokens(spark: SparkSession, path: String): DataFrame =
-    tokensFromLines(spark.read.text(path))
+  private def lineField(k: Int): Column = field(col("line"), ',', k)
 
-  /** Location table from CSV. Arity dispatch `parts.length == 8`
+  /** Location table from CSV. Arity dispatch: exactly 8 fields
     * (`Job1.java:33`); values pass through verbatim — the engine must
     * NOT clean data quirks like the literal `Kilinochchi[1]` city
     * name (`input/locationData.csv:12`).
     */
   def readLocation(spark: SparkSession, path: String): DataFrame =
-    tokens(spark, path)
-      .where(size(col("parts")) === 8)
+    linesOf(spark.read.text(path))
+      .where(fieldCount(col("line"), ',') === 8)
       .select(
-        element_at(col("parts"), 1).try_cast(IntegerType).as("location_id"),
-        element_at(col("parts"), 2).try_cast(DoubleType).as("latitude"),
-        element_at(col("parts"), 3).try_cast(DoubleType).as("longitude"),
-        element_at(col("parts"), 4).try_cast(IntegerType).as("elevation"),
-        element_at(col("parts"), 5).try_cast(IntegerType).as("utc_offset_seconds"),
-        element_at(col("parts"), 6).as("timezone"),
-        element_at(col("parts"), 7).as("timezone_abbreviation"),
-        element_at(col("parts"), 8).as("city_name"))
+        lineField(1).try_cast(IntegerType).as("location_id"),
+        lineField(2).try_cast(DoubleType).as("latitude"),
+        lineField(3).try_cast(DoubleType).as("longitude"),
+        lineField(4).try_cast(IntegerType).as("elevation"),
+        lineField(5).try_cast(IntegerType).as("utc_offset_seconds"),
+        lineField(6).as("timezone"),
+        lineField(7).as("timezone_abbreviation"),
+        lineField(8).as("city_name"))
 
-  /** Weather fact from CSV. Arity dispatch `parts.length >= 14`
+  /** Weather fact from CSV. Arity dispatch: at least 14 fields
     * (`Job1.java:40`) — a 9–13-field line silently falls through both
     * branches and is dropped, which this filter replicates. Numeric
     * fields cast to double; unparseable text becomes NULL (the typed
@@ -98,27 +114,27 @@ object Weather {
     * its own null policy).
     */
   def readWeather(spark: SparkSession, path: String): DataFrame =
-    parseWeather(tokens(spark, path))
+    parseWeather(linesOf(spark.read.text(path)))
 
   /** Weather fact from an already-loaded single-column (`value`)
     * lines frame — same pipeline as [[readWeather]] minus the file
     * source; lets tests and in-memory feeds reuse the exact parse.
     */
   def readWeatherLines(lines: DataFrame): DataFrame =
-    parseWeather(tokensFromLines(lines))
+    parseWeather(linesOf(lines))
 
-  private def parseWeather(toks: DataFrame): DataFrame =
-    toks
-      .where(size(col("parts")) >= 14)
+  private def parseWeather(lines: DataFrame): DataFrame =
+    lines
+      .where(fieldCount(col("line"), ',') >= 14)
       .select(
-        element_at(col("parts"), 1).as("location_id"),
-        element_at(col("parts"), 2).as("date"),
+        lineField(1).as("location_id"),
+        lineField(2).as("date"),
         // try_cast, not cast: Spark 4 ANSI mode would throw on the
         // reference's blank/garbage numerics; the reference semantics
         // are parse-failure -> null, each query applying its own
         // null policy (SURVEY.md 1.3).
-        element_at(col("parts"), 6).try_cast(DoubleType).as("temperature_2m_mean"),
-        element_at(col("parts"), 14).try_cast(DoubleType).as("precipitation_hours"))
+        lineField(6).try_cast(DoubleType).as("temperature_2m_mean"),
+        lineField(14).try_cast(DoubleType).as("precipitation_hours"))
 
   /** Job1 year-month key: `M/d/yyyy` parse then `yyyy-MM` format
     * (`Job1.java:61,88-95`). try_to_date (NULL on invalid, vs Job1's
@@ -135,11 +151,9 @@ object Weather {
     * handle it differently. Returns NULL unless the date has exactly
     * three '/'-parts (`Job2.java:31-32`).
     */
-  def yearMonthSplit(date: Column): Column = {
-    val p = split(date, "/")
-    when(size(p) === 3,
-      concat(element_at(p, 3), lit("-"), lpad(element_at(p, 1), 2, "0")))
-  }
+  def yearMonthSplit(date: Column): Column =
+    when(fieldCount(date, '/') === 3,
+      concat(field(date, '/', 3), lit("-"), lpad(field(date, '/', 1), 2, "0")))
 
   /** Q1 (Job1): per (city, month) total precipitation hours and mean
     * temperature. Inner join drops weather rows whose location_id has

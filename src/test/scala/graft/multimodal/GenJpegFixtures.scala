@@ -5,7 +5,8 @@ import java.io.{ByteArrayOutputStream, File, FileOutputStream}
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 
 /** One-shot generator for the committed JPEG fixtures (run via
-  * `sbt "runMain graft.multimodal.GenJpegFixtures"`). Deterministic
+  * `sbt "Test/runMain graft.multimodal.GenJpegFixtures"`; it lives in
+  * the test sources because only MediaCodecsSpec uses it). Deterministic
   * synthetic rasters through the JDK's built-in encoder; outputs are
   * COMMITTED so the judged corpus never depends on re-running the
   * encoder (whose byte output may vary across JDK builds — the

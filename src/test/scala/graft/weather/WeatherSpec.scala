@@ -1,6 +1,7 @@
 package graft.weather
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.col
 import graft.SparkTestBase
 
 /** Micro-fixture tests asserting the reference's sharpest behavioral
@@ -13,12 +14,16 @@ class WeatherSpec extends SparkTestBase {
   private def wrow(id: String, date: String, temp: String, precip: String) =
     s"$id,$date,,,,$temp,,,,,,,,$precip"
 
+  // Jaffna in Tamil script: three-byte UTF-8 characters in a field
+  private val Jaffna = "யாழ்ப்பாணம்"
+
   private lazy val dir = {
     val d = Files.createTempDirectory("weather_fixture").toFile
     val location = Seq(
       "location_id,latitude,longitude,elevation,utc_offset_seconds,timezone,timezone_abbreviation,city_name",
       "0,6.92,79.90,4,19800,Asia/Colombo,530,Colombo",
-      "10,9.38,80.38,19,19800,Asia/Colombo,530,Kilinochchi[1]")
+      "10,9.38,80.38,19,19800,Asia/Colombo,530,Kilinochchi[1]",
+      s"5,9.66,80.01,5,19800,Asia/Colombo,530,$Jaffna") // non-ASCII, verbatim
     val weather = Seq(
       "location_id,date,a,b,c,temperature_2m_mean,d,e,f,g,h,i,j,precipitation_hours",
       wrow("0", "1/5/2023", "30.0", "10.0"),
@@ -32,9 +37,11 @@ class WeatherSpec extends SparkTestBase {
       wrow("99", "1/2/2023", "20.0", "7.0"),  // unknown location: inner-join drop in Q1
       "1,1/3/2023,x,y,z,1.0,q,w,e",           // 9 fields: arity-dropped everywhere
       "   ",                                   // blank line
-      wrow("0", "bad-date", "20.0", "3.0"))   // malformed date: Q2 drops (no '/'×2)
+      wrow("0", "bad-date", "20.0", "3.0"),   // malformed date: Q2 drops (no '/'×2)
+      "  " + wrow("0", "4/3/2023", "18.0", "2.0"), // leading spaces: trimmed
+      wrow("0", "4/9/2023", "16.0", "1.5") + ",")  // trailing comma: 15 fields, kept
     Files.write(d.toPath.resolve("locationData.csv"),
-      String.join("\n", location: _*).getBytes)
+      String.join("\n", location: _*).getBytes("UTF-8"))
     Files.write(d.toPath.resolve("weatherData.csv"),
       String.join("\n", weather: _*).getBytes)
     d.getAbsolutePath
@@ -45,12 +52,12 @@ class WeatherSpec extends SparkTestBase {
 
   test("location passes city names through verbatim incl. Kilinochchi[1]") {
     val cities = location.select("city_name").collect().map(_.getString(0)).toSet
-    assert(cities === Set("Colombo", "Kilinochchi[1]"))
+    assert(cities === Set("Colombo", "Kilinochchi[1]", Jaffna))
   }
 
   test("arity dispatch: 9-field line dropped, 14-field kept, headers skipped") {
-    // 12 data lines; the blank and the 9-field line drop → 10 survive
-    assert(weather.count() === 10)
+    // 14 data lines; the blank and the 9-field line drop → 12 survive
+    assert(weather.count() === 12)
   }
 
   test("Q1: zero-fill-and-count AVG, zero-fill SUM, inner-join + row drops") {
@@ -79,8 +86,8 @@ class WeatherSpec extends SparkTestBase {
     val top = Weather.q2MaxPrecipMonth(weather).collect()(0)
     assert(top.getString(0) === "2023-01" && top.getDouble(1) === 28.0)
 
-    // Tie-break: restrict to Feb+Mar (both 12.0) → earliest month wins
-    import org.apache.spark.sql.functions.col
+    // Tie-break: drop January → Feb and Mar tie at 12.0 above Apr's
+    // 3.5 → earliest month wins
     val tied = Weather.q2MaxPrecipMonth(
       weather.where(!col("date").startsWith("1/")))
       .collect()(0)
@@ -133,5 +140,38 @@ class WeatherSpec extends SparkTestBase {
     val q2Plan = Weather.q2MaxPrecipMonth(weather)
       .queryExecution.executedPlan.toString
     assert(q2Plan.contains("TakeOrderedAndProject"))
+  }
+
+  test("tokenizer edges: leading spaces trimmed, trailing comma kept, non-ASCII verbatim") {
+    val byDate = weather.collect().map(r => r.getString(1) -> r).toMap
+    // trimmed before tokenizing, so the id is "0", not "  0"
+    assert(byDate("4/3/2023").getString(0) === "0")
+    // split(",", -1) keeps the trailing empty field: 15 fields, and
+    // field 14 is still the precipitation
+    assert(byDate("4/9/2023").getDouble(3) === 1.5)
+    assert(byDate("4/9/2023").getDouble(2) === 16.0)
+    val q1 = Weather.q1CityMonthlyAgg(weather, location)
+      .where(col("year_month") === "2023-04").collect()
+    assert(q1.map(r => (r.getString(0), r.getDouble(2), r.getDouble(3))).toSeq ===
+      Seq(("Colombo", 3.5, 17.0)))
+    val city = location.where(col("location_id") === 5).collect()(0).getString(7)
+    assert(city === Jaffna && city.getBytes("UTF-8").length === 33)
+  }
+
+  test("no plan splits a line into an array: every field is a byte scan") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Expression, StringSplit}
+    import graft.plans.SplitField
+    def has(df: DataFrame)(p: Expression => Boolean): Boolean =
+      df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(p)))
+    val judged = Weather.queries.map(q => q.name -> q.fn(spark, "unused"))
+    val plans = Seq(
+      "q1CityMonthlyAgg" -> Weather.q1CityMonthlyAgg(weather, location),
+      "q2MaxPrecipMonth" -> Weather.q2MaxPrecipMonth(weather)) ++ judged
+    assert(judged.map(_._1).toSet === Set("w1_city_month", "w2_max_precip"))
+    for ((name, df) <- plans) {
+      assert(!has(df)(_.isInstanceOf[StringSplit]), s"$name plans a StringSplit")
+      assert(has(df)(_.isInstanceOf[SplitField]), s"$name reads no field")
+    }
   }
 }
