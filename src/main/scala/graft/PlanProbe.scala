@@ -1,20 +1,5 @@
 package graft
 
-/** Dev utility: print a catalog query's executed plan at sf0.001.
-  * Usage: `sbt "runMain graft.PlanProbe q66_lateral_join"` — the
-  * iterate-on-the-plan loop the build discipline calls for, without
-  * writing a throwaway spec per inspection.
-  */
-object PlanProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.get()
-    val df = Catalog.queryMap(args(0))(spark, "/root/testdata/sf0.001")
-    println("=====PLAN=====")
-    println(df.queryExecution.executedPlan.toString)
-    spark.stop()
-  }
-}
-
 /** Dev utility: dump `.explain("formatted")` for EVERY catalog query
   * to one file per query — the plan corpus the optimization rounds
   * grep for Exchange counts, join strategies and pushdown evidence.

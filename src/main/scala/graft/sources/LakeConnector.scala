@@ -94,18 +94,7 @@ class GraftLakeSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val root = lakeRoot(options)
     val snap = SnapshotLake.snapshot(root, asOf(options, root))
-    // the manifest's recorded schema is authoritative: on an evolved
-    // chain it is the WIDENED union (old files null-fill), where any
-    // single file's footer would be one commit's partial view —
-    // and it costs zero footer reads. Pre-schema manifests fall back
-    // to one footer read of one committed file (driver-side,
-    // KB-scale).
-    val base = snap.schema.getOrElse {
-      require(snap.files.nonEmpty, s"lake at $root v${snap.version} has no " +
-        "data files; pass a schema explicitly")
-      SparkSession.active.read
-        .parquet(SnapshotLake.dataPath(root, snap.files.head.name)).schema
-    }
+    val base = LakeTable.schemaOf(root, snap)
     // change-feed reads surface the table schema plus the change
     // bookkeeping columns (Delta CDF's _change_type/_commit_version)
     if (options.getBoolean("readChangeFeed", false))
@@ -127,8 +116,15 @@ class GraftLakeSource extends TableProvider {
   }
 }
 
+/** `pinned`: an already-loaded snapshot (possibly restricted to some
+  * of its files) that scans read instead of loading `asOf` — how the
+  * Scala verbs read through this table without re-parsing the
+  * manifest. It is a constructor argument only: no option or SQL
+  * reaches it.
+  */
 final class LakeTable(root: String, asOf: Option[Int], tschema: StructType,
-    opts: Map[String, String] = Map.empty)
+    opts: Map[String, String] = Map.empty,
+    pinned: Option[SnapshotLake.Snapshot] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
@@ -378,7 +374,8 @@ final class LakeTable(root: String, asOf: Option[Int], tschema: StructType,
         s"change-feed range [$from, $to] outside the chain's [0, $head]")
       (from, to)
     }
-    new LakeScanBuilder(root, asOf, tschema, cdf = cdf, cdfRange = cdfRange)
+    new LakeScanBuilder(root, asOf, tschema, cdf = cdf, cdfRange = cdfRange,
+      pinned = pinned)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -616,6 +613,21 @@ final class LakeTable(root: String, asOf: Option[Int], tschema: StructType,
 }
 
 object LakeTable {
+  /** The table schema of `snap`: the manifest's recorded schema is
+    * authoritative — on an evolved chain it is the WIDENED union (old
+    * files null-fill), where any single file's footer would be one
+    * commit's partial view — and it costs zero footer reads.
+    * Pre-schema manifests fall back to one footer read of one
+    * committed file (driver-side, KB-scale).
+    */
+  def schemaOf(root: String, snap: SnapshotLake.Snapshot): StructType =
+    snap.schema.getOrElse {
+      require(snap.files.nonEmpty, s"lake at $root v${snap.version} has no " +
+        "data files; pass a schema explicitly")
+      SparkSession.active.read
+        .parquet(SnapshotLake.dataPath(root, snap.files.head.name)).schema
+    }
+
   /** The lake's file-identity metadata column (Delta/Iceberg's
     * `_file`).
     */
@@ -686,14 +698,16 @@ private[sources] object PartPredicate {
   */
 final class LakeScanBuilder(root: String, asOf: Option[Int],
     tschema: StructType, forRowLevelOp: Boolean = false,
-    cdf: Boolean = false, cdfRange: Option[(Int, Int)] = None)
+    cdf: Boolean = false, cdfRange: Option[(Int, Int)] = None,
+    pinned: Option[SnapshotLake.Snapshot] = None)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
 
-  private val snap = SnapshotLake.snapshotOrEmpty(root, asOf)
+  private val snap =
+    pinned.getOrElse(SnapshotLake.snapshotOrEmpty(root, asOf))
 
   /** The scan this builder last produced — the row-level operation's
     * write reads its post-runtime-filter file list at commit time to
@@ -2185,8 +2199,21 @@ final case class LakeKeyedSplit(split: LakeSplit, keyVal: Any)
   */
 final case class LakeAggScan(version: Int, filesTotal: Int,
     funcs: Seq[String], rows: Seq[Seq[Any]], schema: StructType)
-    extends Scan with Batch {
+    extends Scan with Batch
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   override def readSchema(): StructType = schema
+  // the answer rows are in hand: reporting their exact size lets the
+  // planner broadcast a manifest-answered aggregate like any other
+  // one-row relation, never fall back to a cartesian product
+  override def estimateStatistics()
+      : org.apache.spark.sql.connector.read.Statistics =
+    new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(
+          math.max(1L, rows.length.toLong * schema.defaultSize))
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.of(rows.length.toLong)
+    }
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftLake v=$version MANIFEST-AGG [${funcs.mkString(", ")}] " +

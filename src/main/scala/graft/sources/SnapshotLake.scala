@@ -47,9 +47,12 @@ import graft.Catalog.Q
   *    or orphaned parquet under data/ can never surface
   *    (SnapshotLakeSpec plants one and proves it).
   *
-  * Stats are collected once per commit with one Spark pass over the
-  * NEW files only (`groupBy(input_file_name())`) — incremental, like
-  * a real lake's write-time stats, never a table rescan.
+  * Stats are collected task-side while the NEW files are written
+  * ([[SegStatsAcc]]) — incremental, like a real lake's write-time
+  * stats, never a table rescan. Every read, the verbs' rewrite
+  * sources included, goes through the connector's scan
+  * ([[LakeScan]]): one code path decides deletion vectors, column
+  * mapping and row identity.
   *
   * Same single-filesystem caveat as LedgerSink: manifests and data
   * move through `java.nio` paths, so driver and executors must share
@@ -533,70 +536,48 @@ object SnapshotLake {
       org.apache.spark.sql.types.StructType(parent.fields ++ fresh))
   }
 
-  /** Read `fs` under the snapshot's recorded table schema: files
-    * written before a column existed null-fill it (Spark's
-    * user-specified-schema parquet contract), data files are
-    * requested by their PHYSICAL column names, and the frame
-    * surfaces the LOGICAL ones — the read half of column mapping.
-    * Pre-schema manifests fall back to plain footer inference.
+  /** The one lake reader: `fs` of `snap` through the connector's
+    * scan ([[LakeScanBuilder]] over `snap` restricted to `fs`, so the
+    * manifest is not parsed again). The reader applies deletion
+    * vectors, requests PHYSICAL column names and surfaces the LOGICAL
+    * ones (column mapping), and null-fills columns a file predates.
+    * `meta` appends metadata columns under new names — `_file` (the
+    * row's exact `dataPath`), `_pos` (its physical, pre-vector
+    * position) or `_row_id` (its stable id, NULL where the file
+    * carries none). An empty `fs` yields the snapshot's schema with
+    * zero rows.
     */
-  private def readFiles(s: SparkSession, root: String, snap: Snapshot,
-      fs: Seq[FileStat]): DataFrame = {
-    def physRead(fl: Seq[FileStat]): DataFrame = {
-      val paths = fl.map(f => dataPath(root, f.name))
-      snap.schema match {
-        case None => s.read.parquet(paths: _*)
-        case Some(logical) =>
-          s.read.schema(ColMap.physicalSchema(logical)).parquet(paths: _*)
-      }
-    }
-    val (dvd, plain) = fs.partition(_.dv.exists(_.count > 0))
-    val physDf =
-      if (dvd.isEmpty) physRead(fs)
-      else {
-        // DELETION-VECTOR files: anti-join (file, row position)
-        // against the vectors' positions — total anti-join build rows
-        // = deleted-row count, KB-scale by the DV/CoW threshold, so
-        // the join broadcasts and the filter is map-side. Clean files
-        // keep the untouched scan; the two legs union.
-        val masked = antiJoinDv(s, root,
-          physRead(dvd)
-            .withColumn("__dv_f", normFilePath(col("_metadata.file_path")))
-            .withColumn("__dv_i", col("_metadata.row_index")),
-          dvd).drop("__dv_f", "__dv_i")
-        if (plain.isEmpty) masked else physRead(plain).unionByName(masked)
-      }
-    snap.schema.fold(physDf) { logical =>
-      val phys = ColMap.physicalSchema(logical)
-      if (java.util.Arrays.equals(
-          phys.fieldNames.asInstanceOf[Array[AnyRef]],
-          logical.fieldNames.asInstanceOf[Array[AnyRef]])) physDf
-      else physDf.toDF(logical.fieldNames.toIndexedSeq: _*)
-    }
+  private def scan(s: SparkSession, root: String, snap: Snapshot,
+      fs: Seq[FileStat], meta: (String, String)*): DataFrame = {
+    val table = new LakeTable(root, Some(snap.version),
+      LakeTable.schemaOf(root, snap), pinned = Some(snap.copy(files = fs)))
+    val df = org.apache.spark.sql.graft.Bridge.ofRows(s,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None,
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+    if (meta.isEmpty) df
+    else df.select(col("*") +: meta.map { case (m, as) => col(m).as(as) }: _*)
   }
 
-  /** `_metadata.file_path` renders as a URI (`file:/…` or
-    * `file:///…`); normalize to the plain absolute path manifest
-    * math uses. A path with no scheme passes through unchanged.
+  /** A rewrite's source columns: `__src` names each row's file for
+    * [[routeToSourceBuckets]]; with `ids`, the stable row id rides
+    * as the physical `__rid` column the outputs materialize (tagged
+    * `ridMat`), so row tracking survives copy-on-write, purge and
+    * compaction.
     */
-  private def normFilePath(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    regexp_replace(c, "^file:/+", "/")
+  private def rewriteCols(ids: Boolean): Seq[(String, String)] =
+    (LakeTable.FileColumn -> "__src") +: idCol(ids)
 
-  /** Drop rows of `df` whose (normalized absolute path `__dv_f`,
-    * physical row position `__dv_i`) is deleted in `fs`' vectors.
+  private def idCol(ids: Boolean): Seq[(String, String)] =
+    if (ids) Seq(LakeTable.RowIdColumn -> LakeTable.RidPhysColumn) else Nil
+
+  /** Every file in `fs` carries row identity (implicit base or
+    * materialized ids) — the condition for a rewrite to keep it.
+    * Pre-row-tracking sources degrade to plain rewrites: ids are
+    * never invented.
     */
-  private def antiJoinDv(s: SparkSession, root: String, df: DataFrame,
-      fs: Seq[FileStat]): DataFrame = {
-    val pos = fs.flatMap(f =>
-      f.dv.fold(Array.empty[Long])(_.positions)
-        .map(p => (dataPath(root, f.name), p)))
-    if (pos.isEmpty) df
-    else df.join(
-      broadcast(s.createDataFrame(pos).toDF("__dvj_f", "__dvj_p")),
-      col("__dv_f") === col("__dvj_f") && col("__dv_i") === col("__dvj_p"),
-      "left_anti")
-  }
+  private def tracked(fs: Seq[FileStat]): Boolean =
+    fs.nonEmpty && fs.forall(f => f.ridMat || f.rid.isDefined)
 
   /** Blocked bloom over longs: k=6 bit positions from one 64-bit
     * avalanche hash (double hashing h1 + i·h2) — deterministic
@@ -1404,36 +1385,22 @@ object SnapshotLake {
   }
 
 
-  /** Suffix of a manifest file name below its last `data/` segment —
-    * unique within a lake because every batch dir carries a fresh
-    * UUID, and stable whether the entry is root-relative or a
-    * clone's absolute borrowed path.
+  /** Route rows carrying their source file's path in `__src` (the
+    * scan's `_file`) back to one output bucket per SOURCE file via a
+    * broadcast path→bucket join — flat at any file count, where a
+    * chained `when` would build O(files) expression depth. Rows whose
+    * `__src` is not in the map (merge's `__insert__` sentinel) fall
+    * to `default`. Emits the routed frame with `__bucket` set and
+    * `__src` dropped.
     */
-  private def dataSuffix(name: String): String = {
-    val i = name.lastIndexOf("data/")
-    require(i >= 0, s"manifest entry '$name' has no data/ segment")
-    name.substring(i + 5)
-  }
-
-  /** Route rows carrying a `__src` file URI (`input_file_name`) back
-    * to one output bucket per SOURCE file via a broadcast
-    * name→bucket join — flat at any file count, where the previous
-    * chained `when` built O(files) expression depth (fine for the
-    * intended ~2 boundary files, pathological for a predicate
-    * straddling thousands). Rows whose `__src` is not in the map
-    * (merge's `__insert__` sentinel) fall to `default`. Emits the
-    * routed frame with `__bucket` set and `__src` dropped.
-    */
-  private def routeToSourceBuckets(s: SparkSession, cur: DataFrame,
-      nameToBucket: Seq[(String, String)], default: String): DataFrame = {
+  private def routeToSourceBuckets(s: SparkSession, root: String,
+      cur: DataFrame, nameToBucket: Seq[(String, String)],
+      default: String): DataFrame = {
     val mapDf = s.createDataFrame(nameToBucket.map { case (n, b) =>
-      (dataSuffix(n), b) }).toDF("__sfx", "__b")
-    cur
-      // greedy ^.* pins the LAST data/ segment, mirroring dataSuffix
-      .withColumn("__sfx", regexp_extract(col("__src"), "^.*data/(.*)$", 1))
-      .join(broadcast(mapDf), Seq("__sfx"), "left")
+      (dataPath(root, n), b) }).toDF("__src", "__b")
+    cur.join(broadcast(mapDf), Seq("__src"), "left")
       .withColumn("__bucket", coalesce(col("__b"), lit(default)))
-      .drop("__sfx", "__b", "__src")
+      .drop("__src", "__b")
   }
 
   /** Write a rewrite routed back one output file per group of source
@@ -1448,7 +1415,7 @@ object SnapshotLake {
       : Seq[(FileStat, Option[Seq[FileStat]])] = {
     val byBucket = groups.zipWithIndex.map { case (g, i) => s"f$i" -> g }.toMap
     LakeCommit.writeRouted(root, ColMap.toPhysical(routeToSourceBuckets(s,
-        cur, byBucket.toSeq.flatMap { case (b, g) => g.map(_.name -> b) },
+        root, cur, byBucket.toSeq.flatMap { case (b, g) => g.map(_.name -> b) },
         default), base.schema),
       StatsSpec(base.statCol, base.bloomCol, inheritedBloomBytes(base),
         base.statCol2),
@@ -1534,19 +1501,11 @@ object SnapshotLake {
     // tag ridMat); inserts are genuinely new rows and land in a
     // separate `ins` file tagged ridNew (fresh implicit base, safe
     // for the change feed's rid diff: all its rows ARE inserts).
-    val ridKept = touchedFiles.nonEmpty &&
-      touchedFiles.forall(f => f.ridMat || f.rid.isDefined)
+    val ridKept = tracked(touchedFiles)
     val newData: DataFrame = {
       val up = upserts.select(col(key).cast("long").as(key) +:
         payload.map(col): _*)
-      val cur =
-        if (touchedFiles.isEmpty)
-          read(s, root).where(lit(false))
-            .withColumn("__src", lit(null).cast("string"))
-        else
-          (if (ridKept) readFilesForRewrite(s, root, base, touchedFiles)._1
-           else readFiles(s, root, base, touchedFiles))
-            .withColumn("__src", input_file_name())
+      val cur = scan(s, root, base, touchedFiles, rewriteCols(ridKept): _*)
       val ridCols =
         if (ridKept) Seq(col(LakeTable.RidPhysColumn)) else Seq.empty
       // survivors: delete first, then presence-flag update in place
@@ -1653,13 +1612,14 @@ object SnapshotLake {
         // pattern) — the shuffle moves boundary-file bytes, nothing
         // else; survivors keep their stable row ids (__rid) when the
         // sources carry identity
-        val (src, ridKept) = readFilesForRewrite(s, root, base, straddling)
-        val cur = src
-          .withColumn("__src", input_file_name())
+        val ridKept = tracked(straddling)
+        val cur = scan(s, root, base, straddling, rewriteCols(ridKept): _*)
           .where(!(col(key) >= lo && col(key) < hi))
         writeRoutedToSources(s, root, base, cur, straddling.map(Seq(_)),
             default = "x")
-          .map { case (f, _) => if (ridKept) f.copy(ridMat = true) else f }
+          .map { case (f, src) =>
+            inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
+          }
       }
     val rowsDeleted = dropped.map(_.liveRows).sum +
       (straddling.map(_.liveRows).sum - newFiles.map(_.rows).sum)
@@ -1714,34 +1674,15 @@ object SnapshotLake {
     (committed, droppedN, rowsDropped)
   }
 
-  /** Logical-named read of `fs` that ALSO surfaces each row's
-    * physical identity — normalized absolute file path `__dv_f` and
-    * physical row position `__dv_i` — with existing deletion vectors
-    * applied (an already-deleted row must never re-match). The
-    * deletion-vector write path's scan.
+  /** The deletion-vector write path's scan: `fs` with each row's
+    * physical identity — `_file` and its pre-vector position `_pos`
+    * — and existing vectors applied (an already-deleted row must
+    * never re-match).
     */
-  private def readWithRowPos(s: SparkSession, root: String,
-      snap: Snapshot, fs: Seq[FileStat]): DataFrame = {
-    val paths = fs.map(f => dataPath(root, f.name))
-    val physDf = snap.schema match {
-      case None => s.read.parquet(paths: _*)
-      case Some(logical) =>
-        s.read.schema(ColMap.physicalSchema(logical)).parquet(paths: _*)
-    }
-    val masked = antiJoinDv(s, root,
-      physDf
-        .withColumn("__dv_f", normFilePath(col("_metadata.file_path")))
-        .withColumn("__dv_i", col("_metadata.row_index")),
-      fs.filter(_.dv.exists(_.count > 0)))
-    snap.schema.fold(masked) { logical =>
-      val phys = ColMap.physicalSchema(logical)
-      if (java.util.Arrays.equals(
-          phys.fieldNames.asInstanceOf[Array[AnyRef]],
-          logical.fieldNames.asInstanceOf[Array[AnyRef]])) masked
-      else masked.toDF(
-        (logical.fieldNames :+ "__dv_f" :+ "__dv_i").toIndexedSeq: _*)
-    }
-  }
+  private def scanWithPos(s: SparkSession, root: String, snap: Snapshot,
+      fs: Seq[FileStat]): DataFrame =
+    scan(s, root, snap, fs, LakeTable.FileColumn -> LakeTable.FileColumn,
+      LakeTable.PosColumn -> LakeTable.PosColumn)
 
   /** Pass 2 of a row-level operation: per vector-routed file, the
     * sorted matched positions are encoded and STAGED EXECUTOR-SIDE
@@ -1753,9 +1694,9 @@ object SnapshotLake {
   private def stagePositions(s: SparkSession, root: String,
       matched: DataFrame): Map[String, String] = {
     import s.implicits._
-    matched.groupBy(col("__dv_f"))
-      .agg(sort_array(collect_list(col("__dv_i"))).as("__ps"))
-      .select(col("__dv_f").as[String], col("__ps").as[Seq[Long]])
+    matched.groupBy(col(LakeTable.FileColumn))
+      .agg(sort_array(collect_list(col(LakeTable.PosColumn))).as("__ps"))
+      .select(col(LakeTable.FileColumn).as[String], col("__ps").as[Seq[Long]])
       .map { case (f, ps) => (f, Dv.stageSpec(root, ps.toArray)._1) }
       .collect().toMap
   }
@@ -1802,10 +1743,10 @@ object SnapshotLake {
     require(cowThresholdRows >= 1, "cowThresholdRows must be positive")
     val base = snapshot(root)
     val key = base.statCol
-    val matched = readWithRowPos(s, root, base, base.files)
+    val matched = scanWithPos(s, root, base, base.files)
       .where(coalesce(cond, lit(false)))
     // pass 1: matched count per file — one output row per TOUCHED file
-    val counts: Map[String, Long] = matched.groupBy(col("__dv_f"))
+    val counts: Map[String, Long] = matched.groupBy(col(LakeTable.FileColumn))
       .agg(count(lit(1)).as("__n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val byPath = base.files.map(f => dataPath(root, f.name) -> f).toMap
@@ -1820,7 +1761,7 @@ object SnapshotLake {
     val positions: Map[String, String] =
       if (dvFiles.isEmpty) Map.empty
       else stagePositions(s, root,
-        readWithRowPos(s, root, base, dvFiles)
+        scanWithPos(s, root, base, dvFiles)
           .where(coalesce(cond, lit(false))))
     // over-threshold files rewrite copy-on-write, survivors routed
     // back one output file per source file (the [[delete]] pattern)
@@ -1830,9 +1771,8 @@ object SnapshotLake {
         // the rewrite MATERIALIZES survivors' stable row ids (__rid)
         // when every source carries identity — row tracking survives
         // the CoW route, and the change feed keeps its rid diff
-        val (src, ridKept) = readFilesForRewrite(s, root, base, cowFiles)
-        val cur = src
-          .withColumn("__src", input_file_name())
+        val ridKept = tracked(cowFiles)
+        val cur = scan(s, root, base, cowFiles, rewriteCols(ridKept): _*)
           .where(!coalesce(cond, lit(false)))
         // one output per source file: each rewrite inherits its
         // source's partition identity, so a merge-on-read delete on a
@@ -1925,8 +1865,8 @@ object SnapshotLake {
     def applySets(df: DataFrame): DataFrame =
       sets.foldLeft(df) { case (acc, (c, e)) => acc.withColumn(c, e) }
     val hit = coalesce(cond, lit(false))
-    val matched = readWithRowPos(s, root, base, base.files).where(hit)
-    val counts: Map[String, Long] = matched.groupBy(col("__dv_f"))
+    val matched = scanWithPos(s, root, base, base.files).where(hit)
+    val counts: Map[String, Long] = matched.groupBy(col(LakeTable.FileColumn))
       .agg(count(lit(1)).as("__n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (counts.isEmpty)
@@ -1942,7 +1882,7 @@ object SnapshotLake {
     val positions: Map[String, String] =
       if (dvFiles.isEmpty) Map.empty
       else stagePositions(s, root,
-        readWithRowPos(s, root, base, dvFiles).where(hit))
+        scanWithPos(s, root, base, dvFiles).where(hit))
     // one write job lands both legs: the vectored files' POST-IMAGES
     // (one fresh "ins" file) and the over-threshold files' in-place
     // rewrites (one output file per source file, merge's pattern).
@@ -1951,11 +1891,9 @@ object SnapshotLake {
     // post-images keep their pre-images' ids — so row tracking
     // survives updateRows and the CDF classifies it as updates by
     // rid — and CoW rewrites keep theirs.
-    val ridKept = (dvFiles ++ cowFiles)
-      .forall(f => f.ridMat || f.rid.isDefined)
+    val ridKept = tracked(dvFiles ++ cowFiles)
     def readLeg(fl: Seq[FileStat]): DataFrame =
-      if (ridKept) readFilesForRewrite(s, root, base, fl)._1
-      else readFiles(s, root, base, fl)
+      scan(s, root, base, fl, rewriteCols(ridKept): _*)
     val legs = Seq(
       if (dvFiles.isEmpty) None
       else Some(applySets(readLeg(dvFiles).where(hit))
@@ -1963,16 +1901,26 @@ object SnapshotLake {
       if (cowFiles.isEmpty) None
       else Some {
         val cur = readLeg(cowFiles)
-          .withColumn("__src", input_file_name())
         cur.where(!hit).unionByName(applySets(cur.where(hit)))
       }).flatten
     val newData = legs.reduce(_ unionByName _)
     // in-place rewrites inherit their source's partition identity
-    // (the "ins" post-image file spans partitions and stays untagged)
+    // unless a SET assigns a tagged column — its rows may have left
+    // the partition, and a wrong tag would prune them from every
+    // partition-filtered read; an untagged file is never pruned (the
+    // "ins" post-image file spans partitions and stays untagged too)
+    val setKeys = sets.map(st => colKey(st._1)).toSet
+    def tagSource(tag: String): String =
+      graft.functions.GraftBucket.parseTag(tag)
+        .orElse(graft.functions.GraftTruncate.parseTag(tag))
+        .fold(tag)(_._2)
+    val movesTags = cowFiles.exists(f => (f.part.toSeq ++ f.part2.toSeq)
+      .exists(tg => setKeys(colKey(tagSource(tg._1)))))
     val newFiles = writeRoutedToSources(s, root, base, newData,
         cowFiles.map(Seq(_)), default = "ins")
       .map { case (f, src) =>
-        inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
+        val f1 = if (ridKept) f.copy(ridMat = true) else f
+        if (movesTags) f1 else inheritPart(f1, src)
       }
     val touchedNames = (dvFiles ++ cowFiles).map(_.name).toSet
     var committed = -1
@@ -2152,11 +2100,13 @@ object SnapshotLake {
     // routing): the rewrite drops dead positions, nothing else —
     // surviving rows keep their stable ids (__rid) so row tracking
     // survives the maintenance verb
-    val (purgeSrc, ridKept) = readFilesForRewrite(s, root, base, purge)
+    val ridKept = tracked(purge)
     val newFiles = writeRoutedToSources(s, root, base,
-        purgeSrc.withColumn("__src", input_file_name()), purge.map(Seq(_)),
-        default = "x", order = Seq(col(key)))
-      .map { case (f, _) => if (ridKept) f.copy(ridMat = true) else f }
+        scan(s, root, base, purge, rewriteCols(ridKept): _*),
+        purge.map(Seq(_)), default = "x", order = Seq(col(key)))
+      .map { case (f, src) =>
+        inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
+      }
     val purgedNames = purge.map(_.name).toSet
     var committed = -1
     while (committed < 0) {
@@ -2255,7 +2205,8 @@ object SnapshotLake {
         // sources carry identity — the old "implicit ids do not
         // survive the re-route" degradation is gone for tracked
         // chains
-        val (reread, rbRid) = readFilesForRewrite(s, root, base, rebucket)
+        val rbRid = tracked(rebucket)
+        val reread = scan(s, root, base, rebucket, idCol(rbRid): _*)
         LakeCommit.writeRouted(root, ColMap.toPhysical(
               reread.withColumn("__bucket",
                 graft.functions.GraftBucket.idColumnFor(col(c), n,
@@ -2304,12 +2255,11 @@ object SnapshotLake {
       else {
         // packed rows keep their stable ids (row tracking survives
         // OPTIMIZE — Delta's lineage contract)
-        val (packSrc, packRid) =
-          readFilesForRewrite(s, root, base, packed.flatten)
+        val packRid = tracked(packed.flatten)
         val packSo = commonSo(packed.flatten)
         writeRoutedToSources(s, root, base,
-            packSrc.withColumn("__src", input_file_name()), packed,
-            default = "x", order = Seq(col(packSo.getOrElse(key))))
+            scan(s, root, base, packed.flatten, rewriteCols(packRid): _*),
+            packed, default = "x", order = Seq(col(packSo.getOrElse(key))))
           .map { case (f, g) => inheritPart(
             (if (packRid) f.copy(ridMat = true) else f).copy(sorted = packSo),
             g) }
@@ -2345,110 +2295,6 @@ object SnapshotLake {
     CompactResult(committed, base.files.size,
       kept.size + newFiles.size + rbFiles.size,
       packed.map(_.size).sum + rebucket.size)
-  }
-
-  /** Logical-named read of `fs` that ALSO surfaces each row's STABLE
-    * row id as `__t_rid` — the materialized `__rid` column for
-    * `ridMat` files, `base + physical position` for implicit files —
-    * with deletion vectors applied. Per-file legs (CDF diffs touch
-    * few files, and each file's base differs), unioned.
-    */
-  private def readWithRids(s: SparkSession, root: String,
-      snap: Snapshot, fs: Seq[FileStat]): DataFrame = {
-    val physSchema = snap.schema.map(ColMap.physicalSchema)
-    val legs = fs.map { f =>
-      val path = dataPath(root, f.name)
-      val withRid =
-        if (f.ridMat) {
-          val df = physSchema.fold(s.read.parquet(path))(p =>
-            s.read.schema(org.apache.spark.sql.types.StructType(
-              p.fields :+ org.apache.spark.sql.types.StructField(
-                LakeTable.RidPhysColumn,
-                org.apache.spark.sql.types.LongType))).parquet(path))
-          df.withColumn("__t_rid", col(LakeTable.RidPhysColumn))
-            .drop(LakeTable.RidPhysColumn)
-        } else {
-          val df = physSchema.fold(s.read.parquet(path))(p =>
-            s.read.schema(p).parquet(path))
-          df.withColumn("__t_rid",
-            lit(f.rid.getOrElse(sys.error(
-              s"readWithRids on id-less file ${f.name}"))) +
-              col("_metadata.row_index"))
-        }
-      val masked = antiJoinDv(s, root,
-        withRid
-          .withColumn("__dv_f", normFilePath(col("_metadata.file_path")))
-          .withColumn("__dv_i", col("_metadata.row_index")),
-        Seq(f).filter(_.dv.exists(_.count > 0)))
-        .drop("__dv_f", "__dv_i")
-      masked
-    }
-    val physDf = legs.reduce(_ unionByName _)
-    snap.schema.fold(physDf) { logical =>
-      val phys = ColMap.physicalSchema(logical)
-      if (java.util.Arrays.equals(
-          phys.fieldNames.asInstanceOf[Array[AnyRef]],
-          logical.fieldNames.asInstanceOf[Array[AnyRef]])) physDf
-      else physDf.toDF((logical.fieldNames :+ "__t_rid").toIndexedSeq: _*)
-    }
-  }
-
-  /** Rewrite-side read: like [[readFiles]], but when EVERY source
-    * file carries row identity the result ALSO materializes each
-    * row's stable id as the physical `__rid` column — so rewrite
-    * outputs can be tagged `ridMat` and row tracking SURVIVES
-    * copy-on-write, purge, and compaction (Delta's
-    * row-lineage-through-OPTIMIZE contract). Pre-row-tracking
-    * sources degrade to a plain read with `preserved = false`: ids
-    * are never invented.
-    *
-    * Scale shape: TWO scan legs (materialized-id files read their
-    * `__rid` column; implicit-base files derive `base + row_index`
-    * via a BROADCAST join on the KB-scale (file → base) map), never
-    * a leg per file — a 10,000-file compaction plans the same way a
-    * 2-file boundary rewrite does.
-    */
-  private def readFilesForRewrite(s: SparkSession, root: String,
-      snap: Snapshot, fs: Seq[FileStat]): (DataFrame, Boolean) = {
-    if (fs.isEmpty || !fs.forall(f => f.ridMat || f.rid.isDefined))
-      return (readFiles(s, root, snap, fs), false)
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val physSchema = snap.schema.map(ColMap.physicalSchema)
-    val (mat, imp) = fs.partition(_.ridMat)
-    def meta(df: DataFrame): DataFrame = df
-      .withColumn("__dv_f", normFilePath(col("_metadata.file_path")))
-      .withColumn("__dv_i", col("_metadata.row_index"))
-    val matLeg = if (mat.isEmpty) None else Some {
-      val paths = mat.map(f => dataPath(root, f.name))
-      meta(physSchema.fold(s.read.parquet(paths: _*))(p =>
-        s.read.schema(StructType(p.fields :+
-          StructField(LakeTable.RidPhysColumn, LongType)))
-          .parquet(paths: _*)))
-    }
-    val impLeg = if (imp.isEmpty) None else Some {
-      val paths = imp.map(f => dataPath(root, f.name))
-      val baseDf = s.createDataFrame(imp.map(f =>
-        (dataPath(root, f.name), f.rid.get))).toDF("__dv_f", "__ri_b")
-      meta(physSchema.fold(s.read.parquet(paths: _*))(p =>
-        s.read.schema(p).parquet(paths: _*)))
-        .join(broadcast(baseDf), Seq("__dv_f"))
-        .withColumn(LakeTable.RidPhysColumn,
-          col("__ri_b") + col("__dv_i"))
-        .drop("__ri_b")
-    }
-    val masked = antiJoinDv(s, root,
-      (matLeg.toSeq ++ impLeg.toSeq).reduce(_ unionByName _),
-      fs.filter(_.dv.exists(_.count > 0)))
-      .drop("__dv_f", "__dv_i")
-    val renamed = snap.schema.fold(masked) { logical =>
-      val phys = ColMap.physicalSchema(logical)
-      if (java.util.Arrays.equals(
-          phys.fieldNames.asInstanceOf[Array[AnyRef]],
-          logical.fieldNames.asInstanceOf[Array[AnyRef]])) masked
-      else masked.toDF((logical.fieldNames :+
-        LakeTable.RidPhysColumn).toIndexedSeq: _*)
-    }
-    (renamed, true)
   }
 
   /** Change data feed between two versions, computed from the
@@ -2501,8 +2347,9 @@ object SnapshotLake {
       added.forall(f => f.ridMat || f.ridNew ||
         f.rid.exists(_ < parentHw))
     if (ridDiff) {
-      val pre = readWithRids(s, root, from, removed)
-      val post = readWithRids(s, root, to, added)
+      val pre = scan(s, root, from, removed,
+        LakeTable.RowIdColumn -> "__t_rid")
+      val post = scan(s, root, to, added, LakeTable.RowIdColumn -> "__t_rid")
       val payload = pre.columns.filterNot(_ == "__t_rid").toSeq
       def pack(df: DataFrame, tag: String): DataFrame =
         df.select(col("__t_rid"),
@@ -2520,15 +2367,12 @@ object SnapshotLake {
             .otherwise(col(s"__pre.$c")).as(c)): _*)
       return (diff, removed.size + added.size, to.files.size)
     }
-    def readSide(fs: Seq[FileStat]): DataFrame =
-      if (fs.isEmpty) read(s, root, Some(toV)).where(lit(false))
-      else readFiles(s, root, to, fs)
-    val payload = readSide(to.files.take(1)).columns.filterNot(_ == key).toSeq
-    def pack(df: DataFrame, tag: String): DataFrame =
-      df.select(col(key).cast("long").as(key),
+    val payload = scan(s, root, to, Nil).columns.filterNot(_ == key).toSeq
+    def pack(fs: Seq[FileStat], tag: String): DataFrame =
+      scan(s, root, to, fs).select(col(key).cast("long").as(key),
         struct(payload.map(col): _*).as(s"__$tag"))
-    val pre = pack(readSide(removed), "pre")
-    val post = pack(readSide(added), "post")
+    val pre = pack(removed, "pre")
+    val post = pack(added, "post")
     val diff = pre.join(post, Seq(key), "full_outer")
       .withColumn("change_type",
         when(col("__pre").isNull, lit("insert"))
@@ -2662,7 +2506,7 @@ object SnapshotLake {
     val base = snapshot(root)
     if (base.files.isEmpty)
       return ClusterResult(base.version, 0, 0, 0)
-    val df = readFiles(s, root, base, base.files)
+    val df = scan(s, root, base, base.files)
     val b = df.agg(min(col(xCol)).cast("long"), max(col(xCol)).cast("long"),
       min(col(yCol)).cast("long"), max(col(yCol)).cast("long")).head()
     require(!b.anyNull,
@@ -2745,9 +2589,7 @@ object SnapshotLake {
       case Some((c, v)) if colKey(c) == colKey(partCol) => v == value
       case _ => true
     })
-    if (keep.isEmpty) read(s, root, asOf).where(lit(false))
-    else readFiles(s, root, snap, keep)
-      .where(col(partCol).cast("string") === value)
+    scan(s, root, snap, keep).where(col(partCol).cast("string") === value)
   }
 
   /** The columns [[SegStatsAcc]] records CBO column stats for:
@@ -2922,17 +2764,14 @@ object SnapshotLake {
       s"lake at $root has no bloom index — commit with bloomCol to enable readPoint"))
     val kept = snap.files.filter(f =>
       f.bloom.forall(Bloom.mightContain(_, value)))
-    val df =
-      if (kept.isEmpty) read(s, root, asOf).where(lit(false))
-      else readFiles(s, root, snap, kept)
-        .where(col(c) === value)
-    (df, kept.length, snap.files.length)
+    (scan(s, root, snap, kept).where(col(c) === value), kept.length,
+      snap.files.length)
   }
 
   /** Read a snapshot (head by default, `asOf` for time travel). */
   def read(s: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
     val snap = snapshot(root, asOf)
-    readFiles(s, root, snap, snap.files)
+    scan(s, root, snap, snap.files)
   }
 
   /** Read with file skipping for `statCol ∈ [lo, hi)`: drops every
@@ -2946,13 +2785,9 @@ object SnapshotLake {
       asOf: Option[Int] = None): (DataFrame, Int, Int) = {
     val snap = snapshot(root, asOf)
     val kept = snap.files.filter(f => f.hi >= lo && f.lo < hi)
-    val df =
-      if (kept.isEmpty)
-        read(s, root, asOf).where(lit(false))
-      else
-        readFiles(s, root, snap, kept)
-          .where(col(snap.statCol) >= lo && col(snap.statCol) < hi)
-    (df, kept.length, snap.files.length)
+    (scan(s, root, snap, kept)
+        .where(col(snap.statCol) >= lo && col(snap.statCol) < hi),
+      kept.length, snap.files.length)
   }
 
   /** 2-D box read: keeps a file only if BOTH its [lo, hi] and its
@@ -2976,12 +2811,10 @@ object SnapshotLake {
     val kept = snap.files.filter(f =>
       f.hi >= lo && f.lo < hi &&
         f.dim2.forall { case (l2, h2) => h2 >= lo2 && l2 < hi2 })
-    val df =
-      if (kept.isEmpty) read(s, root, asOf).where(lit(false))
-      else readFiles(s, root, snap, kept)
+    (scan(s, root, snap, kept)
         .where(col(snap.statCol) >= lo && col(snap.statCol) < hi &&
-          col(c2) >= lo2 && col(c2) < hi2)
-    (df, kept.length, snap.files.length)
+          col(c2) >= lo2 && col(c2) < hi2),
+      kept.length, snap.files.length)
   }
 
   /** Morton (Z-order) bucket expression over two long columns: each

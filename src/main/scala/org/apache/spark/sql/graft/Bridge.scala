@@ -17,9 +17,10 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Wrap a custom logical node (graft.plans.IntervalJoin) as a
-    * DataFrame — `Dataset.ofRows` is `private[sql]` in Spark 4, same
-    * scoping as the converters above.
+  /** Wrap a logical plan built outside the reader API (the custom
+    * graft.plans.IntervalJoin node, the lake's pinned-snapshot scan
+    * relation) as a DataFrame — `Dataset.ofRows` is `private[sql]` in
+    * Spark 4, same scoping as the converters above.
     */
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.graft.ListenerSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -98,8 +104,67 @@ class LakeConnectorSpec extends SparkTestBase {
     val scan = plannedScan(df)
     assert(scan.required.fieldNames.toSeq === Seq("cents"),
       s"projection not pruned: ${scan.description()}")
-    assert(df.agg(sum(col("cents"))).head().getLong(0) ===
-      SnapshotLake.read(spark, root).agg(sum(col("cents"))).head().getLong(0))
+    // the fixture's cents total, computed from the source table
+    val want = graft.sources.Tables.events(spark, sf("sf0.001"))
+      .agg(sum(round(col("value") * 100).cast("long"))).head().getLong(0)
+    assert(df.agg(sum(col("cents"))).head().getLong(0) === want)
+  }
+
+  /** Every node of an executed plan, through AQE's stage boundaries. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  test("every Scala read and rewrite source scans through LakeScan") {
+    val root = Housekeeping.tempDir("lakeconn_one_reader")
+    val tbl = spark.range(400).select(col("id").as("k"),
+      (col("id") * 7).as("v"), concat(lit("d"), col("id") % 4).as("dom"))
+    SnapshotLake.commitPartitioned(spark, root, tbl, "dom", "k",
+      bloomCol = Some("v"), statCol2 = Some("v"))
+    def oneReader(what: String, df: DataFrame): Unit = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(LakeScan.findIn(plan).isDefined, s"$what plans no LakeScan")
+      assert(!nodes(plan).exists(_.isInstanceOf[FileSourceScanExec]),
+        s"$what plans a file-source scan:\n$plan")
+      assert(!df.queryExecution.optimizedPlan.treeString
+        .contains("_metadata"), s"$what references _metadata")
+    }
+    oneReader("read", SnapshotLake.read(spark, root))
+    oneReader("readPruned", SnapshotLake.readPruned(spark, root, 10L, 20L)._1)
+    oneReader("readPoint", SnapshotLake.readPoint(spark, root, 91L)._1)
+    oneReader("readPruned2D",
+      SnapshotLake.readPruned2D(spark, root, 0L, 50L, 0L, 100L)._1)
+    oneReader("readPartition",
+      SnapshotLake.readPartition(spark, root, "dom", "d1"))
+    // a value every file's bloom rejects: no file kept, and the frame
+    // still carries the lake's schema with zero rows
+    val snap = SnapshotLake.snapshot(root)
+    val absent = (1L to 1000L).map(-_).find(v => snap.files.forall(
+      _.bloom.forall(!SnapshotLake.Bloom.mightContain(_, v)))).get
+    val (none, kept, total) = SnapshotLake.readPoint(spark, root, absent)
+    assert(kept === 0 && total === 4)
+    assert(none.schema === SnapshotLake.read(spark, root).schema)
+    assert(none.count() === 0L)
+    oneReader("readPoint (no file kept)", none)
+    // a straddling delete's rewrite source: its write job reads
+    // through the connector's RDD, never a file-source scan
+    val rdds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.foreach(r => rdds.add(r.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = SnapshotLake.delete(spark, root, 100L, 200L)
+      assert(res.filesRewritten === 4)
+      ListenerSync.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rdds.contains("DataSourceRDD"), s"delete read no lake scan: $rdds")
+    assert(!rdds.contains("FileScanRDD"), s"delete read parquet files: $rdds")
+    assert(SnapshotLake.read(spark, root).count() === 300L)
   }
 
   test("version option time-travels to the pinned snapshot") {

@@ -93,6 +93,34 @@ class LakeDvSpec extends SparkTestBase {
     assert(SnapshotLake.read(spark, root).count() === 700L)
   }
 
+  test("vectors on an already-vectored file record physical positions") {
+    val root = freshRoot()
+    clustered8(root)
+    val f0 = SnapshotLake.snapshot(root).files.find(_.lo == 0L).get
+    // the reference: each key's physical row index in file 0, read
+    // straight off the parquet file
+    val posOf: Map[Long, Long] = spark.read.parquet(s"$root/${f0.name}")
+      .select(col("k"), col("_metadata.row_index"))
+      .as[(Long, Long)].collect().toMap
+    def vectorOf(): Seq[Long] = SnapshotLake.snapshot(root).files
+      .find(_.name == f0.name).get.dv.get.positions.toSeq.sorted
+    SnapshotLake.deleteRows(spark, root, col("k") === 42L)
+    // a second delete scans the vectored file: its positions must
+    // stay pre-vector, not shift past the deleted row
+    SnapshotLake.deleteRows(spark, root, col("k").isin(50L, 60L))
+    assert(vectorOf() === Seq(42L, 50L, 60L).map(posOf).sorted)
+    SnapshotLake.updateRows(spark, root, col("k") === 70L,
+      Seq("v" -> lit(-1L)))
+    assert(vectorOf() === Seq(42L, 50L, 60L, 70L).map(posOf).sorted)
+    val got = SnapshotLake.read(spark, root).select("k", "v")
+      .as[(Long, Long)].collect().toMap
+    assert(got.size === 797)
+    assert(Seq(42L, 50L, 60L).forall(k => !got.contains(k)))
+    assert(got(70L) === -1L)
+    assert((0L until 800L).filterNot(Set(42L, 50L, 60L, 70L))
+      .forall(k => got(k) == k * 7))
+  }
+
   test("per-file cost routing: over-threshold files CoW, small ones vector, in one call") {
     val root = freshRoot()
     clustered8(root)

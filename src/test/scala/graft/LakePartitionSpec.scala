@@ -130,6 +130,53 @@ class LakePartitionSpec extends SparkTestBase {
     assert(scan.files.length === 1)
   }
 
+  test("a straddling range delete rewrites each file under its own tag") {
+    val root = freshRoot()
+    // every dom file spans k = 0..399, so [100, 200) straddles all four
+    SnapshotLake.commitPartitioned(spark, root, tbl(400), "dom", "k")
+    val res = SnapshotLake.delete(spark, root, 100L, 200L)
+    assert(res.filesRewritten === 4)
+    assert(res.rowsDeleted === 100L)
+    val snap = SnapshotLake.snapshot(root)
+    // one output per source, none routed to the default bucket
+    assert(snap.files.size === 4)
+    assert(!snap.files.exists(_.name.contains("__bucket=x")),
+      s"rows fell to the default bucket: ${snap.files.map(_.name)}")
+    assert(snap.files.flatMap(_.part).map(_._2).sorted ===
+      Seq("d0", "d1", "d2", "d3"))
+    snap.files.foreach { f =>
+      val vals = spark.read.parquet(s"$root/${f.name}")
+        .select("dom").distinct().as[String].collect().toSeq
+      assert(vals === Seq(f.part.get._2), s"${f.name} mixes partitions")
+    }
+    val want = (0L until 400L).filterNot(k => k >= 100 && k < 200)
+    assert(SnapshotLake.read(spark, root).select("k").as[Long].collect()
+      .sorted.toSeq === want)
+    assert(SnapshotLake.readPartition(spark, root, "dom", "d3").count() ===
+      want.count(_ % 4 == 3).toLong)
+  }
+
+  test("an updateRows that moves rows across partitions leaves no lying tag") {
+    val root = freshRoot()
+    SnapshotLake.commitPartitioned(spark, root, tbl(400), "dom", "k")
+    // 50 rows of d1 move to d2 through the in-place (CoW) leg
+    val res = SnapshotLake.updateRows(spark, root,
+      col("dom") === "d1" && col("k") < 200L, Seq("dom" -> lit("d2")),
+      cowThresholdRows = 10L)
+    assert(res.filesRewritten === 1)
+    val rewritten = SnapshotLake.snapshot(root).files
+      .filter(_.name.contains("__bucket=f0"))
+    assert(rewritten.size === 1 && rewritten.head.part.isEmpty,
+      s"the rewrite kept its source's tag: $rewritten")
+    def lake() = spark.read.format("graft.sources.GraftLakeSource")
+      .option("path", root).load()
+    assert(SnapshotLake.readPartition(spark, root, "dom", "d2").count() ===
+      150L)
+    assert(SnapshotLake.read(spark, root).where(col("dom") === "d1")
+      .count() === 50L)
+    assert(lake().where(col("dom") === "d2").count() === 150L)
+  }
+
   test("partition tags survive the parquet checkpoint roundtrip") {
     val root = freshRoot()
     SnapshotLake.commitPartitioned(spark, root, tbl(400), "dom", "k")
