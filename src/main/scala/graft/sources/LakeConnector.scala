@@ -1249,6 +1249,9 @@ final class LakeScanBuilder(root: String, asOf: Option[Int],
     !forRowLevelOp && // a row-level scan feeds a REWRITE: it must
       // produce the candidate files' actual rows, never a
       // manifest-answered aggregate
+    pinned.isEmpty && // a Scala verb's read opens its files, as the
+      // verbs always have: `read(...).count()` checks the rows on disk
+      // (vector masking, vacuum survivors), not the manifest's count
     snap.files.nonEmpty &&
       (agg.groupByExpressions() match {
         case Array() => aggsAnswerable(agg.aggregateExpressions().toSeq,
@@ -2199,21 +2202,8 @@ final case class LakeKeyedSplit(split: LakeSplit, keyVal: Any)
   */
 final case class LakeAggScan(version: Int, filesTotal: Int,
     funcs: Seq[String], rows: Seq[Seq[Any]], schema: StructType)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    extends Scan with Batch {
   override def readSchema(): StructType = schema
-  // the answer rows are in hand: reporting their exact size lets the
-  // planner broadcast a manifest-answered aggregate like any other
-  // one-row relation, never fall back to a cartesian product
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(
-          math.max(1L, rows.length.toLong * schema.defaultSize))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows.length.toLong)
-    }
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftLake v=$version MANIFEST-AGG [${funcs.mkString(", ")}] " +
