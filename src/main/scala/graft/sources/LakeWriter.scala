@@ -885,7 +885,7 @@ private[sources] object LakeCommit {
     }
     val head = SnapshotLake.snapshot(root)
     val replaced = head.files.filter(_.part.exists { case (c, v) =>
-      c.equalsIgnoreCase(colName) && values(v) }).map(_.name)
+      c.equalsIgnoreCase(colName) && values(v) })
     val spec = envelope(opts, Some(head), inherit = true).get
     val tagName2 = opts.get("partcol2").map(pc2 =>
       tagNameFor(opts, pc2, "partbuckets2", "parttrunc2"))
@@ -981,8 +981,8 @@ final class LakeReplaceBatchWrite(root: String, schema: StructType,
     val staged = messages.toSeq.flatMap(LakeCommit.stagedOf)
     val (live, empty) = staged.partition(_.rows > 0)
     empty.foreach(LakeCommit.discard(root, _))
-    val replaced = scanOf().fold(Seq.empty[String])(
-      _.effectiveFiles.map(_.name))
+    val replaced = scanOf().fold(Seq.empty[SnapshotLake.FileStat])(
+      _.effectiveFiles)
     if (live.isEmpty && replaced.isEmpty) return // vacuous (empty chain)
     val spec = LakeCommit.replaceSpec(root, opts)
       .getOrElse(LakeCommit.noEnvelope(root))

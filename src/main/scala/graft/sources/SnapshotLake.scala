@@ -23,14 +23,15 @@ import graft.Catalog.Q
   * actions — see [[CheckpointInterval]]; a snapshot IS the nearest
   * checkpoint's file list with its delta tail replayed:
   *
-  *  - COMMIT is write-new-files → write `_log/.tmp-*` → atomically
-  *    hard-LINK it into the next version slot (link(2) fails with
-  *    EEXIST; rename(2) would silently replace the winner). The
-  *    link is the only serialization point; a concurrent committer
-  *    losing the race re-reads the new head, rebases its file list
-  *    and retries — optimistic concurrency, no locks (append
-  *    rebases trivially; the data files themselves are never
-  *    rewritten).
+  *  - COMMIT is write-new-files → [[transact]]: load the head, state
+  *    the [[Change]] against it, check the change's read set
+  *    ([[rebase]], the one conflict checker), write `_log/.tmp-*`
+  *    and atomically hard-LINK it into the next version slot
+  *    (link(2) fails with EEXIST; rename(2) would silently replace
+  *    the winner). The link is the only serialization point; a
+  *    committer losing the race reruns the attempt on the new head —
+  *    optimistic concurrency, no locks, one loop for every verb (the
+  *    data files themselves are never rewritten).
   *  - TIME TRAVEL is reading an older manifest — old snapshots stay
   *    byte-stable forever because OVERWRITE only publishes a
   *    manifest that stops referencing old files; it deletes nothing
@@ -842,10 +843,11 @@ object SnapshotLake {
     * needs its scan to see.
     */
   private[sources] def snapshotOrEmpty(root: String,
-      asOf: Option[Int] = None): Snapshot =
-    if (asOf.isEmpty && headVersion(root) < 0)
-      Snapshot(-1, "", None, Seq.empty)
-    else snapshot(root, asOf)
+      asOf: Option[Int] = None): Snapshot = {
+    val v = asOf.getOrElse(headVersion(root))
+    if (asOf.isEmpty && v < 0) Snapshot(-1, "", None, Seq.empty)
+    else snapshot(root, Some(v))
+  }
 
   /** Versions between full (checkpoint) manifests. A commit whose
     * version is a multiple of this — or whose writer cannot state a
@@ -1111,27 +1113,167 @@ object SnapshotLake {
   def identityHighWater(root: String): Long =
     idhwOf(root, headVersion(root))
 
-  /** Stage + atomically publish version `v`; false = lost the race.
+  /** What one transaction attempt read — the input of the one
+    * conflict checker, [[rebase]]:
     *
-    * `parentFiles` = the file list of version v−1 as the caller read
-    * it inside its optimistic loop. When present and v is not a
-    * checkpoint boundary, the manifest is written as a DELTA — only
-    * the names that left the list and the [[FileStat]] lines that
-    * entered it — so commit cost is O(touched files). Callers that
-    * cannot state a parent (bootstrap, overwrite-by-intent verbs
-    * like restore/clone) pass None and publish a full checkpoint.
+    *  - `carried`: base entries the change depends on without
+    *    rewriting them; each must still be at the head;
+    *  - `rewritten`: base entries whose rows the change rewrote from
+    *    their BASE deletion vector; each must still be at the head
+    *    under that same vector, or the rewrite would resurrect the
+    *    rows a concurrent vector removed;
+    *  - `keys`: the key envelope [lo, hi] the change matched rows in.
+    *    A head file in neither list (appended since the base) whose
+    *    range intersects it conflicts: the change never saw its rows.
+    *    None lets appends carry through;
+    *  - `stats`: the stat envelope (statCol, bloomCol, statCol2) the
+    *    change's new files were written under. The head must still
+    *    declare the same stat column, and no other bloom or second
+    *    stat column, or the new files' stats would publish under
+    *    another column's name.
     */
-  private def tryPublish(root: String, v: Int, statCol: String,
-      bloomCol: Option[String], overwrite: Boolean,
-      files: Seq[FileStat], statCol2: Option[String] = None,
+  private[graft] final case class ReadSet(
+      carried: Seq[FileStat] = Nil,
+      rewritten: Seq[FileStat] = Nil,
+      keys: Option[(Long, Long)] = None,
+      stats: Option[(String, Option[String], Option[String])] = None)
+
+  /** One transaction attempt's effect on the head it was stated
+    * against. The new file list is `head.files − removed + added`,
+    * with the entries named in `vectors` restated under their grown
+    * vector; the header carries forward from the head (`txns`,
+    * `retired`, schema, stat envelope, row-id and identity
+    * high-waters) unless `header` states the next one.
+    *
+    *  - `vectors`: staged deletion-vector specs per file name
+    *    ([[Dv.stageSpec]]), unioned into the HEAD's vector. Union is
+    *    idempotent, so a racing delete of the same rows stays exact;
+    *    a vector reaching the file's row count drops the entry;
+    *  - `replace`: publish this snapshot whole, header and file list,
+    *    as a full checkpoint (overwrite, restore, clone, publish);
+    *  - `txn`, `idHw`, `ridFloor`: the commit's txn record, identity
+    *    high-water and row-id floor ([[tryPublish]]);
+    *  - `rowsDeleted`, `filesDropped`, `filesWithDv`: the verb's
+    *    result values; [[rebase]] adds the vector union's to them.
+    */
+  private[graft] final case class Change(
+      removed: Set[String] = Set.empty,
+      added: Seq[FileStat] = Nil,
+      vectors: Map[String, Seq[String]] = Map.empty,
+      read: ReadSet = ReadSet(),
+      header: Option[Snapshot] = None,
+      replace: Option[Snapshot] = None,
       txn: Option[(String, Long)] = None,
-      txns: Map[String, Long] = Map.empty,
-      schemaJson: Option[String] = None,
-      op: Option[String] = None,
-      parentFiles: Option[Seq[FileStat]] = None,
-      retired: Set[String] = Set.empty,
+      idHw: Option[Long] = None,
       ridFloor: Long = 0L,
-      idHw: Option[Long] = None): Boolean = {
+      rowsDeleted: Long = 0L,
+      filesDropped: Int = 0,
+      filesWithDv: Int = 0)
+
+  /** The stat envelope `snap` declares — what a [[ReadSet]] records
+    * for files written under it.
+    */
+  private def envelopeOf(snap: Snapshot)
+      : Option[(String, Option[String], Option[String])] =
+    Some((snap.statCol, snap.bloomCol, snap.statCol2))
+
+  /** THE conflict checker, pure so specs can drive it with hand-built
+    * snapshots: check `c`'s [[ReadSet]] against `head`, then return
+    * the file list to publish and `c` with the vector union's tallies
+    * added. Every refusal is a [[MergeConflictException]]: the change
+    * was derived from files or ranges the head no longer has.
+    */
+  private[graft] def rebase(root: String, op: String, head: Snapshot,
+      c: Change): (Seq[FileStat], Change) = {
+    def conflict(why: String): Nothing = throw new MergeConflictException(
+      s"$op on $root $why — re-run on the new head")
+    val r = c.read
+    r.stats.foreach { case (sc, bc, sc2) =>
+      def clash(a: Option[String], b: Option[String]): Boolean =
+        a.zip(b).exists { case (x, y) => !x.equalsIgnoreCase(y) }
+      if (!head.statCol.equalsIgnoreCase(sc) || clash(head.bloomCol, bc) ||
+          clash(head.statCol2, sc2))
+        conflict(s"found the stat envelope changed under the write " +
+          s"(written under ($sc, $bc, $sc2), the head declares " +
+          s"(${head.statCol}, ${head.bloomCol}, ${head.statCol2}))")
+    }
+    val byName = head.files.map(f => f.name -> f).toMap
+    val readNames = (r.carried ++ r.rewritten).map(_.name).toSet
+    val vanished = (readNames ++ c.vectors.keySet).filterNot(byName.contains)
+    if (vanished.nonEmpty)
+      conflict(s"read file(s) ${vanished.toSeq.sorted.mkString(", ")} " +
+        "that a concurrent commit rewrote or dropped")
+    val raced = r.rewritten.filter(f => byName(f.name).dv != f.dv)
+    if (raced.nonEmpty)
+      conflict(s"raced a deletion-vector change on " +
+        s"${raced.map(_.name).mkString(", ")} — rewriting from the base " +
+        "vector would resurrect those deletes")
+    r.keys.foreach { case (lo, hi) =>
+      val overlap = head.files.filter(f =>
+        !readNames(f.name) && f.lo <= hi && f.hi >= lo)
+      if (overlap.nonEmpty)
+        conflict(s"found concurrently appended file(s) " +
+          s"${overlap.map(_.name).mkString(", ")} overlapping its key " +
+          s"envelope [$lo, $hi]")
+    }
+    val grown = c.vectors.toSeq.sortBy(_._1).map { case (nm, specs) =>
+      val h = byName(nm)
+      val d = Dv.unionSpecs(root, h.dv, specs)
+      require(d.count <= h.rows, s"deletion vector of $nm records " +
+        s"${d.count} positions for a ${h.rows}-row file")
+      (h, d)
+    }
+    val (emptied, vectored) =
+      grown.partition { case (h, d) => d.count == h.rows }
+    val files = c.replace.fold(head.files.filterNot(f =>
+        c.removed(f.name) || c.vectors.contains(f.name)) ++
+      vectored.map { case (h, d) => h.copy(dv = Some(d)) } ++ c.added)(_.files)
+    (files, c.copy(
+      rowsDeleted = c.rowsDeleted +
+        grown.map { case (h, d) => d.count - h.dv.fold(0L)(_.count) }.sum,
+      filesDropped = c.filesDropped + emptied.size,
+      filesWithDv = c.filesWithDv + vectored.size))
+  }
+
+  /** The one commit loop: every lake verb publishes through it (Delta's
+    * `OptimisticTransaction`). An attempt loads the head once (an
+    * empty lake reads as version −1 with no files), runs `body`
+    * against it, checks the returned [[Change]] with [[rebase]] and
+    * tries to link the next version ([[tryPublish]]).
+    *
+    * Retry: a lost link means another writer's commit won the race, so
+    * the attempt reruns on the new head, without bound — every loss
+    * is someone else's progress. A failed check throws
+    * [[MergeConflictException]] and publishes nothing. `body` may run
+    * more than once, so it only states the change: the data files it
+    * names are written before the loop and stay on disk across
+    * attempts. Returns the published version and the checked change.
+    */
+  @annotation.tailrec
+  private[graft] def transact(root: String, op: String)(
+      body: Snapshot => Change): (Int, Change) = {
+    val head = snapshotOrEmpty(root)
+    val (files, c) = rebase(root, op, head, body(head))
+    if (tryPublish(root, op, head, c, files)) (head.version + 1, c)
+    else transact(root, op)(body)
+  }
+
+  /** Stage + atomically publish the version after `head`; false =
+    * lost the race. [[transact]] is the only caller.
+    *
+    * The manifest is a DELTA against `head.files` — only the names
+    * that left the list and the [[FileStat]] lines that entered it —
+    * so commit cost is O(touched files). A change that replaces the
+    * list whole, a checkpoint boundary and version 0 publish a full
+    * checkpoint instead.
+    */
+  private def tryPublish(root: String, op: String, head: Snapshot,
+      change: Change, files: Seq[FileStat]): Boolean = {
+    val v = head.version + 1
+    val next = change.replace.orElse(change.header).getOrElse(head)
+    val Snapshot(_, statCol, bloomCol, _, statCol2, txns, schemaJson, _,
+      retired) = next
+    val parentFiles = if (change.replace.isDefined) None else Some(head.files)
     txns.keys.foreach(a => require(!a.exists(c => c == ',' || c == '\t' ||
       c == '\n'), s"txn appId '$a' may not contain ',', tab, or newline"))
     retired.foreach(n => require(!n.exists(c => c == ',' || c == '\t' ||
@@ -1153,7 +1295,7 @@ object SnapshotLake {
     // ranges and duplicate _row_id values. `ridFloor` lets verbs
     // that know a foreign chain's high-water (clone, whose borrowed
     // MATERIALIZED files carry no base to max over) pin it directly.
-    var ridHw = math.max(ridFloor, math.max(
+    var ridHw = math.max(change.ridFloor, math.max(
       if (v == 0) 0L else ridHwOf(root, v - 1),
       files.iterator.flatMap(f => f.rid.map(_ + f.rows))
         .foldLeft(0L)(math.max)))
@@ -1166,8 +1308,8 @@ object SnapshotLake {
     // allocation units); written only once non-zero so pre-identity
     // chains keep byte-stable headers
     val idUnits = math.max(
-      if (v == 0) 0L else idhwOf(root, v - 1), idHw.getOrElse(0L))
-    val header = s"v=$v\t$statCol\toverwrite=$overwrite" +
+      if (v == 0) 0L else idhwOf(root, v - 1), change.idHw.getOrElse(0L))
+    val header = s"v=$v\t$statCol\toverwrite=${op != "append"}" +
       s"\tproto=$ProtocolVersion" +
       s"\tridhw=$ridHw" +
       (if (idUnits > 0) s"\tidhw=$idUnits" else "") +
@@ -1180,7 +1322,7 @@ object SnapshotLake {
       s"\tts=${System.currentTimeMillis()}" +
       bloomCol.fold("")(c => s"\tbloom=$c") +
       statCol2.fold("")(c => s"\tstat2=$c") +
-      txn.fold("") { case (a, b) => s"\ttxn=$a:$b" } +
+      change.txn.fold("") { case (a, b) => s"\ttxn=$a:$b" } +
       (if (txns.isEmpty) ""
        else "\ttxns=" + txns.toSeq.sorted.map { case (a, b) => s"$a:$b" }
          .mkString(",")) +
@@ -1188,7 +1330,7 @@ object SnapshotLake {
       // carry tabs/newlines, the manifest's own delimiters
       schemaJson.fold("")(j => "\tschema=" + java.util.Base64.getEncoder
         .encodeToString(j.getBytes(StandardCharsets.UTF_8))) +
-      op.fold("")(o => s"\top=$o") +
+      s"\top=$op" +
       (if (retired.isEmpty) ""
        else "\tretired=" + retired.toSeq.sorted.mkString(",")) +
       (if (asDelta) "\tkind=delta" else "")
@@ -1283,7 +1425,7 @@ object SnapshotLake {
     * appId, nothing is published and the current head version is
     * returned — the exactly-once handshake a streaming sink's
     * replayed micro-batch needs (Delta's `txn` action semantics).
-    * The check re-runs inside the optimistic-concurrency loop, so
+    * The check re-runs in every [[transact]] attempt, so
     * two racing writers with the same (appId, batchId) can never
     * both land: the loser's rebase re-reads the chain and sees the
     * winner's txn.
@@ -1315,7 +1457,7 @@ object SnapshotLake {
     // guard's clear refusal, not as toPhysical mapping two logical
     // columns onto one storage name and the parquet writer failing
     // with a bare duplicate-column error. commitFiles re-evolves
-    // against the final head inside the optimistic loop — this is the
+    // against the final head in every transact attempt — this is the
     // fast, user-facing copy of the same check.
     chainSchema.foreach(ps => evolveSchema(ps, df.schema,
       chainSnap.map(_.retired).getOrElse(Set.empty)): Unit)
@@ -1351,39 +1493,28 @@ object SnapshotLake {
     * Concurrency is the write-serializable discipline the Scala
     * `merge` verb uses: a concurrent APPEND rebases through (its
     * files are disjoint from `replaced` by construction), while a
-    * concurrent commit that rewrote or dropped any replaced file
-    * (delete / compact / another row-level command) conflicts — the
-    * rewritten rows were derived from bytes no longer at the head.
-    * An empty `replaced` (nothing scanned, e.g. a pure-insert MERGE
-    * against pruned files, or any command on an empty chain) is an
-    * ordinary append and bootstraps via [[commitFiles]].
+    * concurrent commit that rewrote or dropped any replaced file, or
+    * changed its deletion vector (delete / compact / another
+    * row-level command), conflicts — the rewritten rows were derived
+    * from bytes no longer at the head. An empty `replaced` (nothing
+    * scanned, e.g. a pure-insert MERGE against pruned files, or any
+    * command on an empty chain) is an ordinary append and bootstraps
+    * via [[commitFiles]].
     */
   private[sources] def commitReplaceFiles(root: String,
-      replaced: Seq[String], newFiles: Seq[FileStat], op: String,
+      replaced: Seq[FileStat], newFiles: Seq[FileStat], op: String,
       statCol: String, bloomCol: Option[String],
-      statCol2: Option[String], schemaJson: Option[String]): Int = {
+      statCol2: Option[String], schemaJson: Option[String]): Int =
     if (replaced.isEmpty)
-      return commitFiles(root, newFiles, statCol, overwrite = false,
+      commitFiles(root, newFiles, statCol, overwrite = false,
         bloomCol, statCol2, txn = None, schemaJson)
-    val replacedSet = replaced.toSet
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
-      val gone = replacedSet -- head.files.map(_.name).toSet
-      if (gone.nonEmpty) throw new MergeConflictException(
-        s"$op conflicts with a concurrent commit: scanned file(s) " +
-          s"${gone.mkString(", ")} are no longer at the head of $root")
-      val kept = head.files.filterNot(f => replacedSet(f.name))
-      if (tryPublish(root, head.version + 1, head.statCol, head.bloomCol,
-          overwrite = true, kept ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson.orElse(schemaJson),
-          op = Some(op), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
-    }
-    committed
-  }
-
+    else transact(root, op) { head =>
+      Change(removed = replaced.map(_.name).toSet, added = newFiles,
+        read = ReadSet(rewritten = replaced,
+          stats = Some((statCol, bloomCol, statCol2))),
+        header = Some(head.copy(
+          schemaJson = head.schemaJson.orElse(schemaJson))))
+    }._1
 
   /** Route rows carrying their source file's path in `__src` (the
     * scan's `_file`) back to one output bucket per SOURCE file via a
@@ -1459,14 +1590,14 @@ object SnapshotLake {
     *     whose range contains a delta key is by definition touched.
     *  3. INSERT: upsert keys matching no touched row land in one
     *     fresh insert file.
-    *  4. PUBLISH: untouched + rewritten + inserted file lists go out
-    *     as one atomic manifest. A lost commit race rebases: files
-    *     appended since our base snapshot are carried through if
+    *  4. PUBLISH: the head minus the touched files plus the rewritten
+    *     and inserted ones, as one atomic manifest ([[transact]]).
+    *     Files appended since our base snapshot carry through if
     *     their key range cannot intersect the delta's envelope, else
     *     the merge fails with [[MergeConflictException]] (same
     *     write-write conflict contract as Delta); a concurrent
-    *     overwrite that dropped one of our base files always
-    *     conflicts.
+    *     commit that dropped one of our base files, or changed a
+    *     touched file's deletion vector, always conflicts.
     *
     * Precedence: deletes drop matched rows first; an upsert key also
     * in `deleteKeys` re-inserts (document-your-merge semantics —
@@ -1532,44 +1663,14 @@ object SnapshotLake {
         case (f, None) => f.copy(ridNew = true)
         case (f, _) => if (ridKept) f.copy(ridMat = true) else f
       }
-    // 4. publish with conflict-checked optimistic rebase
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
-      val appended = rebaseCheck(base, head, kept ++ touchedFiles,
-        deltaLo, deltaHi)
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ appended ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("merge"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // 4. publish: appends since the base carry through unless they
+    // overlap the delta's key envelope
+    val (v, _) = transact(root, "merge") { _ =>
+      Change(removed = touched, added = newFiles,
+        read = ReadSet(carried = kept, rewritten = touchedFiles,
+          keys = Some((deltaLo, deltaHi)), stats = envelopeOf(base)))
     }
-    MergeResult(committed, kept.size, touchedFiles.size, newFiles.size)
-  }
-
-  /** The merge rebase rule, pure so the spec can drive it directly:
-    * files appended to `head` since `base` are carried through if
-    * their key range cannot intersect the merge's delta envelope;
-    * an overlapping append or a vanished base file conflicts.
-    */
-  private[graft] def rebaseCheck(base: Snapshot, head: Snapshot,
-      baseFiles: Seq[FileStat], deltaLo: Long,
-      deltaHi: Long): Seq[FileStat] = {
-    val headNames = head.files.map(_.name).toSet
-    val missing = baseFiles.filterNot(f => headNames(f.name))
-    if (missing.nonEmpty)
-      throw new MergeConflictException(
-        s"base files ${missing.map(_.name).mkString(", ")} vanished " +
-          "(concurrent overwrite/merge) — re-run the merge on the new head")
-    val baseNames = base.files.map(_.name).toSet
-    val appended = head.files.filterNot(f => baseNames(f.name))
-    val conflicting = appended.filter(f => f.lo <= deltaHi && f.hi >= deltaLo)
-    if (conflicting.nonEmpty)
-      throw new MergeConflictException(
-        s"concurrently appended files ${conflicting.map(_.name).mkString(", ")} " +
-          "overlap the merge key envelope — re-run the merge on the new head")
-    appended
+    MergeResult(v, kept.size, touchedFiles.size, newFiles.size)
   }
 
   final case class DeleteResult(version: Int, filesDropped: Int,
@@ -1592,9 +1693,10 @@ object SnapshotLake {
     * counts come from the manifest; rewritten files' delta falls out
     * of the row counts the rewrite's writer reports anyway.
     *
-    * Publish is the same conflict-checked optimistic rebase as
-    * [[merge]]: concurrent appends outside [lo, hi) carry through,
-    * an overlapping append or a vanished base file conflicts.
+    * Publish is the same [[transact]] read set as [[merge]]:
+    * concurrent appends outside [lo, hi) carry through; an
+    * overlapping append, a vanished base file or a changed vector on
+    * a straddling file conflicts.
     */
   def delete(s: SparkSession, root: String, lo: Long,
       hi: Long): DeleteResult = {
@@ -1623,19 +1725,12 @@ object SnapshotLake {
       }
     val rowsDeleted = dropped.map(_.liveRows).sum +
       (straddling.map(_.liveRows).sum - newFiles.map(_.rows).sum)
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
-      val appended = rebaseCheck(base, head, kept ++ inRange, lo, hi - 1)
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ appended ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("delete"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    val (v, _) = transact(root, "delete") { _ =>
+      Change(removed = inRange.map(_.name).toSet, added = newFiles,
+        read = ReadSet(carried = kept ++ dropped, rewritten = straddling,
+          keys = Some((lo, hi - 1)), stats = envelopeOf(base)))
     }
-    DeleteResult(committed, dropped.size, straddling.size, kept.size,
-      rowsDeleted)
+    DeleteResult(v, dropped.size, straddling.size, kept.size, rowsDeleted)
   }
 
   /** METADATA-ONLY partition delete: drop every file tagged
@@ -1644,34 +1739,26 @@ object SnapshotLake {
     * Sound ONLY when every live file is tagged under `colName`
     * (an untagged file might hold matching rows); callers gate on
     * that — [[LakeTable.canDeleteWhere]] declines otherwise and
-    * Spark falls back to the row-level CoW rewrite. The publish loop
-    * re-partitions from each fresh head, and refuses if a concurrent
-    * commit introduced a file outside the spec mid-flight.
+    * Spark falls back to the row-level CoW rewrite. Each [[transact]]
+    * attempt re-partitions the head it loaded, and refuses if a
+    * concurrent commit introduced a file outside the spec mid-flight.
     */
   def deletePartition(root: String, colName: String,
       values: Set[String]): (Int, Int, Long) = {
-    var committed = -1
-    var droppedN = 0
-    var rowsDropped = 0L
-    while (committed < 0) {
-      val head = snapshot(root)
+    val (v, c) = transact(root, "delete") { head =>
       require(head.files.forall(
           _.part.exists(p => colKey(p._1) == colKey(colName))),
         s"partition delete on '$colName' raced a commit that added a " +
           "file outside the partition spec — retry (the row-level " +
           "path stays correct)")
-      val (dropped, kept) = head.files.partition(
+      val dropped = head.files.filter(
         _.part.exists { case (c, v) =>
           colKey(c) == colKey(colName) && values(v) })
-      droppedN = dropped.size
-      rowsDropped = dropped.map(_.liveRows).sum
-      if (tryPublish(root, head.version + 1, head.statCol, head.bloomCol,
-          overwrite = true, kept, head.statCol2, txns = head.txns,
-          schemaJson = head.schemaJson, op = Some("delete"),
-          parentFiles = Some(head.files), retired = head.retired))
-        committed = head.version + 1
+      Change(removed = dropped.map(_.name).toSet,
+        filesDropped = dropped.size,
+        rowsDeleted = dropped.map(_.liveRows).sum)
     }
-    (committed, droppedN, rowsDropped)
+    (v, c.filesDropped, c.rowsDeleted)
   }
 
   /** The deletion-vector write path's scan: `fs` with each row's
@@ -1700,6 +1787,13 @@ object SnapshotLake {
       .map { case (f, ps) => (f, Dv.stageSpec(root, ps.toArray)._1) }
       .collect().toMap
   }
+
+  /** [[stagePositions]]' specs keyed by manifest name — a [[Change]]'s
+    * `vectors`.
+    */
+  private def vectorsOf(root: String, fs: Seq[FileStat],
+      staged: Map[String, String]): Map[String, Seq[String]] =
+    fs.map(f => f.name -> Seq(staged(dataPath(root, f.name)))).toMap
 
   final case class DvDeleteResult(version: Int, filesWithDv: Int,
       filesRewritten: Int, filesDropped: Int, filesUntouched: Int,
@@ -1735,14 +1829,14 @@ object SnapshotLake {
     * carry through un-scanned (they were not visible to the
     * predicate), a vanished touched file conflicts, and a concurrent
     * vector on the same file merges by position union against the
-    * fresh head each publish attempt.
+    * head of each [[transact]] attempt (a copy-on-write routed file
+    * conflicts instead).
     */
   def deleteRows(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
       cowThresholdRows: Long = 100000L): DvDeleteResult = {
     require(cowThresholdRows >= 1, "cowThresholdRows must be positive")
     val base = snapshot(root)
-    val key = base.statCol
     val matched = scanWithPos(s, root, base, base.files)
       .where(coalesce(cond, lit(false)))
     // pass 1: matched count per file — one output row per TOUCHED file
@@ -1783,55 +1877,19 @@ object SnapshotLake {
             inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
           }
       }
-    val touchedNames = (dvFiles ++ cowFiles).map(_.name).toSet
-    var committed = -1
-    var filesDropped = 0
-    var rowsDeleted = 0L
-    try while (committed < 0) {
-      val head = snapshot(root)
-      val headByName = head.files.map(f => f.name -> f).toMap
-      val vanished = touchedNames.filterNot(headByName.contains)
-      if (vanished.nonEmpty)
-        throw new MergeConflictException(
-          s"deleteRows base files ${vanished.mkString(", ")} vanished " +
-            "(concurrent overwrite/merge/delete) — re-run on the new head")
-      // a CoW-routed rewrite was computed from the BASE vector: a
-      // concurrent vector growth on such a file would be silently
-      // resurrected by the rewrite (dv-routed files union-merge and
-      // stay exact; rewrites cannot) — conflict, like purgeVectors
-      cowFiles.foreach { f =>
-        if (headByName(f.name).dv != f.dv)
-          throw new MergeConflictException(
-            s"deleteRows raced a deletion-vector change on ${f.name} " +
-              "(copy-on-write routed) — the rewrite would resurrect " +
-              "its deletes; re-run on the new head")
-      }
-      filesDropped = 0
-      var dvRows = 0L
-      val dvUpdated = dvFiles.flatMap { f =>
-        // merge against the HEAD's vector: a racing deleteRows on the
-        // same file may have landed first, and union keeps both exact
-        val h = headByName(f.name)
-        val merged = Dv.unionSpecs(root, h.dv,
-          Seq(positions(dataPath(root, f.name))))
-        require(merged.count <= h.rows, s"deletion vector of ${f.name} " +
-          s"records ${merged.count} positions for a ${h.rows}-row file")
-        dvRows += merged.count - h.dv.fold(0L)(_.count)
-        if (merged.count == h.rows) { filesDropped += 1; None }
-        else Some(h.copy(dv = Some(merged)))
-      }
-      rowsDeleted = dvRows +
-        (cowFiles.map(_.liveRows).sum - newFiles.map(_.rows).sum)
-      val kept = head.files.filterNot(f => touchedNames(f.name))
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ dvUpdated ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("delete"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // dv-routed files union into the HEAD's vector (a racing
+    // deleteRows on the same file stays exact); CoW-routed rewrites
+    // were computed from the BASE vector and conflict on a change
+    val (v, c) = try transact(root, "delete") { _ =>
+      Change(removed = cowFiles.map(_.name).toSet, added = newFiles,
+        vectors = vectorsOf(root, dvFiles, positions),
+        read = ReadSet(carried = dvFiles, rewritten = cowFiles,
+          stats = envelopeOf(base)),
+        rowsDeleted =
+          cowFiles.map(_.liveRows).sum - newFiles.map(_.rows).sum)
     } finally Dv.discardStaged(positions.values)
-    DvDeleteResult(committed, dvFiles.size - filesDropped, cowFiles.size,
-      filesDropped, base.files.size - touchedNames.size, rowsDeleted)
+    DvDeleteResult(v, c.filesWithDv, cowFiles.size, c.filesDropped,
+      base.files.size - dvFiles.size - cowFiles.size, c.rowsDeleted)
   }
 
   final case class DvUpdateResult(version: Int, filesWithDv: Int,
@@ -1861,7 +1919,6 @@ object SnapshotLake {
     require(sets.nonEmpty, "updateRows needs at least one SET column")
     require(cowThresholdRows >= 1, "cowThresholdRows must be positive")
     val base = snapshot(root)
-    val key = base.statCol
     def applySets(df: DataFrame): DataFrame =
       sets.foldLeft(df) { case (acc, (c, e)) => acc.withColumn(c, e) }
     val hit = coalesce(cond, lit(false))
@@ -1922,45 +1979,15 @@ object SnapshotLake {
         val f1 = if (ridKept) f.copy(ridMat = true) else f
         if (movesTags) f1 else inheritPart(f1, src)
       }
-    val touchedNames = (dvFiles ++ cowFiles).map(_.name).toSet
-    var committed = -1
-    var filesWithDv = 0
-    try while (committed < 0) {
-      val head = snapshot(root)
-      val headByName = head.files.map(f => f.name -> f).toMap
-      val vanished = touchedNames.filterNot(headByName.contains)
-      if (vanished.nonEmpty)
-        throw new MergeConflictException(
-          s"updateRows base files ${vanished.mkString(", ")} vanished " +
-            "(concurrent overwrite/merge/delete) — re-run on the new head")
-      // same resurrection hazard as deleteRows: CoW rewrites were
-      // computed from the base vector and do not re-merge
-      cowFiles.foreach { f =>
-        if (headByName(f.name).dv != f.dv)
-          throw new MergeConflictException(
-            s"updateRows raced a deletion-vector change on ${f.name} " +
-              "(copy-on-write routed) — the rewrite would resurrect " +
-              "its deletes; re-run on the new head")
-      }
-      filesWithDv = 0
-      val dvUpdated = dvFiles.flatMap { f =>
-        val h = headByName(f.name)
-        val merged = Dv.unionSpecs(root, h.dv,
-          Seq(positions(dataPath(root, f.name))))
-        require(merged.count <= h.rows, s"deletion vector of ${f.name} " +
-          s"records ${merged.count} positions for a ${h.rows}-row file")
-        if (merged.count == h.rows) None
-        else { filesWithDv += 1; Some(h.copy(dv = Some(merged))) }
-      }
-      val kept = head.files.filterNot(f => touchedNames(f.name))
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ dvUpdated ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("update"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // deleteRows' read set: vectors union into the head's, CoW
+    // rewrites conflict on a changed vector
+    val (v, c) = try transact(root, "update") { _ =>
+      Change(removed = cowFiles.map(_.name).toSet, added = newFiles,
+        vectors = vectorsOf(root, dvFiles, positions),
+        read = ReadSet(carried = dvFiles, rewritten = cowFiles,
+          stats = envelopeOf(base)))
     } finally Dv.discardStaged(positions.values)
-    DvUpdateResult(committed, filesWithDv, cowFiles.size,
+    DvUpdateResult(v, c.filesWithDv, cowFiles.size,
       newFiles.size - cowFiles.size, counts.values.sum)
   }
 
@@ -2004,8 +2031,7 @@ object SnapshotLake {
     val byPath = base.files.map(f => dataPath(root, f.name) -> f).toMap
     deletes.keys.foreach(p => require(byPath.contains(p),
       s"delta $op targets unknown file $p"))
-    val deleteByName: Map[String, Seq[String]] =
-      deletes.map { case (p, ps) => byPath(p).name -> ps }
+    val touched = deletes.keys.toSeq.map(byPath)
     val (live, empty) = (inserted ++ updated).partition(_.rows > 0)
     empty.foreach(LakeCommit.discard(root, _))
     val matNames = updated.map(_.name).toSet
@@ -2020,57 +2046,21 @@ object SnapshotLake {
       .map { case (f, m) =>
         if (matNames(m.name)) f.copy(ridMat = true) else f.copy(ridNew = true)
       }
-    var committed = -1
-    var filesWithDv = 0
-    var filesDropped = 0
-    var rowsDeleted = 0L
-    try while (committed < 0) {
-      val head = snapshot(root)
-      val headByName = head.files.map(f => f.name -> f).toMap
-      val vanished = deleteByName.keySet.filterNot(headByName.contains)
-      if (vanished.nonEmpty)
-        throw new MergeConflictException(
-          s"delta $op base files ${vanished.mkString(", ")} vanished " +
-            "(concurrent overwrite/merge/delete) — re-run on the new head")
-      // WriteSerializable: a pure DELETE tolerates concurrent vector
-      // growth (delete∪delete is still the right answer — union is
-      // idempotent), but a commit carrying POST-IMAGES must conflict
-      // on it: two racing UPDATEs of the same row would union the
-      // delete position once yet BOTH land their post-image — a
-      // silent duplicate. Same failure direction as every other
-      // rewrite guard: re-run on the new head.
-      if (newFiles.nonEmpty) {
-        val baseDvByName = byPath.values.map(f => f.name -> f.dv).toMap
-        deleteByName.keys.foreach { nm =>
-          if (headByName(nm).dv != baseDvByName(nm))
-            throw new MergeConflictException(
-              s"delta $op raced a deletion-vector change on $nm — a " +
-                "concurrent row-level operation touched the same file; " +
-                "re-run on the new head")
-        }
-      }
-      filesWithDv = 0; filesDropped = 0; rowsDeleted = 0L
-      val dvUpdated = deleteByName.toSeq.sortBy(_._1)
-        .flatMap { case (nm, specs) =>
-          val h = headByName(nm)
-          val merged = Dv.unionSpecs(root, h.dv, specs)
-          require(merged.count <= h.rows,
-            s"deletion vector of $nm records ${merged.count} positions " +
-              s"for a ${h.rows}-row file")
-          rowsDeleted += merged.count - h.dv.fold(0L)(_.count)
-          if (merged.count == h.rows) { filesDropped += 1; None }
-          else { filesWithDv += 1; Some(h.copy(dv = Some(merged))) }
-        }
-      val kept = head.files.filterNot(f => deleteByName.contains(f.name))
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ dvUpdated ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some(op), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // WriteSerializable: a pure DELETE tolerates concurrent vector
+    // growth (delete∪delete is still the right answer — union is
+    // idempotent), but a commit carrying POST-IMAGES rewrote the
+    // touched files' rows from the base vector: two racing UPDATEs of
+    // the same row would union the delete position once yet BOTH
+    // land their post-image — a silent duplicate — so it conflicts
+    val (v, c) = try transact(root, op) { _ =>
+      Change(added = newFiles,
+        vectors = deletes.map { case (p, ps) => byPath(p).name -> ps },
+        read =
+          if (newFiles.isEmpty) ReadSet(carried = touched)
+          else ReadSet(rewritten = touched, stats = envelopeOf(base)))
     } finally Dv.discardStaged(deletes.values.flatten)
-    DeltaDmlResult(committed, filesWithDv, filesDropped, newFiles.size,
-      rowsDeleted, live.map(_.rows).sum)
+    DeltaDmlResult(v, c.filesWithDv, c.filesDropped, newFiles.size,
+      c.rowsDeleted, live.map(_.rows).sum)
   }
 
   final case class PurgeResult(version: Int, filesPurged: Int,
@@ -2107,34 +2097,14 @@ object SnapshotLake {
       .map { case (f, src) =>
         inheritPart(if (ridKept) f.copy(ridMat = true) else f, src)
       }
-    val purgedNames = purge.map(_.name).toSet
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
-      // content-identical rewrite: appends carry through; a vanished
-      // base file — or a CONCURRENT VECTOR GROWTH on a purged file,
-      // whose deletes this rewrite would silently resurrect — conflicts
-      val headByName = head.files.map(f => f.name -> f).toMap
-      purge.foreach { f =>
-        headByName.get(f.name) match {
-          case Some(h) if h.dv == f.dv => ()
-          case Some(_) => throw new MergeConflictException(
-            s"purge raced a deletion-vector change on ${f.name} — " +
-              "re-run on the new head")
-          case None => throw new MergeConflictException(
-            s"purge base file ${f.name} vanished (concurrent " +
-              "overwrite/merge/delete) — re-run on the new head")
-        }
-      }
-      val kept = head.files.filterNot(f => purgedNames(f.name))
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ newFiles, head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("purge"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // content-identical rewrite: appends carry through; a vanished
+    // purged file — or a CONCURRENT VECTOR GROWTH on one, whose
+    // deletes this rewrite would silently resurrect — conflicts
+    val (v, _) = transact(root, "purge") { _ =>
+      Change(removed = purge.map(_.name).toSet, added = newFiles,
+        read = ReadSet(rewritten = purge, stats = envelopeOf(base)))
     }
-    PurgeResult(committed, purge.size, purge.flatMap(_.dv).map(_.count).sum)
+    PurgeResult(v, purge.size, purge.flatMap(_.dv).map(_.count).sum)
   }
 
   final case class CompactResult(version: Int, filesBefore: Int,
@@ -2161,7 +2131,8 @@ object SnapshotLake {
     * Content-identical by construction; concurrent appends rebase
     * through unconditionally (compaction deletes nothing, so no
     * envelope conflict is possible); a vanished base file — a
-    * concurrent overwrite/merge/delete — conflicts.
+    * concurrent overwrite/merge/delete — or a changed vector on a
+    * packed file conflicts.
     */
   def compactLake(s: SparkSession, root: String,
       targetRows: Long): CompactResult = {
@@ -2247,9 +2218,9 @@ object SnapshotLake {
         }.map(_.reverse).reverse
       }
     val packed = groups.filter(_.size >= 2).toList
-    val rebucketNames = rebucket.map(_.name).toSet
-    val kept = base.files.filterNot(f =>
-      rebucketNames(f.name) || packed.exists(_.exists(_.name == f.name)))
+    val rewritten = packed.flatten ++ rebucket
+    val rewrittenNames = rewritten.map(_.name).toSet
+    val kept = base.files.filterNot(f => rewrittenNames(f.name))
     val newFiles =
       if (packed.isEmpty) Seq.empty[FileStat]
       else {
@@ -2264,35 +2235,15 @@ object SnapshotLake {
             (if (packRid) f.copy(ridMat = true) else f).copy(sorted = packSo),
             g) }
       }
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
-      // empty envelope (MaxValue, MinValue): appends never overlap,
-      // only vanished base files conflict
-      val appended =
-        rebaseCheck(base, head, base.files, Long.MaxValue, Long.MinValue)
-      // a packed (or re-bucketed) rewrite of a VECTORED file was
-      // computed from the base vector: a concurrent vector growth on
-      // it would be silently resurrected — conflict (purgeVectors'
-      // guard)
-      (packed.flatten ++ rebucket).foreach { f =>
-        head.files.find(_.name == f.name).foreach { h =>
-          if (h.dv != f.dv)
-            throw new MergeConflictException(
-              s"compact raced a deletion-vector change on ${f.name} — " +
-                "the packed rewrite would resurrect its deletes; " +
-                "re-run on the new head")
-        }
-      }
-      if (tryPublish(root, head.version + 1, key, head.bloomCol,
-          overwrite = true, kept ++ appended ++ newFiles ++ rbFiles,
-          head.statCol2,
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("compact"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // content-identical: appends carry through; a vanished base file,
+    // or a concurrent vector growth on a packed (or re-bucketed) file
+    // whose rewrite would resurrect it, conflicts
+    val (v, _) = transact(root, "compact") { _ =>
+      Change(removed = rewrittenNames, added = newFiles ++ rbFiles,
+        read = ReadSet(carried = kept, rewritten = rewritten,
+          stats = envelopeOf(base)))
     }
-    CompactResult(committed, base.files.size,
+    CompactResult(v, base.files.size,
       kept.size + newFiles.size + rbFiles.size,
       packed.map(_.size).sum + rebucket.size)
   }
@@ -2526,22 +2477,16 @@ object SnapshotLake {
       StatsSpec(base.statCol, base.bloomCol, inheritedBloomBytes(base),
         Some(yCol)),
       bucket = Some(bucket), order = Seq(col(base.statCol))).map(_._1)
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
-      // empty conflict envelope: concurrent appends carry unclustered
-      val appended =
-        rebaseCheck(base, head, base.files, Long.MaxValue, Long.MinValue)
-      if (tryPublish(root, head.version + 1, base.statCol, head.bloomCol,
-          overwrite = true, appended ++ newFiles, Some(yCol),
-          txns = head.txns, schemaJson = head.schemaJson,
-          op = Some("cluster"), parentFiles = Some(head.files),
-          retired = head.retired))
-        committed = head.version + 1
+    // every source file is rewritten from its base vector; concurrent
+    // appends carry through unclustered
+    val (v, _) = transact(root, "cluster") { head =>
+      Change(removed = base.files.map(_.name).toSet, added = newFiles,
+        read = ReadSet(rewritten = base.files, stats = envelopeOf(base)),
+        header = Some(head.copy(statCol2 = Some(yCol))))
     }
     // committed-version file count (rebase may have carried appends)
-    ClusterResult(committed,
-      base.files.size, snapshot(root, Some(committed)).files.size, buckets)
+    ClusterResult(v, base.files.size, snapshot(root, Some(v)).files.size,
+      buckets)
   }
 
   /** Hive-style PARTITION COLUMNS as a first-class lake concept: one
@@ -2640,22 +2585,15 @@ object SnapshotLake {
         * a concurrent generating writer moved it, and committing
         * would publish duplicate identity values baked into files.
         */
-      idReserve: Option[(Long, Long)] = None): Int = {
-    // optimistic-concurrency loop: stage the manifest, try to take
-    // the next version slot; on a lost race, rebase on the new head
-    // and try again (new data files are already safe on disk)
-    var committed = -1
-    while (committed < 0) {
-      val head = headVersion(root)
-      val headSnap = if (head < 0) None else Some(snapshot(root, Some(head)))
-      // txn replay check INSIDE the loop: a racer that lost the slot
-      // CAS rebases here and sees the winner's identical (app, batch)
-      // in the head's accumulated txns map
-      txn.collect { case (a, b)
-          if headSnap.exists(_.txns.getOrElse(a, -1L) >= b) =>
-        return head
+      idReserve: Option[(Long, Long)] = None): Int =
+    transact(root, if (overwrite) "overwrite" else "append") { head =>
+      // txn replay check on EVERY attempt: a racer that lost the slot
+      // sees the winner's identical (app, batch) in the head's
+      // accumulated txns map and publishes nothing
+      txn.collect { case (a, b) if head.txns.getOrElse(a, -1L) >= b =>
+        return head.version
       }
-      val parent = if (overwrite) None else headSnap
+      val parent = if (overwrite || head.version < 0) None else Some(head)
       // an append inherits the parent's files into a manifest whose
       // header declares THIS commit's stat columns — a silent switch
       // would mislabel the carried stats, and the connector's
@@ -2669,43 +2607,29 @@ object SnapshotLake {
         statCol2.foreach(c => p.statCol2.foreach(pc => require(pc == c,
           s"append declares statCol2=$c but the chain carries $pc")))
       }
-      val v = head + 1
       // identity-allocation CAS: the generated values in the staged
       // files were derived from the reserved base — if a concurrent
       // generating writer moved the high-water, committing would
       // publish DUPLICATE identity values, so conflict loudly (the
       // writer re-runs; its data files are re-generated, not rebased)
       idReserve.foreach { case (base, _) =>
-        val cur = idhwOf(root, head)
+        val cur = idhwOf(root, head.version)
         if (cur != base) throw new IllegalStateException(
           s"identity allocation conflict at $root: this write " +
             s"reserved units at $base but the chain's high-water is " +
             s"now $cur (a concurrent write generated identity " +
             "values) — re-run the write")
       }
-      // an append without an explicit bloomCol inherits the parent's,
-      // so carried-over per-file blooms keep their column identity
-      // (files from THIS commit then simply have no bloom — readPoint
-      // keeps bloom-less files, so correctness is unaffected)
-      val effBloomCol = bloomCol.orElse(parent.flatMap(_.bloomCol))
-      // second stat dimension inherits like the bloom column: an
-      // append that doesn't redeclare it keeps the parent's identity
-      // (new files then simply lack dim2 boxes — the 2-D prune keeps
-      // stat-less files, so correctness is unaffected)
-      val effStat2 = statCol2.orElse(parent.flatMap(_.statCol2))
       // schema evolution: an append's schema widens the chain's via
       // [[evolveSchema]] (type conflicts refuse there); an overwrite
       // declares its own. A schema-less legacy chain STAYS schema-less
       // on append — stamping the batch's schema onto inherited files
       // of unknown shape would mislabel them.
-      // retired physical names accumulate like the txn map — an
-      // overwrite replaces the file list, never the collision guard
-      val headRetired = headSnap.map(_.retired).getOrElse(Set.empty[String])
       val effSchema = (parent, schemaJson) match {
         case (Some(p), Some(sj)) => p.schema.map(ps =>
           evolveSchema(ps, org.apache.spark.sql.types.DataType.fromJson(sj)
             .asInstanceOf[org.apache.spark.sql.types.StructType],
-            headRetired).json)
+            head.retired).json)
         case (Some(p), None) => p.schemaJson
         case (None, sj) =>
           // the lake's FIRST commit: a declared CREATE TABLE schema
@@ -2714,12 +2638,12 @@ object SnapshotLake {
           // nullability (non-null data ≠ non-nullable column) and
           // lose declared field metadata (column DEFAULTs). Evolve
           // keeps declared fields verbatim and appends genuinely new
-          // ones. First commits ONLY (`head < 0`, not parent==None):
-          // an overwrite of an existing chain redeclares its own
-          // schema, and the sidecar goes stale after committed-chain
-          // ALTERs.
+          // ones. First commits ONLY (`head.version < 0`, not
+          // parent==None): an overwrite of an existing chain
+          // redeclares its own schema, and the sidecar goes stale
+          // after committed-chain ALTERs.
           val declared =
-            if (head < 0) declaredSchema(root) else None
+            if (head.version < 0) declaredSchema(root) else None
           declared match {
             case Some(decl) => Some(sj.fold(decl)(j =>
               evolveSchema(decl,
@@ -2729,22 +2653,25 @@ object SnapshotLake {
             case None => sj
           }
       }
-      // the accumulated txn map ALWAYS carries forward — an overwrite
-      // replaces the file list, never the replay-dedup horizon
-      val newTxns = headSnap.map(_.txns).getOrElse(Map.empty) ++ txn
-      if (tryPublish(root, v, statCol, effBloomCol, overwrite,
-          parent.map(_.files).getOrElse(Seq.empty) ++ newFiles, effStat2,
-          txn, newTxns, effSchema,
-          Some(if (overwrite) "overwrite" else "append"),
-          // append commits cost O(new files) manifest bytes; an
-          // overwrite redeclares the list and checkpoints
-          parentFiles = parent.map(_.files),
-          retired = headRetired,
-          idHw = idReserve.map(_._2)))
-        committed = v
-    }
-    committed
-  }
+      // an append without an explicit bloomCol (or statCol2) inherits
+      // the parent's, so carried-over per-file blooms and dim2 boxes
+      // keep their column identity (files from THIS commit then
+      // simply lack them — readPoint and the 2-D prune keep stat-less
+      // files, so correctness is unaffected). The txn map and retired
+      // names carry forward from the head on every commit — an
+      // overwrite replaces the file list, never the replay-dedup
+      // horizon or the collision guard.
+      val next = head.copy(statCol = statCol,
+        bloomCol = bloomCol.orElse(parent.flatMap(_.bloomCol)),
+        statCol2 = statCol2.orElse(parent.flatMap(_.statCol2)),
+        txns = head.txns ++ txn, schemaJson = effSchema)
+      // an append costs O(new files) manifest bytes; an overwrite
+      // redeclares the list and checkpoints
+      if (overwrite) Change(replace = Some(next.copy(files = newFiles)),
+        txn = txn, idHw = idReserve.map(_._2))
+      else Change(added = newFiles, header = Some(next), txn = txn,
+        idHw = idReserve.map(_._2))
+    }._1
 
   /** Point-lookup read via the per-file bloom index: keeps a file
     * only if its bloom MIGHT contain `value` (files committed
@@ -3449,22 +3376,14 @@ object SnapshotLake {
     */
   def restore(root: String, version: Int): Int = {
     val target = snapshot(root, Some(version))
-    var committed = -1
-    while (committed < 0) {
-      val head = headVersion(root)
-      // restore rolls back DATA, never the replay-dedup horizon: the
-      // txn map comes from the current head, or a restored sink
-      // would re-accept batches it already committed
-      val headSnap = if (head < 0) None else Some(snapshot(root, Some(head)))
-      if (tryPublish(root, head + 1, target.statCol, target.bloomCol,
-          overwrite = true, target.files, target.statCol2,
-          txns = headSnap.map(_.txns).getOrElse(Map.empty),
-          schemaJson = target.schemaJson,
-          op = Some("restore"),
-          retired = headSnap.map(_.retired).getOrElse(Set.empty)))
-        committed = head + 1
-    }
-    committed
+    // restore rolls back DATA, never the replay-dedup horizon or the
+    // collision guard: txns and retired names come from the current
+    // head, or a restored sink would re-accept batches it already
+    // committed
+    transact(root, "restore") { head =>
+      Change(replace = Some(target.copy(txns = head.txns,
+        retired = head.retired)))
+    }._1
   }
 
   // =====================================================================
@@ -3738,21 +3657,14 @@ object SnapshotLake {
         else f.name // borrowed from a third lake (branch of a clone)
       f.copy(name = mapped)
     }
-    var committed = -1
-    while (committed < 0) {
-      val head = headVersion(root)
-      if (head != base) throw new MergeConflictException(
+    val ridFloor = ridHwOf(br, bHead)
+    transact(root, "publish") { head =>
+      if (head.version != base) throw new MergeConflictException(
         s"cannot fast-forward '$name' onto $root: main advanced " +
-          s"v$base -> v$head since the fork; re-branch and replay")
-      val headTxns = snapshot(root, Some(head)).txns
-      if (tryPublish(root, head + 1, snap.statCol, snap.bloomCol,
-          overwrite = true, files, snap.statCol2,
-          txns = headTxns ++ snap.txns, schemaJson = snap.schemaJson,
-          op = Some("publish"), retired = snap.retired,
-          ridFloor = ridHwOf(br, bHead)))
-        committed = head + 1
-    }
-    committed
+          s"v$base -> v${head.version} since the fork; re-branch and replay")
+      Change(replace = Some(snap.copy(files = files,
+        txns = head.txns ++ snap.txns)), ridFloor = ridFloor)
+    }._1
   }
 
   private def colKey(n: String): String =
@@ -3769,28 +3681,20 @@ object SnapshotLake {
 
   /** Metadata-only schema commit: republish the head's file list
     * untouched (a ZERO-action delta manifest) under a transformed
-    * schema. The transform re-derives from the CURRENT head inside
-    * the optimistic loop, so a concurrent append's new column is
+    * schema. The transform re-derives from the head of every
+    * [[transact]] attempt, so a concurrent append's new column is
     * never lost to a stale schema.
     */
   private def publishSchemaChange(root: String, op: String,
       transform: (Snapshot, org.apache.spark.sql.types.StructType) =>
-        (org.apache.spark.sql.types.StructType, Set[String])): Int = {
-    var committed = -1
-    while (committed < 0) {
-      val head = snapshot(root)
+        (org.apache.spark.sql.types.StructType, Set[String])): Int =
+    transact(root, op) { head =>
       val schema = head.schema.getOrElse(throw new IllegalStateException(
         s"lake at $root has no recorded schema — legacy chains cannot $op"))
       val (newSchema, newRetired) = transform(head, schema)
-      if (tryPublish(root, head.version + 1, head.statCol, head.bloomCol,
-          overwrite = true, head.files, head.statCol2,
-          txns = head.txns, schemaJson = Some(newSchema.json),
-          op = Some(op), parentFiles = Some(head.files),
-          retired = newRetired))
-        committed = head.version + 1
-    }
-    committed
-  }
+      Change(header = Some(head.copy(schemaJson = Some(newSchema.json),
+        retired = newRetired)))
+    }._1
 
   /** RENAME COLUMN, metadata-only (column mapping): the field keeps
     * its id and physical storage name, only its logical name changes
@@ -4034,23 +3938,15 @@ object SnapshotLake {
     val borrowed = snap.files.map(f =>
       if (f.name.startsWith("/")) f // cloning a clone: refs stay as-is
       else f.copy(name = s"$src/${f.name}"))
-    var committed = -1
-    while (committed < 0) {
-      val head = headVersion(dstRoot)
-      val headTxns = if (head < 0) Map.empty[String, Long]
-        else snapshot(dstRoot, Some(head)).txns
-      if (tryPublish(dstRoot, head + 1, snap.statCol, snap.bloomCol,
-          overwrite = true, borrowed, snap.statCol2,
-          txns = headTxns, schemaJson = snap.schemaJson,
-          op = Some("clone"), retired = snap.retired,
-          // row-id ranges are part of what's borrowed: the clone's
-          // high-water starts at the SOURCE's, or its next append
-          // would assign bases overlapping the borrowed files' id
-          // ranges (materialized files carry no base to infer from)
-          ridFloor = ridHwOf(src, snap.version)))
-        committed = head + 1
-    }
-    committed
+    // row-id ranges are part of what's borrowed: the clone's
+    // high-water starts at the SOURCE's, or its next append would
+    // assign bases overlapping the borrowed files' id ranges
+    // (materialized files carry no base to infer from)
+    val ridFloor = ridHwOf(src, snap.version)
+    transact(dstRoot, "clone") { head =>
+      Change(replace = Some(snap.copy(files = borrowed, txns = head.txns)),
+        ridFloor = ridFloor)
+    }._1
   }
 
   /** One version's header facts for the metadata tables: (op, live

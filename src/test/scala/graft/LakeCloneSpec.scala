@@ -46,18 +46,21 @@ class LakeCloneSpec extends SparkTestBase {
     // '/', resolve under the CLONE's root, and read nothing
     val relSrc = s"target/lake_clone_rel_${System.nanoTime()}"
     Files.createDirectories(Paths.get(relSrc))
-    val dst = freshRoot()
-    SnapshotLake.commit(spark, relSrc, tbl(0 until 40), "k")
-    SnapshotLake.shallowClone(relSrc, dst)
-    val entries = SnapshotLake.snapshot(dst).files.map(_.name)
-    assert(entries.nonEmpty && entries.forall(_.startsWith("/")),
-      s"borrowed refs not absolute: $entries")
-    assert(SnapshotLake.read(spark, dst).count() === 40L)
-    // ownership: the clone's vacuum must classify them as borrowed
-    SnapshotLake.commit(spark, dst, tbl(40 until 50), "k",
-      overwrite = true)
-    SnapshotLake.vacuum(dst, 1)
-    assert(SnapshotLake.read(spark, relSrc).count() === 40L)
+    try {
+      val dst = freshRoot()
+      SnapshotLake.commit(spark, relSrc, tbl(0 until 40), "k")
+      SnapshotLake.shallowClone(relSrc, dst)
+      val entries = SnapshotLake.snapshot(dst).files.map(_.name)
+      assert(entries.nonEmpty && entries.forall(_.startsWith("/")),
+        s"borrowed refs not absolute: $entries")
+      assert(SnapshotLake.read(spark, dst).count() === 40L)
+      // ownership: the clone's vacuum must classify them as borrowed
+      SnapshotLake.commit(spark, dst, tbl(40 until 50), "k",
+        overwrite = true)
+      SnapshotLake.vacuum(dst, 1)
+      assert(SnapshotLake.read(spark, relSrc).count() === 40L)
+    } finally // the relative lake lives under the build dir: remove it
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(relSrc))
   }
 
   test("maintenance on a clone is copy-on-write: borrowed bytes never change") {

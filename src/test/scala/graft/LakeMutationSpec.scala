@@ -155,17 +155,21 @@ class LakeMutationSpec extends SparkTestBase {
     assert(SnapshotLake.read(spark, root).count() === (700L + 10L))
     // overlapping append: delete range [1000, 1005) vs file [1000, 1009]
     // is a rewrite, not a conflict, when seen at base time; the conflict
-    // arm needs the append INVISIBLE at base — drive rebaseCheck pure
+    // arm needs the append INVISIBLE at base — drive the checker pure
     val base = SnapshotLake.snapshot(root)
     val appended = SnapshotLake.FileStat("data/x/p.parquet", 420L, 470L, 51L,
       bytes = 1024L)
     val head = base.copy(version = base.version + 1,
       files = base.files :+ appended)
+    def carried(lo: Long, hi: Long): Seq[SnapshotLake.FileStat] =
+      SnapshotLake.rebase(root, "delete", head, SnapshotLake.Change(read =
+          SnapshotLake.ReadSet(carried = base.files, keys = Some((lo, hi)))))
+        ._1.filterNot(base.files.contains)
     intercept[MergeConflictException] {
-      SnapshotLake.rebaseCheck(base, head, base.files, 400L, 500L)
+      carried(400L, 500L)
     }
     // disjoint append carries through the same check
-    val ok = SnapshotLake.rebaseCheck(base, head, base.files, 5000L, 6000L)
+    val ok = carried(5000L, 6000L)
     assert(ok.map(_.name) === Seq("data/x/p.parquet"))
   }
 

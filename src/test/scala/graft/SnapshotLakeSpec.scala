@@ -515,26 +515,90 @@ class SnapshotLakeSpec extends SparkTestBase {
   }
 
   test("merge rebase carries non-overlapping concurrent appends, conflicts on overlap") {
-    import SnapshotLake.{FileStat, Snapshot}
+    import SnapshotLake.{Change, FileStat, ReadSet, Snapshot}
     val base = Snapshot(0, "k", None,
       Seq(FileStat("data/a", 0, 24, 25, bytes = 1024L),
         FileStat("data/b", 25, 49, 25, bytes = 1024L)))
     val keepAndTouched = base.files
+    // the files the checker carries through beyond the read set
+    def appended(head: Snapshot, lo: Long, hi: Long): Seq[FileStat] =
+      SnapshotLake.rebase("/lake", "merge", head, Change(read =
+          ReadSet(carried = keepAndTouched, keys = Some((lo, hi)))))._1
+        .filterNot(keepAndTouched.contains)
     // non-overlapping append since base: carried through the rebase
     val farAppend = FileStat("data/c", 1000, 1024, 25, bytes = 1024L)
     val head1 = Snapshot(1, "k", None, base.files :+ farAppend)
-    assert(SnapshotLake.rebaseCheck(base, head1, keepAndTouched, 30, 40) ===
-      Seq(farAppend))
+    assert(appended(head1, 30, 40) === Seq(farAppend))
     // overlapping append: write-write conflict
     val nearAppend = FileStat("data/d", 35, 60, 25, bytes = 1024L)
     val head2 = Snapshot(1, "k", None, base.files :+ nearAppend)
     intercept[SnapshotLake.MergeConflictException] {
-      SnapshotLake.rebaseCheck(base, head2, keepAndTouched, 30, 40)
+      appended(head2, 30, 40)
     }
     // a vanished base file (concurrent overwrite) always conflicts
     val head3 = Snapshot(1, "k", None, base.files.tail)
     intercept[SnapshotLake.MergeConflictException] {
-      SnapshotLake.rebaseCheck(base, head3, keepAndTouched, 1000, 1001)
+      appended(head3, 1000, 1001)
+    }
+  }
+
+  /** Three base files and their merge-, delete- and compact-shaped
+    * changes — the read sets those verbs state — for the pure
+    * checker specs below.
+    */
+  private object Rebase {
+    import SnapshotLake.{Change, FileStat, ReadSet, Snapshot}
+    val Seq(a, b, c) = Seq(("data/a", 0L), ("data/b", 100L), ("data/c", 200L))
+      .map { case (n, lo) => FileStat(n, lo, lo + 99, 100, bytes = 1024L) }
+    val base = Snapshot(0, "k", None, Seq(a, b, c))
+    val out = FileStat("data/out", 100, 199, 90, bytes = 1024L)
+    // merge touching b; delete of [150, 300) straddling b, dropping c;
+    // compact packing b and c; cluster rewriting every file
+    val changes: Seq[(String, Change)] = Seq(
+      "merge" -> Change(removed = Set(b.name), added = Seq(out),
+        read = ReadSet(carried = Seq(a, c), rewritten = Seq(b),
+          keys = Some((150L, 160L)))),
+      "delete" -> Change(removed = Set(b.name, c.name), added = Seq(out),
+        read = ReadSet(carried = Seq(a, c), rewritten = Seq(b),
+          keys = Some((150L, 299L)))),
+      "compact" -> Change(removed = Set(b.name, c.name), added = Seq(out),
+        read = ReadSet(carried = Seq(a), rewritten = Seq(b, c))),
+      "cluster" -> Change(removed = Set(a.name, b.name, c.name),
+        added = Seq(out), read = ReadSet(rewritten = Seq(a, b, c))))
+    def withDv(f: FileStat): FileStat =
+      f.copy(dv = Some(SnapshotLake.Dv.fromPositions(Array(3L, 7L))))
+  }
+
+  test("checker: a deletion vector added at the head on a carried file " +
+      "survives the rebase") {
+    import Rebase._
+    // a concurrent deleteRows vectored file a after the base load;
+    // every verb that carries a publishes the HEAD's entry, vector
+    // included — a list rebuilt from the base entry would resurrect
+    // rows 3 and 7 of a
+    val head = base.copy(version = 1, files = Seq(withDv(a), b, c))
+    changes.filterNot(_._1 == "cluster").foreach { case (op, ch) =>
+      val (files, _) = SnapshotLake.rebase("/lake", op, head, ch)
+      assert(files.find(_.name == a.name).flatMap(_.dv) ===
+        withDv(a).dv, s"$op dropped the head's vector on ${a.name}")
+      assert(files.map(_.name).toSet ===
+        (head.files.map(_.name).toSet -- ch.removed) + out.name, op)
+    }
+  }
+
+  test("checker: a rewrite from the base vector conflicts when the head's " +
+      "vector changed — merge, delete, compact and cluster") {
+    import Rebase._
+    // a concurrent deleteRows vectored file b, which every change
+    // rewrote from its base (vector-less) rows
+    val head = base.copy(version = 1, files = Seq(a, withDv(b), c))
+    changes.foreach { case (op, ch) =>
+      val e = intercept[SnapshotLake.MergeConflictException](
+        SnapshotLake.rebase("/lake", op, head, ch))
+      assert(e.getMessage.contains("deletion-vector change"), op)
+      // the same change against an unchanged head publishes
+      assert(SnapshotLake.rebase("/lake", op, base.copy(version = 1), ch)
+        ._1.exists(_.name == out.name), op)
     }
   }
 
@@ -690,5 +754,57 @@ class SnapshotLakeSpec extends SparkTestBase {
       .select("sz").as[Option[Long]].collect()
     assert(ckptSz.nonEmpty && ckptSz.forall(_.exists(_ > 0)),
       "checkpoint row without a positive sz")
+  }
+
+  test("txns, retired names and the row-id high-water carry through the " +
+      "transact callers the manifest-format spec does not reach") {
+    val root = freshRoot()
+    SnapshotLake.commitPartitioned(spark, root,
+      (0 until 400).map(i => (i.toLong, i.toLong * 7, (i / 100).toString,
+        i.toLong)).toDF("k", "v", "p", "w"), "p", "k") // v0
+    SnapshotLake.dropColumn(root, "w") // retires w's storage name
+    // an empty append stamping the txn map (every file stays tagged
+    // under p, which deletePartition needs)
+    SnapshotLake.commitFiles(root, Seq.empty, "k", overwrite = false,
+      bloomCol = None, txn = Some(("app", 0L)))
+    val from = SnapshotLake.headVersion(root)
+    SnapshotLake.delete(spark, root, 50L, 150L)
+    SnapshotLake.deleteRows(spark, root, col("k") % 7 === 0L)
+    SnapshotLake.purgeVectors(spark, root)
+    SnapshotLake.deletePartition(root, "p", Set("3"))
+    Seq("txn_cow" -> "", "txn_dv" -> ", dv 'true'").foreach { case (t, o) =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"""CREATE TABLE $t USING graft.sources.GraftLakeSource
+        OPTIONS (path '$root', statCol 'k'$o)""")
+    }
+    try {
+      spark.sql("UPDATE txn_cow SET v = -1 WHERE k = 211") // CoW replace
+      spark.sql("DELETE FROM txn_dv WHERE k % 10 = 3") // delta ops
+    } finally Seq("txn_cow", "txn_dv").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    SnapshotLake.clusterLake(spark, root, "k", "v", 100L)
+    SnapshotLake.renameColumn(root, "p", "q")
+    SnapshotLake.createBranch(root, "b")
+    SnapshotLake.commit(spark, s"$root/_branch/b",
+      Seq((1000L, 1L, "9")).toDF("k", "v", "q"), "k")
+    SnapshotLake.fastForward(root, "b")
+    val head = SnapshotLake.headVersion(root)
+    def ridhw(v: Int): Long = Files.readAllLines(
+        Paths.get(root, "_log", f"v$v%05d.manifest"), StandardCharsets.UTF_8)
+      .get(0).split('\t').find(_.startsWith("ridhw=")).get
+      .stripPrefix("ridhw=").toLong
+    val snaps = (from to head).map(v => SnapshotLake.snapshot(root, Some(v)))
+    assert(snaps.tail.flatMap(_.op) === Seq("delete", "delete", "purge",
+      "delete", "update", "delete", "cluster", "rename", "publish"))
+    snaps.zip(snaps.tail).foreach { case (parent, next) =>
+      val what = s"v${next.version} (${next.op.getOrElse("?")})"
+      assert(next.txns === Map("app" -> 0L), s"$what dropped the txns map")
+      assert(next.retired === Set("w"), s"$what dropped the retired names")
+      assert(ridhw(next.version) >= ridhw(parent.version),
+        s"$what lowered the row-id high-water")
+    }
+    assert(ridhw(from) >= 400L)
+    assert(SnapshotLake.read(spark, root).where(col("k") === 1000L)
+      .count() === 1L)
   }
 }
