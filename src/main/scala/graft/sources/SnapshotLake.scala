@@ -1177,11 +1177,13 @@ object SnapshotLake {
       : Option[(String, Option[String], Option[String])] =
     Some((snap.statCol, snap.bloomCol, snap.statCol2))
 
-  /** THE conflict checker, pure so specs can drive it with hand-built
-    * snapshots: check `c`'s [[ReadSet]] against `head`, then return
-    * the file list to publish and `c` with the vector union's tallies
-    * added. Every refusal is a [[MergeConflictException]]: the change
-    * was derived from files or ranges the head no longer has.
+  /** THE conflict checker, a function of its arguments so specs can
+    * drive it with hand-built snapshots (its one write is the
+    * content-addressed sidecar a wide vector union externalizes to):
+    * check `c`'s [[ReadSet]] against `head`, then return the file list
+    * to publish and `c` with the vector union's tallies added. Every
+    * refusal is a [[MergeConflictException]]: the change was derived
+    * from files or ranges the head no longer has.
     */
   private[graft] def rebase(root: String, op: String, head: Snapshot,
       c: Change): (Seq[FileStat], Change) = {
