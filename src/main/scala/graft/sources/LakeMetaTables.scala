@@ -123,22 +123,11 @@ object LakeMetaTables {
           SnapshotLake.listTags(root).map { case (n, v) =>
             row(s(n), s("tag"), v.toLong) }
       case "orphans" =>
-        // distributed when a session is live (the judged path — the
-        // listing job runs on executors, the driver holds only the
-        // orphan OUTPUT). getActiveSession is THREAD-LOCAL — a scan
-        // planned from a helper thread would miss it and silently
-        // take the O(files) driver walk, so fall through to the
-        // process-wide default session first and only then (loudly)
-        // to the driver walk.
-        org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-          .map(ss => SnapshotLake.orphanCandidatesDistributed(ss, root))
-          .getOrElse {
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"orphans meta table: no active or default SparkSession — " +
-                s"falling back to the single-threaded driver walk of $root")
-            SnapshotLake.orphanCandidates(root).sortBy(_._1)
-          }
+        // a LocalScan is always planned inside a session; `active`
+        // falls back to the default session when the planning thread
+        // has no thread-local one
+        SnapshotLake.orphanCandidates(
+          org.apache.spark.sql.SparkSession.active, root)
           .map { case (p, bytes, ts) => row(s(p), bytes, ts) }
     }
   }

@@ -291,9 +291,7 @@ object LakeWrite {
   def physicalFor(root: String, schema: StructType,
       overwrite: Boolean): StructType = {
     val chain =
-      if (!overwrite && SnapshotLake.headVersion(root) >= 0)
-        SnapshotLake.snapshot(root).schema
-      else None
+      if (overwrite) None else SnapshotLake.snapshotOrEmpty(root).schema
     SnapshotLake.ColMap.toPhysicalSchema(schema, chain)
   }
 
@@ -716,21 +714,18 @@ private[sources] object LakeCommit {
     }, spec).map { case (f, m) => f -> m.partVal }
   }
 
-  private def headOf(root: String): Option[SnapshotLake.Snapshot] =
-    if (SnapshotLake.headVersion(root) >= 0) Some(SnapshotLake.snapshot(root))
-    else None
-
   /** The stat envelope a write publishes under: options over the
     * head's statCol; a replace (`inherit`) also takes the head's
     * bloomCol/statCol2. The writer factories resolve it when they are
     * built and the commit resolves it again — files staged under a
-    * different one conflict in [[land]]. None: no head and no statCol.
+    * different one conflict in [[land]]. None: no head (an empty
+    * lake's version −1) and no statCol.
     */
   private def envelope(opts: Map[String, String],
-      head: Option[SnapshotLake.Snapshot],
-      inherit: Boolean): Option[StatsSpec] = {
-    val inherited = head.filter(_ => inherit)
-    opts.get("statcol").orElse(head.map(_.statCol)).map { sc =>
+      head: SnapshotLake.Snapshot, inherit: Boolean): Option[StatsSpec] = {
+    val committed = Some(head).filter(_.version >= 0)
+    val inherited = committed.filter(_ => inherit)
+    opts.get("statcol").orElse(committed.map(_.statCol)).map { sc =>
       StatsSpec(sc, opts.get("bloomcol").orElse(inherited.flatMap(_.bloomCol)),
         opts.get("bloombytes").map(_.toInt).getOrElse(1024),
         opts.get("statcol2").orElse(inherited.flatMap(_.statCol2)))
@@ -745,14 +740,14 @@ private[sources] object LakeCommit {
   /** The envelope of a batch append or streaming epoch ([[publish]]). */
   private[sources] def publishSpec(root: String,
       opts: Map[String, String]): Option[StatsSpec] =
-    envelope(opts, headOf(root), inherit = false)
+    envelope(opts, SnapshotLake.snapshotOrEmpty(root), inherit = false)
 
   /** The envelope of a replace ([[publishPartitionReplace]], the
     * row-level rewrites).
     */
   private[sources] def replaceSpec(root: String,
       opts: Map[String, String]): Option[StatsSpec] =
-    envelope(opts, headOf(root), inherit = true)
+    envelope(opts, SnapshotLake.snapshotOrEmpty(root), inherit = true)
 
   /** The manifest tag column a level's files tag under: bucket and
     * truncate transforms carry their parameter in the tag name;
@@ -811,13 +806,15 @@ private[sources] object LakeCommit {
     }
     val (live, empty) = staged.partition(_.rows > 0)
     empty.foreach(discard(root, _))
-    val head = headOf(root)
+    // one head load answers the envelope, the replay pre-check and
+    // the sort stamp's chain schema
+    val head = SnapshotLake.snapshotOrEmpty(root)
     val spec = envelope(opts, head, inherit = false)
       .getOrElse(noEnvelope(root))
     // replay short-circuit BEFORE moving files (the in-loop check in
     // commitFiles still guards the race window)
     txn.foreach { case (a, b) =>
-      if (SnapshotLake.lastTxn(root, a) >= b) {
+      if (head.txns.getOrElse(a, -1L) >= b) {
         live.foreach(discard(root, _)); return
       }
     }
@@ -850,7 +847,7 @@ private[sources] object LakeCommit {
     // PHYSICAL column name ([[physSortStamp]]).
     val stamped = sortStamp match {
       case Some(sc) =>
-        val ph = physSortStamp(sc, head.flatMap(_.schema), schemaJson)
+        val ph = physSortStamp(sc, head.schema, schemaJson)
         tagged.map(_.copy(sorted = Some(ph)))
       case None => tagged
     }
@@ -886,7 +883,7 @@ private[sources] object LakeCommit {
     val head = SnapshotLake.snapshot(root)
     val replaced = head.files.filter(_.part.exists { case (c, v) =>
       c.equalsIgnoreCase(colName) && values(v) })
-    val spec = envelope(opts, Some(head), inherit = true).get
+    val spec = envelope(opts, head, inherit = true).get
     val tagName2 = opts.get("partcol2").map(pc2 =>
       tagNameFor(opts, pc2, "partbuckets2", "parttrunc2"))
     val newFiles = land(root, live.map(m => m -> m.name), spec)

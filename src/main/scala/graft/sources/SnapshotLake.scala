@@ -1084,11 +1084,8 @@ object SnapshotLake {
     * The map is one entry per distinct writer app — bounded by
     * writers, not by commits.
     */
-  def lastTxn(root: String, appId: String): Long = {
-    val head = headVersion(root)
-    if (head < 0) -1L
-    else snapshot(root, Some(head)).txns.getOrElse(appId, -1L)
-  }
+  def lastTxn(root: String, appId: String): Long =
+    snapshotOrEmpty(root).txns.getOrElse(appId, -1L)
 
   /** The row-id high-water recorded by version `v`'s header (0 for a
     * version that does not exist) — the next implicit base starts
@@ -1205,6 +1202,19 @@ object SnapshotLake {
     if (vanished.nonEmpty)
       conflict(s"read file(s) ${vanished.toSeq.sorted.mkString(", ")} " +
         "that a concurrent commit rewrote or dropped")
+    // a header that moves the second stat column relabels every dim2
+    // box it carries; a box the change never read (a concurrent
+    // append) was written under the head's column, and the 2-D prune
+    // would read it as the new one's range
+    c.header.filter(h => h.statCol2.map(colKey) !=
+        head.statCol2.map(colKey)).foreach { h =>
+      val relabeled = head.files.filter(f => f.dim2.isDefined &&
+        !readNames(f.name) && !c.removed(f.name))
+      if (relabeled.nonEmpty)
+        conflict(s"found file(s) ${relabeled.map(_.name).mkString(", ")} " +
+          s"with dim2 stats under ${head.statCol2.getOrElse("(none)")} " +
+          s"that its header would relabel as ${h.statCol2.getOrElse("(none)")}")
+    }
     val raced = r.rewritten.filter(f => byName(f.name).dv != f.dv)
     if (raced.nonEmpty)
       conflict(s"raced a deletion-vector change on " +
@@ -1445,15 +1455,14 @@ object SnapshotLake {
       throw new IllegalArgumentException(s"unsupported write option " +
         s"'$k' (supported: ${LakeWrite.TuningKeys.toSeq.sorted.mkString(", ")})")
     }
-    txn.collect { case (a, b) if lastTxn(root, a) >= b =>
-      return headVersion(root) // replay detected before staging files
+    // one head load answers the replay pre-check and the chain schema
+    val head = snapshotOrEmpty(root)
+    txn.collect { case (a, b) if head.txns.getOrElse(a, -1L) >= b =>
+      return head.version // replay detected before staging files
     }
     // appends materialize PHYSICAL column names (column mapping); the
     // recorded schema below stays logical
-    val chainSnap =
-      if (!overwrite && headVersion(root) >= 0) Some(snapshot(root))
-      else None
-    val chainSchema = chainSnap.flatMap(_.schema)
+    val chainSchema = if (overwrite) None else head.schema
     // run the evolution guards BEFORE staging any file: a physical-name
     // collision (dropped or renamed-away column) must surface as the
     // guard's clear refusal, not as toPhysical mapping two logical
@@ -1461,8 +1470,7 @@ object SnapshotLake {
     // with a bare duplicate-column error. commitFiles re-evolves
     // against the final head in every transact attempt — this is the
     // fast, user-facing copy of the same check.
-    chainSchema.foreach(ps => evolveSchema(ps, df.schema,
-      chainSnap.map(_.retired).getOrElse(Set.empty)): Unit)
+    chainSchema.foreach(ps => evolveSchema(ps, df.schema, head.retired): Unit)
     // one write job with task-side stats: no write-then-re-read pass
     val newFiles = LakeCommit.writeRouted(root,
       ColMap.toPhysical(df, chainSchema),
@@ -2414,8 +2422,7 @@ object SnapshotLake {
       overwrite: Boolean = false, bloomCol: Option[String] = None,
       bloomBytes: Int = 1024, statCol2: Option[String] = None): Int = {
     val chainSchema =
-      if (!overwrite && headVersion(root) >= 0) snapshot(root).schema
-      else None
+      if (overwrite) None else snapshotOrEmpty(root).schema
     val newFiles = LakeCommit.writeRouted(root,
       ColMap.toPhysical(df, chainSchema),
       StatsSpec(statCol, bloomCol, bloomBytes, statCol2),
@@ -2511,8 +2518,7 @@ object SnapshotLake {
       overwrite: Boolean = false, bloomCol: Option[String] = None,
       bloomBytes: Int = 1024, statCol2: Option[String] = None): Int = {
     val chainSchema =
-      if (!overwrite && headVersion(root) >= 0) snapshot(root).schema
-      else None
+      if (overwrite) None else snapshotOrEmpty(root).schema
     // each file's tag holds its raw routing value (null: Hive's
     // default-partition name)
     val tagged = LakeCommit.writeRouted(root,
@@ -2818,9 +2824,9 @@ object SnapshotLake {
     * asking for a vacuumed version fails fast on the missing
     * manifest rather than half-reading deleted files.
     *
-    * Driver-side metadata walk + file deletes, O(files) like the
-    * prune — no cluster I/O. Returns (versions dropped, data files
-    * deleted).
+    * Driver-side: one manifest parse per retained or dropped version
+    * plus the file deletes — no cluster I/O. Returns (versions
+    * dropped, data files deleted).
     */
   def vacuum(root: String, keepVersions: Int): (Int, Int) = {
     require(keepVersions >= 1, "must keep at least the head version")
@@ -2853,38 +2859,35 @@ object SnapshotLake {
     val dropped = (0 until cutoff)
       .filter(v => Files.exists(manifestPath(root, v)))
     if (dropped.isEmpty) return (0, 0)
-    val live: Set[String] = (cutoff to head)
-      .filter(v => Files.exists(manifestPath(root, v)))
-      .flatMap(v => snapshot(root, Some(v)).files.map(_.name)).toSet
-    val dead = dropped
-      .flatMap(v => snapshot(root, Some(v)).files.map(_.name)).toSet
-      .diff(live)
+    // both windows start at a checkpoint (`cutoff`, and the oldest
+    // retained manifest), so each window's [[refsOf]] union equals
+    // the union of its snapshots — one parse per manifest.
+    // normalize() both sides of the sidecar ownership test: it is
+    // segment-based, so an un-normalized '<root>/../..<elsewhere>'
+    // pointer would MATCH '<root>' and vacuum would delete another
+    // lake's sidecar
+    val rootAbs = Paths.get(root).toAbsolutePath.normalize()
+    def refsIn(vs: Seq[Int]): (Set[String], Set[String]) = {
+      val rs = vs.filter(v => Files.exists(manifestPath(root, v)))
+        .map(refsOf(root, _))
+      (rs.flatMap(_._1).toSet, rs.flatMap(_._2).filter(p =>
+        Paths.get(p).toAbsolutePath.normalize().startsWith(rootAbs)).toSet)
+    }
+    val (live, liveDv) = refsIn(cutoff to head)
+    val (dead, deadDv) = refsIn(dropped)
     // delete data first, manifests last: a crash mid-vacuum leaves
     // dangling manifest entries (loud, detectable) rather than
     // orphaned unreachable files (silent storage leak)
     // external (absolute) refs — a shallow clone's borrowed files —
     // are never owned by this lake: dropping the manifest drops the
     // REFERENCE, the bytes belong to the source lake
-    val owned = dead.filterNot(_.startsWith("/"))
+    val owned = dead.diff(live).filterNot(_.startsWith("/"))
     owned.foreach(n => Files.deleteIfExists(Paths.get(root, n)))
     // deletion-vector sidecars referenced ONLY by dropped versions go
     // too (content-addressed files are shared across versions, so a
     // sidecar lives while ANY surviving version points at it);
-    // borrowed (absolute, other-lake) pointers are never owned here
-    // normalize() both sides: the ownership test is segment-based,
-    // so an un-normalized '<root>/../..<elsewhere>' pointer would
-    // MATCH '<root>' and vacuum would delete another lake's sidecar
-    val rootAbs = Paths.get(root).toAbsolutePath.normalize()
-    def ownedDvOf(vs: Seq[Int]): Set[String] = vs
-      .filter(v => Files.exists(manifestPath(root, v)))
-      .flatMap(v => snapshot(root, Some(v)).files.flatMap(_.dv))
-      .collect { case d if d.isExternal &&
-          Paths.get(d.b64.substring(1)).toAbsolutePath.normalize()
-            .startsWith(rootAbs) =>
-        d.b64.substring(1) }
-      .toSet
-    val liveDv = ownedDvOf((cutoff to head).toSeq)
-    ownedDvOf(dropped.toSeq).diff(liveDv)
+    // borrowed (other-lake) pointers are never owned here
+    deadDv.diff(liveDv)
       .foreach(p => Files.deleteIfExists(Paths.get(p)): Unit)
     dropped.foreach { v =>
       // a dropped checkpoint takes its parquet sidecar with it
@@ -2905,85 +2908,31 @@ object SnapshotLake {
     (dropped.size, owned.size)
   }
 
-  /** REMOVE ORPHAN FILES (Iceberg's `remove_orphan_files`): delete
-    * every file under the lake's data-bearing directories (`data/`,
-    * `_dv/`, `_staging/`) that NO un-vacuumed manifest references —
-    * the residue of crashed writers: staged task files whose commit
-    * never published, batch directories from aborted jobs, deletion-
-    * vector stage files whose finally never ran. [[vacuum]] cannot
-    * reach these — it only reclaims names its own dropped manifests
-    * referenced — so without this verb a crash-prone 100 TB ingest
-    * leaks storage without bound.
-    *
-    * `graceMs` protects IN-FLIGHT writers the way Iceberg's
-    * `older_than` does: files younger than the grace window are
-    * presumed to belong to a commit still racing toward publish and
-    * are kept regardless. The default matches Iceberg's 3-day
-    * `older_than` — data files land via ATOMIC_MOVE *before* their
-    * manifest publishes, so they are briefly unreferenced, and a
-    * zero-grace sweep racing a writer would delete a file the very
-    * next commit names (permanent loss). `graceMs = 0` is therefore
-    * only safe when NO concurrent writer can be mid-commit.
-    * Time travel is never harmed: the referenced set spans EVERY
-    * retained version, not just head. Manifests, checkpoints, CDC
-    * sidecars, refs, and nested branch chains are out of scope by
-    * construction (different directories).
-    * Returns (orphans deleted, referenced files on disk).
-    */
-  def removeOrphans(root: String,
-      graceMs: Long = DefaultOrphanGraceMs): (Int, Int) = {
-    require(graceMs >= 0, s"graceMs must be >= 0, got $graceMs")
-    val cutoff = System.currentTimeMillis() - graceMs
-    var removed = 0
-    var kept = 0
-    walkOrphanScope(root, pruneDirsOlderThan = Some(cutoff)) {
-      (p, referenced) =>
-        if (referenced) kept += 1
-        else if (Files.getLastModifiedTime(p).toMillis <= cutoff) {
-          Files.deleteIfExists(p): Unit
-          removed += 1
-        }
-    }
-    (removed, kept)
-  }
-
   /** Iceberg's `older_than` default: 3 days. Protects commits still
     * racing toward publish (see [[removeOrphans]]).
     */
   val DefaultOrphanGraceMs: Long = 3L * 24 * 60 * 60 * 1000
 
-  /** Test-visible count of DRIVER-side orphan-scope walks. The
-    * distributed scan ([[orphanCandidatesDistributed]] /
-    * [[removeOrphansDistributed]]) lists on executors and must keep
-    * this counter still — the judged paths (t.orphans, CALL
-    * remove_orphans) may never fall back to a driver `Files.walk`
-    * over `data/`, which at 100 TB is millions of names in one
-    * thread.
-    */
-  private[graft] val driverOrphanWalks =
-    new java.util.concurrent.atomic.AtomicLong
-
   /** A directory forest as a DataFrame
     * `(path STRING abs, bytes, mtime, is_dir)` — listed by a SPARK
     * JOB: the driver expands walk seeds breadth-first (emitting the
     * small directories it passes), then each executor task STREAMS
-    * one subtree. With `skipHidden`, `.`/`_`-prefixed FILE names
-    * (writer bookkeeping) are dropped at the source — the orphan
-    * contract; the branch-drop sweep lists everything. Driver memory
-    * is O(expanded dirs × the per-directory file cap) — bounded by
-    * the expansion budget, never by the table's file count.
+    * one subtree. Driver memory is O(expanded dirs × the
+    * per-directory file cap) — bounded by the expansion budget, never
+    * by the table's file count.
     *
-    * `strictWalk` governs what a NON-vanishing walk error does: the
-    * orphan scan truncates the seed's remainder with a warning
-    * (conservative — unlisted files are never deleted), but a
-    * consumer that must see the WHOLE tree (dropBranch, where an
-    * unlisted file becomes silent debris after a "successful" drop)
-    * rethrows so the job fails loudly instead. Vanishing entries
-    * (NoSuchFileException) stay tolerated in both modes — for a
-    * delete sweep, already-gone is the goal state.
+    * The orphan scan (`wholeTree` false) drops `.`/`_`-prefixed FILE
+    * names (writer bookkeeping) at the source, and a NON-vanishing
+    * walk error truncates the seed's remainder with a warning
+    * (conservative — unlisted files are never deleted). The
+    * branch-drop sweep (`wholeTree` true) lists everything and
+    * rethrows, so the job fails loudly: there an unlisted file would
+    * become silent debris after a "successful" drop. Vanishing
+    * entries (NoSuchFileException) stay tolerated in both modes — for
+    * a delete sweep, already-gone is the goal state.
     */
   private def treeListingDF(s: SparkSession, roots: Seq[Path],
-      skipHidden: Boolean, strictWalk: Boolean = false): DataFrame = {
+      wholeTree: Boolean): DataFrame = {
     import s.implicits._
     // Vanishing entries are EXPECTED under the concurrent writers the
     // grace window exists for (ATOMIC_MOVE out of _staging, a racing
@@ -3042,7 +2991,7 @@ object SnapshotLake {
               if (emitSelf) statRow(d).foreach { r => directRows += r; () }
               files.foreach { f =>
                 val b = f.getFileName.toString
-                if (!(skipHidden && (b.startsWith(".") || b.startsWith("_"))))
+                if (wholeTree || !(b.startsWith(".") || b.startsWith("_")))
                   statRow(f).foreach { r =>
                     if (!r._4) { directRows += r; () }
                   }
@@ -3095,7 +3044,7 @@ object SnapshotLake {
                       // a silent partial listing would read as clean
                       if (!e.getCause.isInstanceOf[
                           java.nio.file.NoSuchFileException]) {
-                        if (strictWalk) { stop(); throw e }
+                        if (wholeTree) { stop(); throw e }
                         log.warn(s"listing: walk of $base truncated " +
                           s"(${e.getCause}) — unlisted files are " +
                           "skipped, not deleted")
@@ -3106,7 +3055,7 @@ object SnapshotLake {
                 else {
                   val q = p.toAbsolutePath.normalize()
                   val b = q.getFileName.toString
-                  val isHidden = skipHidden &&
+                  val isHidden = !wholeTree &&
                     (b.startsWith(".") || b.startsWith("_"))
                   statRow(q).foreach { r =>
                     if (r._4 || !isHidden) nextRow = r
@@ -3142,11 +3091,26 @@ object SnapshotLake {
     val rootAbs = Paths.get(root).toAbsolutePath.normalize()
     treeListingDF(s,
       Seq("data", "_dv", "_staging").map(rootAbs.resolve),
-      skipHidden = true)
+      wholeTree = false)
+  }
+
+  /** What manifest `v` references: its data file names (a
+    * checkpoint's full list or a delta's adds) and the sidecar paths
+    * of its external deletion vectors — one parse, no chain replay.
+    * Over a run of versions that starts at a checkpoint, the union
+    * equals the union of their snapshots, vector restatements
+    * included: every snapshot entry is in its checkpoint's list or in
+    * some delta's adds.
+    */
+  private def refsOf(root: String, v: Int): (Seq[String], Seq[String]) = {
+    val m = parseManifest(root, v)
+    val fs = m.files ++ m.adds
+    (fs.map(_.name),
+      fs.flatMap(_.dv).filter(_.isExternal).map(_.b64.substring(1)))
   }
 
   /** Every retained-manifest-referenced absolute path as a DataFrame
-    * `(path STRING)` — one manifest parse per version, ON EXECUTORS
+    * `(path STRING)` — one [[refsOf]] per version, ON EXECUTORS
     * (manifests live on the shared store, same as data). The driver
     * holds O(versions) task descriptors, never the name set.
     */
@@ -3157,26 +3121,22 @@ object SnapshotLake {
       val vi = v.toInt
       if (!Files.exists(manifestPath(root, vi))) Iterator.empty
       else {
-        val m = parseManifest(root, vi)
-        val fs = m.files ++ m.adds
-        def abs(name: String): String =
-          (if (name.startsWith("/")) Paths.get(name)
-           else Paths.get(root, name)).toAbsolutePath.normalize().toString
-        (fs.map(f => abs(f.name)) ++
-          fs.flatMap(_.dv).filter(_.isExternal).map(d =>
-            Paths.get(d.b64.substring(1)).toAbsolutePath.normalize()
-              .toString)).iterator
+        val (names, dvs) = refsOf(root, vi)
+        // resolve keeps an absolute (borrowed) name as it is
+        (names ++ dvs).iterator.map(n =>
+          Paths.get(root).resolve(n).toAbsolutePath.normalize().toString)
       }
     }.toDF("path").distinct()
   }
 
-  /** Distributed dry-run: the orphan candidates as a listing-vs-
-    * referenced ANTI-JOIN — both sides Spark jobs, the Iceberg
-    * `remove_orphan_files` shape. Returns (root-relative path,
-    * bytes, mtime) sorted by path; the result is output-scale (the
+  /** Dry-run face of [[removeOrphans]]: the orphan candidates as
+    * (root-relative path, bytes, mtime millis) — what the `t.orphans`
+    * metadata table serves, so an operator SEES the reclaim set before
+    * deleting anything. A listing-vs-referenced ANTI-JOIN, both sides
+    * Spark jobs; sorted by path. The result is output-scale (the
     * orphans), never table-scale.
     */
-  def orphanCandidatesDistributed(s: SparkSession, root: String)
+  def orphanCandidates(s: SparkSession, root: String)
       : Seq[(String, Long, Long)] = {
     require(headVersion(root) >= 0,
       s"lake at $root has no committed snapshot")
@@ -3191,17 +3151,38 @@ object SnapshotLake {
       .sortBy(_._1).toSeq
   }
 
-  /** Distributed [[removeOrphans]]: listing and referenced set are
+  /** REMOVE ORPHAN FILES (Iceberg's `remove_orphan_files`): delete
+    * every file under the lake's data-bearing directories (`data/`,
+    * `_dv/`, `_staging/`) that NO un-vacuumed manifest references —
+    * the residue of crashed writers: staged task files whose commit
+    * never published, batch directories from aborted jobs, deletion-
+    * vector stage files whose finally never ran. [[vacuum]] cannot
+    * reach these — it only reclaims names its own dropped manifests
+    * referenced — so without this verb a crash-prone 100 TB ingest
+    * leaks storage without bound.
+    *
+    * `graceMs` protects IN-FLIGHT writers the way Iceberg's
+    * `older_than` does: files younger than the grace window are
+    * presumed to belong to a commit still racing toward publish and
+    * are kept regardless. The default matches Iceberg's 3-day
+    * `older_than` — data files land via ATOMIC_MOVE *before* their
+    * manifest publishes, so they are briefly unreferenced, and a
+    * zero-grace sweep racing a writer would delete a file the very
+    * next commit names (permanent loss). `graceMs = 0` is therefore
+    * only safe when NO concurrent writer can be mid-commit.
+    * Time travel is never harmed: the referenced set spans EVERY
+    * retained version, not just head. Manifests, checkpoints, CDC
+    * sidecars, refs, and nested branch chains are out of scope by
+    * construction (different directories).
+    *
+    * Listing ([[listingDF]]) and referenced set ([[referencedDF]]) are
     * both Spark jobs, candidates resolve by anti-join, and deletion
-    * runs on EXECUTORS (`foreachPartition`) — the driver never
-    * materializes a file-name list. Semantics are byte-identical to
-    * the driver walk: same grace window on files AND emptied batch
-    * directories, same hidden-name scope, same (removed, referenced
-    * on disk) return. Directory cleanup runs on executors too
-    * ([[pruneEmptyDirsDistributed]]) — the driver collects nothing
-    * but counters.
+    * runs on executors (`foreachPartition`); emptied directories past
+    * the grace window prune on executors too
+    * ([[pruneEmptyDirs]]). The driver collects nothing but
+    * counters. Returns (orphans deleted, referenced files on disk).
     */
-  def removeOrphansDistributed(s: SparkSession, root: String,
+  def removeOrphans(s: SparkSession, root: String,
       graceMs: Long = DefaultOrphanGraceMs): (Long, Long) = {
     require(graceMs >= 0, s"graceMs must be >= 0, got $graceMs")
     require(headVersion(root) >= 0,
@@ -3222,42 +3203,39 @@ object SnapshotLake {
           it.foreach(p =>
             if (Files.deleteIfExists(Paths.get(p))) removed.add(1L))
         }
-      pruneEmptyDirsDistributed(s,
-        listing.where(col("is_dir") && col("mtime") <= cutoff)): Unit
+      pruneEmptyDirs(s,
+        listing.where(col("is_dir") && col("mtime") <= cutoff))
       (removed.value, kept)
     } finally { listing.unpersist(); () }
   }
 
-  /** Executor-side bottom-up empty-directory prune — the last piece
-    * of the maintenance tier that used to collect paths driver-side.
-    * Candidate dirs range-partition descending and sort descending
-    * WITHIN each partition, so a child (whose path strictly extends
-    * its parent's) is always attempted before its parent in the same
-    * partition; non-empty deletes fail and are swallowed (kept files
-    * keep their ancestors alive — that is the contract, not an
-    * error). A parent split into a different partition from its
-    * children can't empty until they go, so rounds repeat while
-    * progress is made — the driver sees only the per-round success
-    * COUNT, never a directory list. Already-gone dirs re-attempted on
-    * a later round (or a task retry) fail with NoSuchFileException
-    * and count zero, so the total stays exact.
+  /** Executor-side bottom-up empty-directory prune. Candidate dirs
+    * range-partition descending and sort descending WITHIN each
+    * partition, so a child (whose path strictly extends its parent's)
+    * is always attempted before its parent in the same partition;
+    * non-empty deletes fail and are swallowed (kept files keep their
+    * ancestors alive — that is the contract, not an error). A parent
+    * split into a different partition from its children can't empty
+    * until they go, so rounds repeat while some delete succeeds — the
+    * driver sees only the per-round success COUNT, never a directory
+    * list. An already-gone dir re-attempted on a later round (or a
+    * task retry) fails with NoSuchFileException and counts zero, so
+    * the rounds stop.
     */
-  private def pruneEmptyDirsDistributed(s: SparkSession,
-      dirs: DataFrame): Long = {
+  private def pruneEmptyDirs(s: SparkSession, dirs: DataFrame): Unit = {
     import s.implicits._
     val ds = dirs.select(col("path")).as[String]
       .repartitionByRange(
         math.max(1, s.sparkContext.defaultParallelism), col("path").desc)
       .sortWithinPartitions(col("path").desc)
       .persist()
-    var total = 0L
     try {
-      var progress = true
+      var deleted = 1L
       var rounds = 0
-      while (progress && rounds < 64) {
+      while (deleted > 0 && rounds < 64) {
         // agg, not reduce: AQE can coalesce an empty candidate set to
         // ZERO partitions, and reduce throws on an empty collection
-        val n = ds.mapPartitions { it =>
+        deleted = ds.mapPartitions { it =>
           var c = 0L
           it.foreach { d =>
             try { Files.delete(Paths.get(d)); c += 1 }
@@ -3266,108 +3244,9 @@ object SnapshotLake {
           Iterator.single(c)
         }.toDF("n").agg(coalesce(sum(col("n")), lit(0L)))
           .head.getLong(0)
-        total += n
-        progress = n > 0
         rounds += 1
       }
     } finally { ds.unpersist(); () }
-    total
-  }
-
-  /** Dry-run face of [[removeOrphans]]: the orphan candidates as
-    * (root-relative path, bytes, mtime millis) — what the
-    * `t.orphans` metadata table serves, so an operator SEES the
-    * reclaim set before deleting anything.
-    */
-  def orphanCandidates(root: String): Seq[(String, Long, Long)] = {
-    val rootAbs = Paths.get(root).toAbsolutePath.normalize()
-    val out = Seq.newBuilder[(String, Long, Long)]
-    walkOrphanScope(root) { (p, referenced) =>
-      if (!referenced)
-        out += ((rootAbs.relativize(p).toString, Files.size(p),
-          Files.getLastModifiedTime(p).toMillis))
-    }
-    out.result()
-  }
-
-  /** Every file path a chain's RETAINED manifests reference, as
-    * absolute normalized paths (data names + external deletion-vector
-    * pointers). Union-of-referenced needs no per-version snapshot
-    * reconstruction: a name is referenced iff it appears in some
-    * checkpoint's full list or some delta's adds — ONE parse per
-    * manifest, O(versions), not O(versions × chain-depth).
-    */
-  private def referencedAbsolute(root: String): Set[Path] = {
-    def abs(name: String): Path =
-      (if (name.startsWith("/")) Paths.get(name)
-       else Paths.get(root, name)).toAbsolutePath.normalize()
-    (0 to headVersion(root))
-      .filter(v => Files.exists(manifestPath(root, v)))
-      .flatMap { v =>
-        val m = parseManifest(root, v)
-        val fs = m.files ++ m.adds
-        fs.map(f => abs(f.name)) ++
-          fs.flatMap(_.dv).filter(_.isExternal).map(d =>
-            Paths.get(d.b64.substring(1)).toAbsolutePath.normalize())
-      }.toSet
-  }
-
-  /** Shared sweep: visit every non-hidden regular file under the
-    * data-bearing directories with its referenced-by-some-retained-
-    * manifest verdict. Empty directories are pruned only when
-    * `pruneDirsOlderThan` is set AND the directory predates the
-    * cutoff — the dry-run face must not mutate the lake, and a
-    * just-created batch directory belongs to an in-flight commit
-    * racing toward its ATOMIC_MOVE (the same grace contract as
-    * files).
-    */
-  private def walkOrphanScope(root: String,
-      pruneDirsOlderThan: Option[Long] = None)(
-      visit: (Path, Boolean) => Unit): Unit = {
-    driverOrphanWalks.incrementAndGet(): Unit
-    val head = headVersion(root)
-    require(head >= 0, s"lake at $root has no committed snapshot")
-    val rootAbs = Paths.get(root).toAbsolutePath.normalize()
-    val referenced = referencedAbsolute(root)
-    for (dir <- Seq("data", "_dv", "_staging")) {
-      val d = rootAbs.resolve(dir)
-      if (Files.isDirectory(d)) {
-        val walk = Files.walk(d)
-        // pre-order reversed: files first, then their emptied dirs
-        val all = try walk.iterator().asScala.toSeq.reverse
-                  finally walk.close()
-        // directory ages are judged against PRE-sweep mtimes:
-        // deleting a child bumps the parent's mtime to now, and a
-        // live read would spare every directory the sweep itself just
-        // emptied (and diverge from the distributed path, whose
-        // listing statted before any delete)
-        val dirMtime: Map[Path, Long] =
-          if (pruneDirsOlderThan.isEmpty) Map.empty
-          else all.map(_.toAbsolutePath.normalize())
-            .filter(p => Files.isDirectory(p) && p != d)
-            .flatMap(p =>
-              (try Some(Files.getLastModifiedTime(p).toMillis)
-               catch { case _: java.io.IOException => None })
-                .map(p -> _)).toMap
-        all.foreach { p0 =>
-          val p = p0.toAbsolutePath.normalize()
-          val base = p.getFileName.toString
-          if (Files.isRegularFile(p)) {
-            // Spark's hidden-file convention: '.'/'_'-prefixed names
-            // (_SUCCESS markers, .crc checksums) are writer
-            // bookkeeping, not data — never visited
-            if (!base.startsWith(".") && !base.startsWith("_"))
-              visit(p, referenced.contains(p))
-          } else if (Files.isDirectory(p) && p != d) {
-            pruneDirsOlderThan.foreach { cutoff =>
-              if (dirMtime.get(p).exists(_ <= cutoff))
-                try Files.delete(p)
-                catch { case _: java.io.IOException => () }
-            }
-          }
-        }
-      }
-    }
   }
 
   /** Restore the lake head to an earlier version's contents — AS A
@@ -3498,13 +3377,12 @@ object SnapshotLake {
     * is unreachable the moment the ref dies and is deleted here
     * (main's vacuum only reclaims names its own dropped manifests
     * referenced, so without this sweep an abandoned WAP stage would
-    * leak its staged bytes forever). Cost: one manifest walk of main
-    * and each other live branch — O(metadata), the same class as
-    * vacuum. Nested branches (a branch created ON this branch) are
-    * left untouched.
+    * leak its staged bytes forever). Cost: one manifest parse per
+    * version of main and of each other live branch, on executors —
+    * O(metadata), the same class as vacuum. A branch that has nested
+    * branches (created ON it) refuses until they are dropped.
     */
-  def dropBranch(root: String, name: String,
-      spark: Option[SparkSession] = None): Unit = {
+  def dropBranch(s: SparkSession, root: String, name: String): Unit = {
     val brStr = branchRoot(root, name)
     // NESTED branches (branches created ON this branch) borrow this
     // chain's files by absolute path and keep their refs under the
@@ -3529,78 +3407,46 @@ object SnapshotLake {
       chainRoot +: listBranches(chainRoot).map(_._1)
         .flatMap(n => liveChains(branchRoot(chainRoot, n)))
     val chains = liveChains(root).filterNot(_ == brStr)
-    spark match {
-      case Some(s) =>
-        // DISTRIBUTED sweep — the remove_orphans shape: an
-        // unpublished branch at 100 TB holds millions of staged
-        // names, so the listing (every file, hidden included — the
-        // whole tree dies, and strictWalk makes a partial listing a
-        // loud job failure rather than silent debris) anti-joins the
-        // live chains' referenced sets as Spark jobs and deletes on
-        // executors; the empty-dir prune is executor-side too — the
-        // driver holds only counters.
-        import s.implicits._
-        val prefix = brAbs.toString + "/"
-        val keptDF = chains.map(cr => referencedDF(s, cr))
-          .reduce(_ union _)
-          .where(col("path").startsWith(prefix)).distinct()
-        val listing = treeListingDF(s, Seq(brAbs),
-          skipHidden = false, strictWalk = true).persist()
-        val keptSurvivors =
-          try {
-            val files = listing.where(!col("is_dir"))
-            val survivors = files.join(keptDF, Seq("path"), "left_semi")
-              .count()
-            files.join(keptDF, Seq("path"), "left_anti")
-              .select(col("path")).as[String]
-              .foreachPartition((it: Iterator[String]) =>
-                it.foreach(p => Files.deleteIfExists(Paths.get(p)): Unit))
-            // kept files keep their ancestor directories alive — the
-            // not-empty delete fails and is swallowed
-            pruneEmptyDirsDistributed(s, listing.where(col("is_dir"))): Unit
-            survivors
-          } finally { listing.unpersist(); () }
-        try Files.delete(brAbs)
-        catch { case _: java.io.IOException => () }
-        // verify-at-end: with zero main-referenced survivors the
-        // whole tree must be gone — remaining debris after a
-        // "successful" drop would silently diverge from the
-        // driver-walk path's failure semantics
-        if (keptSurvivors == 0 && Files.exists(brAbs))
-          throw new IllegalStateException(
-            s"dropBranch('$name'): branch directory $brAbs still has " +
-              "entries after the sweep (no live-chain survivors " +
-              "explain them) — debris remains, drop did not complete")
-        return
-      case None =>
-        val kept = chains
-          .flatMap(cr => referencedAbsolute(cr).filter(_.startsWith(brAbs)))
-          .toSet
-        // pre-order DFS reversed puts children before parents, so
-        // files delete first and emptied directories fall right
-        // after. The whole subtree sweeps — live nested branches
-        // were refused upfront, so anything under <br>/_branch is
-        // dropped-child debris, and main-referenced survivors are in
-        // `kept` wherever they sit.
-        val walk = Files.walk(brAbs)
-        val all = try walk.iterator().asScala.toSeq.reverse
-                  finally walk.close()
-        all.foreach { p0 =>
-          val p = p0.toAbsolutePath.normalize()
-          if (p != brAbs) {
-            if (Files.isRegularFile(p)) {
-              if (!kept.contains(p)) Files.deleteIfExists(p): Unit
-            } else if (Files.isDirectory(p)) {
-              // kept files keep their ancestor directories alive —
-              // the not-empty delete fails and is swallowed
-              try Files.delete(p)
-              catch { case _: java.io.IOException => () }
-            }
-          }
-        }
-    }
+    // the remove_orphans shape: an unpublished branch at 100 TB holds
+    // millions of staged names, so the listing (every file, hidden
+    // included — the whole tree dies, and wholeTree makes a partial
+    // listing a loud job failure rather than silent debris)
+    // anti-joins the live chains' referenced sets as Spark jobs and
+    // deletes on executors; the empty-dir prune is executor-side too
+    // — the driver holds only counters. Live nested branches were
+    // refused upfront, so anything under <br>/_branch is
+    // dropped-child debris.
+    import s.implicits._
+    val prefix = brAbs.toString + "/"
+    val keptDF = chains.map(cr => referencedDF(s, cr))
+      .reduce(_ union _)
+      .where(col("path").startsWith(prefix)).distinct()
+    val listing = treeListingDF(s, Seq(brAbs),
+      wholeTree = true).persist()
+    val keptSurvivors =
+      try {
+        val files = listing.where(!col("is_dir"))
+        val survivors = files.join(keptDF, Seq("path"), "left_semi")
+          .count()
+        files.join(keptDF, Seq("path"), "left_anti")
+          .select(col("path")).as[String]
+          .foreachPartition((it: Iterator[String]) =>
+            it.foreach(p => Files.deleteIfExists(Paths.get(p)): Unit))
+        // kept files keep their ancestor directories alive — the
+        // not-empty delete fails and is swallowed
+        pruneEmptyDirs(s, listing.where(col("is_dir")))
+        survivors
+      } finally { listing.unpersist(); () }
     try Files.delete(brAbs)
     catch { case _: java.io.IOException => () }
+    // verify-at-end: with zero live-chain survivors the whole tree
+    // must be gone — debris left after a "successful" drop would be
+    // a silent leak
+    if (keptSurvivors == 0 && Files.exists(brAbs))
+      throw new IllegalStateException(
+        s"dropBranch('$name'): branch directory $brAbs still has " +
+          "entries after the sweep (no live-chain survivors " +
+          "explain them) — debris remains, drop did not complete")
   }
 
   /** CREATE TAG: pin `version` under an immutable name. Tagged

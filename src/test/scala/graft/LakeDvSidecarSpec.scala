@@ -141,6 +141,56 @@ class LakeDvSidecarSpec extends SparkTestBase {
       (0L until 8000L).count(_ % 3 == 0).toLong)
   }
 
+  test("vacuum parses each manifest on disk at most once and reclaims " +
+      "exactly the files and sidecars only dropped versions reference") {
+    val root = freshRoot()
+    bigLake(root, n = 8000L) // v0
+    // v1..v36 cross the v16 and v32 checkpoints: one-row appends, a
+    // scattered wide delete every fifth version (each on a delta tail,
+    // each growing a new content-addressed sidecar per file), and at
+    // v12 the appends so far deleted whole
+    (1 to 36).foreach { v =>
+      if (v % 5 == 0 && v < 35)
+        SnapshotLake.deleteRows(spark, root,
+          col("k") % 7 === (v / 5).toLong, cowThresholdRows = 100000L)
+      else if (v == 12)
+        SnapshotLake.deleteRows(spark, root, col("k") >= 100000L,
+          cowThresholdRows = 100000L)
+      else SnapshotLake.commit(spark, root,
+        Seq((100000L + v, 1L)).toDF("k", "v").coalesce(1), "k")
+    }
+    val head = SnapshotLake.headVersion(root)
+    assert(head === 36)
+    // keep 3 → the cutoff snaps back to the v32 checkpoint
+    val (kept, gone) = (32 to head, 0 until 32)
+    val snaps = (0 to head).map(v => SnapshotLake.snapshot(root, Some(v)))
+    def names(vs: Range) = vs.flatMap(snaps(_).files.map(_.name)).toSet
+    def sidecars(vs: Range) = vs.flatMap(snaps(_).files.flatMap(_.dv))
+      .filter(_.isExternal).map(_.b64.substring(1)).toSet
+    val deadFiles = names(gone) -- names(kept)
+    val deadSidecars = sidecars(gone) -- sidecars(kept)
+    assert(deadFiles.nonEmpty && deadSidecars.nonEmpty &&
+      sidecars(kept).nonEmpty)
+    val keptCounts = kept.map(v => SnapshotLake.read(spark, root, Some(v))
+      .count())
+    val onDisk = Files.list(Paths.get(root, "_log")).toArray
+      .count(_.toString.endsWith(".manifest")).toLong
+    val p0 = SnapshotLake.manifestParses
+    val (dropped, deleted) = SnapshotLake.vacuum(root, keepVersions = 3)
+    assert(SnapshotLake.manifestParses - p0 <= onDisk,
+      s"vacuum parsed ${SnapshotLake.manifestParses - p0} manifests " +
+        s"for $onDisk on disk")
+    assert(dropped === 32)
+    assert(deleted === deadFiles.size)
+    assert(deadFiles.forall(n => !Files.exists(Paths.get(root, n))))
+    assert(names(kept).forall(n => Files.exists(Paths.get(root, n))))
+    assert(deadSidecars.forall(p => !Files.exists(Paths.get(p))))
+    assert(sidecars(kept).forall(p => Files.exists(Paths.get(p))))
+    assert(kept.map(v => SnapshotLake.read(spark, root, Some(v)).count()) ===
+      keptCounts)
+    intercept[Exception] { SnapshotLake.read(spark, root, Some(31)) }
+  }
+
   test("stageSpec/unionSpecs: executor staging inline-vs-pointer, exact union, compaction") {
     val root = freshRoot()
     // small set: inline, no file touched

